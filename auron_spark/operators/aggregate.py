@@ -884,10 +884,10 @@ def agg_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships each partition's `text` column (one Arrow row per DOCUMENT)
     instead of the JVM-exploded token stream (one row per TOKEN) — same
     bytes, ~40x fewer rows across the Python boundary and no Generate
-    stage — and tokenizes with C-speed `str.join/split` + `Counter`
-    (" ".join inserts exactly the delimiter `split` removes, so the
-    concatenated token stream is element-identical to per-doc explode,
-    empty tokens included).  Emitting the partition token total from the
+    stage — and tokenizes each document with C-speed `str.split(" ")`
+    into one `Counter` per batch (the same split the JVM explode applies,
+    so the token stream is element-identical, empty tokens included; see
+    `mg_partition`).  Emitting the partition token total from the
     same pass cuts the query from THREE corpus passes to the algorithm's
     floor of two (summaries, exact re-count); the summary frame is
     lazily checkpointed because both the candidate set and N consume it."""

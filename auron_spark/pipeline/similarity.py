@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auron_spark.registry import query
-from auron_spark.tables import Tables
+from auron_spark.tables import Tables, min_parallel
 
 TOP_K = 5
 QUERY_MOD = 25  # vec_id % QUERY_MOD == 0 -> query vector
@@ -133,6 +133,77 @@ def sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Screen margin of the exact k-NN kernel (see `_knn_kernels`).
+KNN_SCREEN_MARGIN = 1e-9
+#: Block width of the k-NN screen's lower bound (see `_knn_kernels`).
+KNN_SCREEN_BLOCK = 64
+
+
+def _knn_kernels():
+    """The exact k-NN batch kernels ``(fold_dot, screen)``, built as
+    closures so cloudpickle ships them to the Python workers BY VALUE
+    (the workers never import this package) — and so they are testable
+    without Spark.
+
+    ``fold_dot(a, b)`` is the fold twin's exact arithmetic vectorized
+    ACROSS rows: per row the 64 products accumulate strictly left to right
+    from 0.0, bit-identical to ``F.aggregate(zip_with(a, b, x*y), 0.0,
+    acc+x)``.
+
+    ``screen(qhat, qids, chat, nids, k)`` returns the ``(query, row)``
+    index pairs that survive one batch's top-k screen: every non-self pair
+    whose BLAS cosine is within ``KNN_SCREEN_MARGIN`` of its query's k-th
+    largest in the batch.  ``qhat`` are the unit-norm queries, sorted by
+    their ids ``qids``; ``chat`` the batch's unit-norm rows with ids
+    ``nids``.  The screen matrix ``qhat @ chat.T`` is (queries x batch), so
+    every per-query reduction runs along a contiguous row.  Self matches
+    are found with ``searchsorted`` on the sorted ids instead of an
+    (n x q) equality matrix.  The k-th largest is not selected over the
+    whole row: each query's k-th largest block maximum (blocks of
+    ``KNN_SCREEN_BLOCK`` columns) is a lower bound on it — k distinct
+    blocks hold k distinct elements at or above that value — so only the
+    few candidates at or above ``bound - margin`` are sorted, and the
+    survivors (at or above ``kth - margin >= bound - margin``) are all
+    among them.  With fewer than k whole blocks the bound is the exact
+    k-th largest (``np.partition`` along the row)."""
+    import numpy as np
+
+    def fold_dot(a, b):
+        prod = a * b
+        acc = np.zeros(len(prod), dtype=np.float64)
+        for d in range(prod.shape[1]):
+            acc = acc + prod[:, d]
+        return acc
+
+    def screen(qhat, qids, chat, nids, k):
+        sim = qhat @ chat.T
+        nq, nb = sim.shape
+        pos = np.minimum(np.searchsorted(qids, nids), nq - 1)
+        hit = qids[pos] == nids
+        sim[pos[hit], hit] = -np.inf
+        nblk = nb // KNN_SCREEN_BLOCK
+        if nblk >= k:
+            bmax = (
+                sim[:, : nblk * KNN_SCREEN_BLOCK]
+                .reshape(nq, nblk, KNN_SCREEN_BLOCK)
+                .max(axis=2)
+            )
+            bound = np.partition(bmax, nblk - k, axis=1)[:, nblk - k]
+        else:
+            bound = np.partition(sim, nb - k, axis=1)[:, nb - k]
+        qi, cj = np.nonzero(sim >= (bound - KNN_SCREEN_MARGIN)[:, None])
+        val = sim[qi, cj]
+        # Candidates arrive grouped by query (row-major); sort each group
+        # descending and read its k-th value.
+        order = np.lexsort((-val, qi))
+        start = np.searchsorted(qi, np.arange(nq))
+        kth = val[order[start + k - 1]]
+        keep = (val >= kth[qi] - KNN_SCREEN_MARGIN) & ~np.isneginf(val)
+        return qi[keep], cj[keep]
+
+    return fold_dot, screen
+
+
 @query(
     "sim_knn_bruteforce_arrow",
     # No DuckDB oracle by nature (the kernel is a Python batch transform,
@@ -147,41 +218,57 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB serving twin of `sim_knn_bruteforce`.  Same semantics (same
     query cap, same top-k, same 6-dp rounding), different kernel: instead
     of per-pair interpreted `F.aggregate` folds, the corpus streams
-    through `mapInPandas` in Arrow batches and each batch computes ALL
-    query distances as ONE numpy matmul ((batch x 64) @ (64 x n_queries)),
-    keeps its per-query top-k, and the per-batch partials reduce through
-    the usual WindowGroupLimit.  Measured on the 32,768-vector bench
-    corpus: 15.4 s (fold) -> 0.2 s warm — the ~70x that vectorized BLAS
-    buys over element-wise expression evaluation, with the identical
-    distributed shape (broadcast constant-size query matrix, one corpus
-    scan, no shuffle before the k*|queries|-row rank stage).
+    through `mapInPandas` in Arrow batches and each batch screens ALL
+    query cosines with ONE BLAS matmul ((n_queries x 64) @ (64 x batch)),
+    keeps its per-query top-k candidates, and the per-batch partials
+    reduce through the usual WindowGroupLimit.  The distributed shape is
+    the fold's: a broadcast constant-size query matrix, one corpus scan,
+    no shuffle before the k*|queries|-row rank stage.  On the benchmark's
+    `vector` workload (32,768 vectors, 1,000 queries, four 8,192-row
+    batches, single-threaded BLAS on a 4-core x86 host) the batch kernel
+    costs ~0.4 CPU-seconds for all four batches.
 
     A flat 64-term codegen expression was ALSO measured and is 6x SLOWER
-    than the fold (95 s: 128 `element_at` calls pay per-element bounds
-    checks and the expression bails out of whole-stage codegen), so
-    Arrow + BLAS is the right scale path, not more SQL.
+    than the fold (128 `element_at` calls pay per-element bounds checks
+    and the expression bails out of whole-stage codegen), so Arrow + BLAS
+    is the right scale path, not more SQL.
 
     Scale shape: the query matrix is QUERY_BUDGET-capped (driver holds at
     most 1000 x 64 doubles — model-state-sized, like the k-means codebook
-    collect), the corpus is never materialized, and batch size is Arrow's
-    (spark.sql.execution.arrow.maxRecordsPerBatch).  Exactness (r16
-    hardening): BLAS only SCREENS candidates — each batch keeps every row
-    within a 1e-9 margin of its k-th best BLAS cosine (BLAS reduction
-    order is shape-dependent, so identical pairs can differ in the last
-    ulp between batches; the margin is ~1e4x that noise) and then
-    recomputes the survivors' cosines in the fold's exact left-to-right
-    order, so every EMITTED value is bit-identical to the fold twin and
-    the global window applies the fold's (cos desc, neighbor_id asc)
-    rule on identical doubles — exact ties (bitwise-duplicate vectors)
-    and near-ties alike resolve exactly as the oracle does.  Zero-norm
-    vectors fail loudly, matching the fold's ANSI divide-by-zero (both
-    gated by test_kernel_twins_degenerate_inputs)."""
+    collect), the corpus is read once (the query side is a filter of the
+    same scan) and never materialized, and batch size is Arrow's
+    (spark.sql.execution.arrow.maxRecordsPerBatch).
+
+    Exactness: BLAS only SCREENS candidates (`_knn_kernels` `screen`):
+    its reduction order depends on the matrix shapes, so the same pair
+    can differ in the last ulp between batches of different sizes — enough
+    to break exact ties nondeterministically if emitted as the answer.
+    Each batch keeps every row within KNN_SCREEN_MARGIN = 1e-9 of its
+    query's k-th best screen cosine, then recomputes the survivors'
+    cosines in the fold's exact left-to-right order, so every EMITTED
+    value is bit-identical to the fold twin and the global window applies
+    the fold's (cos desc, neighbor_id asc) rule on identical doubles —
+    exact ties (bitwise-duplicate vectors) and near-ties alike resolve
+    exactly as the oracle does.  The k-th best screen value is found
+    without a full selection: a query's k-th largest 64-column block
+    maximum is a lower bound on it (k distinct blocks hold k distinct
+    elements at or above that value), so only the entries at or above
+    bound - margin are sorted.  Why the margin suffices: the screen
+    (dot of unit vectors) and the fold (dot over the product of norms)
+    each differ from the true cosine by at most ~64 unit roundoffs of a
+    64-term sum plus the norm roundings, well under 1e-13; a row the
+    screen drops is > 1e-9 below the k-th screen value, so its fold value
+    is below that of k rows of its own batch as long as 1e-9 exceeds
+    twice the screen-vs-fold error — which it does by ~4 orders of
+    magnitude — and it can never enter the top-k.  Zero-norm vectors fail
+    loudly, matching the fold's ANSI divide-by-zero (both gated by
+    test_kernel_twins_degenerate_inputs)."""
     import numpy as np
     import pandas as pd
 
+    emb = Tables(spark, sf_dir).embeddings
     qrows = (
-        Tables(spark, sf_dir)
-        .embeddings.filter(
+        emb.filter(
             (F.col("vec_id") % QUERY_MOD == 0) & (F.col("vec_id") < QUERY_CAP)
         )
         .select("vec_id", "embedding")
@@ -194,6 +281,7 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cos_sim double"
         )
+    qrows.sort(key=lambda r: r.vec_id)  # screen() searchsorts the ids
     qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     qmat = np.array([list(r.embedding) for r in qrows], dtype=np.float64)
     qnorm = np.linalg.norm(qmat, axis=1)
@@ -201,21 +289,14 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"zero-norm query embedding(s): vec_id {qids[qnorm == 0][:5]}"
         )
-    def _fold_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
-        # The fold twin's exact arithmetic, vectorized ACROSS rows: per row
-        # the 64 products accumulate strictly left-to-right from 0.0 —
-        # bit-identical to F.aggregate(zip_with(a, b, x*y), 0.0, acc+x).
-        prod = a * b
-        acc = np.zeros(len(prod), dtype=np.float64)
-        for d in range(prod.shape[1]):
-            acc = acc + prod[:, d]
-        return acc
-
-    qn_exact = np.sqrt(_fold_dot(qmat, qmat))
-    bq = spark.sparkContext.broadcast((qids, qmat, qnorm, qn_exact))
+    fold_dot, screen = _knn_kernels()
+    qn_exact = np.sqrt(fold_dot(qmat, qmat))
+    bq = spark.sparkContext.broadcast(
+        (qids, qmat, qmat / qnorm[:, None], qn_exact)
+    )
 
     def _batches(it):
-        b_qids, b_q, b_qn, b_qn_exact = bq.value
+        b_qids, b_q, b_qhat, b_qn_exact = bq.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -227,43 +308,21 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # oracle does too) — fail loudly, never emit silent NaN.
                 bad = pdf["vec_id"].to_numpy()[cnorm == 0]
                 raise ValueError(f"zero-norm embedding(s): vec_id {bad[:5]}")
-            # BLAS cosines are the SCREEN, not the answer: dgemm/dgemv pick
-            # shape-dependent reduction orders, so the same (query, neighbor)
-            # pair can differ in the last ulp between batches of different
-            # row counts — enough to break exact ties (bitwise-duplicate
-            # vectors) nondeterministically.  Screen with a 1e-9 boundary
-            # margin (BLAS-vs-fold error for a 64-term reduction is ~1e-13),
-            # then recompute the survivors' cosines in the fold's exact
-            # left-to-right order, so every emitted value is bit-identical
-            # to the fold twin and the global window's (cos desc, id) rule
-            # resolves ties exactly as the oracle does.  A screened-out row
-            # is > margin below its batch's k-th BLAS value, hence strictly
-            # below k exact values of its own batch — never in the top-k.
-            cos = (cmat @ b_q.T) / np.outer(cnorm, b_qn)
             nids = pdf["vec_id"].to_numpy()
-            cos[np.equal.outer(nids, b_qids)] = -np.inf
-            k = min(TOP_K, cos.shape[0])
-            part = np.argpartition(-cos, k - 1, axis=0)[:k]
-            kth = np.take_along_axis(cos, part, axis=0).min(0)
-            rows, cols = np.nonzero(cos >= kth[None, :] - 1e-9)
-            keep = ~np.isneginf(cos[rows, cols])  # drop self-match sentinels
-            rows, cols = rows[keep], cols[keep]
-            sel_c = cmat[rows]
-            cn_exact = np.sqrt(_fold_dot(sel_c, sel_c))
-            exact = _fold_dot(b_q[cols], sel_c) / (b_qn_exact[cols] * cn_exact)
+            qi, cj = screen(
+                b_qhat, b_qids, cmat / cnorm[:, None], nids, min(TOP_K, len(pdf))
+            )
+            sel_c = cmat[cj]
+            cn_exact = np.sqrt(fold_dot(sel_c, sel_c))
+            exact = fold_dot(b_q[qi], sel_c) / (b_qn_exact[qi] * cn_exact)
             yield pd.DataFrame(
-                {
-                    "query_id": b_qids[cols],
-                    "neighbor_id": nids[rows],
-                    "cos": exact,
-                }
+                {"query_id": b_qids[qi], "neighbor_id": nids[cj], "cos": exact}
             )
 
     from pyspark.sql import Window
 
     part = (
-        Tables(spark, sf_dir)
-        .parallel("embeddings")
+        min_parallel(emb)
         .select("vec_id", "embedding")
         .mapInPandas(_batches, "query_id long, neighbor_id long, cos double")
     )
@@ -1266,12 +1325,26 @@ def _lloyd_apply_mean(cvs: list[list[float]], mean_rows: list) -> None:
     non-empty cluster (posexplode emits every dim of every member, so it
     carries ALL dims) replaces its centroid with the per-dim means; an
     empty cluster keeps its previous centroid — exactly the old plan's
-    COALESCE(new cv, previous cv).  Pure data movement, no arithmetic."""
+    COALESCE(new cv, previous cv).  Pure data movement, no arithmetic.
+
+    Precondition: every embedding has the centroids' length.  A ragged
+    corpus would leave a cluster with means for missing or extra dims, or
+    with per-dim means over different member counts; that fails here
+    with an assertion naming the precondition."""
     by_cid: dict[int, dict[int, float]] = {}
+    counts: dict[int, set[int]] = {}
     for r in mean_rows:
         by_cid.setdefault(r.cid, {})[r.dim] = r.c
+        counts.setdefault(r.cid, set()).add(r.n)
     for cid, dims in by_cid.items():
-        cvs[cid] = [dims[j] for j in range(len(cvs[cid]))]
+        width = len(cvs[cid])
+        assert sorted(dims) == list(range(width)) and len(counts[cid]) == 1, (
+            f"ragged embeddings: cluster {cid} has means for {len(dims)} "
+            f"dims (highest {max(dims)}) over member counts "
+            f"{sorted(counts[cid])}; every embedding must have exactly the "
+            f"centroids' {width} dims"
+        )
+        cvs[cid] = [dims[j] for j in range(width)]
 
 
 def _lloyd_frames(spark: SparkSession, cvs: list, mean_rows: list):

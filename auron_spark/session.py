@@ -67,7 +67,8 @@ ENGINE_CONF: dict[str, str] = {
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set, else this machine's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(

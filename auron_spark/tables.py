@@ -87,8 +87,13 @@ def parallel_table(
     keyed when the consumer aggregates/joins on ``key`` (the later shuffle is
     then already satisfied), round-robin for purely map-side work.
     """
-    df = table(spark, sf_dir, name)
-    target = spark.sparkContext.defaultParallelism
+    return min_parallel(table(spark, sf_dir, name), key)
+
+
+def min_parallel(df: DataFrame, key: str | None = None) -> DataFrame:
+    """:func:`parallel_table` on a scan the caller already holds — reuse one
+    read instead of paying a second schema-inference job."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     from pyspark.sql import functions as F

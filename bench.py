@@ -589,7 +589,7 @@ def main() -> None:
     # run) and drops only the extra sections that never feed the headline
     # line: the second-SF pass, the text/vector scale legs, and the index
     # rebuild timings.  Explicit override: SPARK_GRAFT_BENCH_QUICK=0/1.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     quick = os.environ.get("SPARK_GRAFT_BENCH_QUICK")
     quick = (cpus < 16) if quick is None else (quick == "1")
     if quick:

@@ -183,7 +183,9 @@ def pytest_collection_modifyitems(config, items):
     everything.
 
     Whole-directory runs additionally collect only the FAST tier (see
-    `_FAST_TIER_FILES` above) unless SPARK_GRAFT_SUITE=full."""
+    `_FAST_TIER_FILES` above) unless SPARK_GRAFT_SUITE=full.  The tier's
+    dropped items are reported as deselected (they show in the summary's
+    "N deselected"), and one banner line names the tier that ran."""
     shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
     if shard:
         import hashlib
@@ -193,7 +195,9 @@ def pytest_collection_modifyitems(config, items):
             it for it in items
             if int(hashlib.md5(it.nodeid.encode()).hexdigest(), 16) % n == i
         ]
-    if _fast_tier_applies(config):
+    collected = len(items)
+    fast = _fast_tier_applies(config)
+    if fast:
         import auron_spark.registry as _reg
 
         _reg.load_all()
@@ -209,4 +213,16 @@ def pytest_collection_modifyitems(config, items):
                 ).get("name")
                 if name in window:
                     kept.append(it)
+        keep = {id(it) for it in kept}
+        config.hook.pytest_deselected(
+            items=[it for it in items if id(it) not in keep]
+        )
         items[:] = kept
+    reporter = config.pluginmanager.get_plugin("terminalreporter")
+    if reporter is not None:
+        reporter.write_line(
+            f"suite tier: FAST, {len(items)} of {collected} tests kept "
+            "(SPARK_GRAFT_SUITE=full runs the whole battery)"
+            if fast
+            else f"suite tier: full, all {collected} collected tests kept"
+        )

@@ -1458,6 +1458,162 @@ def test_kernel_twins_match_on_random_corpora(spark, tmp_path, seed):
         _assert_twin_rows_equal(arrow, fold, (fold_fn.__name__, seed))
 
 
+def _knn_screen_case(rng, nb, nq=40):
+    """One adversarial batch for the k-NN screen: clustered rows with
+    shuffled ids, queries that are corpus rows (self matches) plus queries
+    that are not, and exact-duplicate rows planted across 64-row block
+    boundaries so the k-th value is an exact tie for some queries."""
+    import numpy as np
+
+    cent = rng.normal(size=(8, 64))
+    chat = cent[rng.integers(0, 8, size=nb)] + rng.normal(size=(nb, 64))
+    nids = rng.permutation(10 * nb + 100)[:nb].astype(np.int64)
+    w1, w2 = rng.normal(size=64), rng.normal(size=64)
+    # 3 copies of w1, then 5 of a row near it: a query next to w1 ranks
+    # w1 x3, then a 5-way exact tie over ranks 4-8 (k = 5 cuts through it)
+    # whose copies straddle the block boundaries 0/1 and 1/2.
+    for pos in (0, 200, 300):
+        if pos < nb:
+            chat[pos] = w1
+    for pos in (63, 64, 127, 128, 191):
+        if pos < nb:
+            chat[pos] = w1 + 0.05 * w2
+    chat /= np.linalg.norm(chat, axis=1)[:, None]
+    own = rng.choice(nb, size=min(nb, nq // 2), replace=False)
+    if nb > 64 and 64 not in own:
+        own[0] = 64  # a query whose self match sits inside the tie
+    qids = np.concatenate([nids[own], 10 * nb + 100 + np.arange(nq - len(own))])
+    qmat = np.concatenate(
+        [chat[own], w1 + 0.01 * rng.normal(size=(nq - len(own), 64))]
+    )
+    order = np.argsort(qids)
+    qids, qmat = qids[order], qmat[order]
+    qhat = qmat / np.linalg.norm(qmat, axis=1)[:, None]
+    return qhat, qids, chat, nids
+
+
+def test_knn_screen_matches_full_sort():
+    """The exact k-NN kernel's per-batch screen (`_knn_kernels` `screen`,
+    Spark-free) keeps exactly the pairs a full sort of the same screen
+    matrix keeps — every non-self pair within the margin of its query's
+    k-th largest — on batch sizes on both sides of the 64-column block
+    bound's reach (k * 64 = 320 rows), and those survivors contain the
+    fold-order exact top-k with every tie at the k-th value."""
+    import numpy as np
+
+    from auron_spark.pipeline.similarity import (
+        KNN_SCREEN_MARGIN,
+        TOP_K,
+        _knn_kernels,
+    )
+
+    fold_dot, screen = _knn_kernels()
+    rng = np.random.default_rng(20240)
+    for nb in (1, TOP_K - 1, TOP_K, 319, 320, 321, 8192):
+        qhat, qids, chat, nids = _knn_screen_case(rng, nb)
+        k = min(TOP_K, nb)
+        qi, cj = screen(qhat, qids, chat, nids, k)
+        got = set(zip(qi.tolist(), cj.tolist()))
+        assert len(got) == len(qi), (nb, "duplicate survivor pairs")
+
+        sim = qhat @ chat.T  # the screen's own matrix, bit for bit
+        self_pair = qids[:, None] == nids[None, :]
+        sim[self_pair] = -np.inf
+        kth = -np.sort(-sim, axis=1)[:, k - 1]
+        near = (sim >= kth[:, None] - KNN_SCREEN_MARGIN) & ~self_pair
+        want = {(int(i), int(j)) for i, j in zip(*np.nonzero(near))}
+        assert got == want, (nb, len(got ^ want))
+
+        cn = np.sqrt(fold_dot(chat, chat))
+        exact = np.stack([
+            fold_dot(np.broadcast_to(q, chat.shape), chat)
+            / (np.sqrt(fold_dot(q[None, :], q[None, :])) * cn)
+            for q in qhat
+        ])
+        ties = 0
+        for i in range(len(qids)):
+            ranked = sorted(
+                (j for j in range(nb) if not self_pair[i, j]),
+                key=lambda j: (-exact[i, j], nids[j]),
+            )
+            if len(ranked) > k and exact[i, ranked[k - 1]] == exact[i, ranked[k]]:
+                ties += 1
+            # Every row tied with the exact k-th value must survive too: the
+            # global window breaks those ties by id across batches.
+            cut = exact[i, ranked[k - 1]] if len(ranked) >= k else -np.inf
+            need = {j for j in ranked if exact[i, j] >= cut}
+            assert need <= {j for q, j in got if q == i}, (nb, i)
+        if nb >= 320:
+            assert ties, (nb, "no exact tie at the k-th value was planted")
+
+
+def test_arrow_knn_matches_fold_on_block_bound_batches(spark, tmp_path):
+    """`sim_knn_bruteforce_arrow` equals its fold twin on a corpus whose
+    Arrow batches are large enough (>= TOP_K * 64 rows) for the screen's
+    block lower bound, with exact duplicates straddling 64-row blocks
+    inside one batch and across batches, and a row count that is not a
+    multiple of 64 (so every batch has a partial tail block)."""
+    import numpy as np
+
+    from auron_spark.pipeline.similarity import (
+        TOP_K,
+        sim_knn_bruteforce,
+        sim_knn_bruteforce_arrow,
+    )
+    from auron_spark.tables import min_parallel, table
+
+    # One file, hence one Arrow batch, per slice: >= 400 rows each, and an
+    # odd row count.
+    parts = max(4, spark.sparkContext.defaultParallelism)
+    n = parts * 400 + 7
+    rng = np.random.default_rng(5150)
+    cent = rng.normal(size=(12, 64))
+    mat = cent[rng.integers(0, 12, size=n)] + 0.8 * rng.normal(size=(n, 64))
+    w = mat[0].copy()  # vec_id 0 is a query: its copies tie for its top-k
+    for p in range(parts):
+        for pos in (63, 64, 127, 128, 255, 256, 319, 320):
+            mat[p * n // parts + pos] = w
+    sf = str(tmp_path / "corpus")
+    rows = [(i, [float(x) for x in mat[i]], 0) for i in range(n)]
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, parts),
+        "vec_id long, embedding array<float>, label int",
+    ).write.parquet(f"{sf}/embeddings.parquet")
+    sizes = (
+        min_parallel(table(spark, sf, "embeddings")).rdd.glom().map(len).collect()
+    )
+    assert min(sizes) >= TOP_K * 64, sizes
+
+    fold = sorted(tuple(r) for r in sim_knn_bruteforce(spark, sf).collect())
+    arrow = sorted(tuple(r) for r in sim_knn_bruteforce_arrow(spark, sf).collect())
+    _assert_twin_rows_equal(arrow, fold, "block-bound batches")
+    top0 = [nid for q, nid, c in fold if q == 0]
+    assert len(top0) == TOP_K and all(c == 1.0 for q, _, c in fold if q == 0)
+
+
+def test_lloyd_apply_mean_rejects_ragged_embeddings():
+    """`_lloyd_apply_mean` (driver only) copies complete per-dim means into
+    the centroid and keeps an empty cluster's centroid; mean rows from a
+    ragged corpus (missing dims, extra dims, or per-dim member counts that
+    differ) fail with an assertion that names the precondition."""
+    from collections import namedtuple
+
+    from auron_spark.pipeline.similarity import _lloyd_apply_mean
+
+    R = namedtuple("R", "cid dim c n")
+    cvs = [[0.0, 0.0, 0.0], [9.0, 9.0, 9.0]]
+    _lloyd_apply_mean(cvs, [R(0, d, d + 0.5, 2) for d in range(3)])
+    assert cvs == [[0.5, 1.5, 2.5], [9.0, 9.0, 9.0]]
+
+    for rows in (
+        [R(0, d, 1.0, 2) for d in range(2)],  # a member shorter than 3
+        [R(0, d, 1.0, 2) for d in range(4)],  # a member longer than 3
+        [R(0, 0, 1.0, 2), R(0, 1, 1.0, 2), R(0, 2, 1.0, 1)],  # mixed lengths
+    ):
+        with pytest.raises(AssertionError, match="ragged embeddings"):
+            _lloyd_apply_mean([[0.0] * 3, [0.0] * 3], rows)
+
+
 def test_kernel_twins_degenerate_inputs(spark, tmp_path):
     """Adversarial twin-equality cases from the round-10 review: (a) a
     tiny corpus (fewer rows than TOP_K) must not leak the arrow kernel's
