@@ -317,7 +317,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verify stage of near-dup detection.  Set sizes and intersections are
     exact integers; the ratio is one double division."""
     t = Tables(spark, sf_dir)
-    sh = _doc_shingles(t).cache()
+    sh = _doc_shingles(t)
     cand = lsh_candidate_pairs(minhash_signature(sh))
     # n_common > 0 preserves the pre-r16 output contract exactly: the old
     # inner-join-grouped intersection emitted only overlapping pairs.
@@ -1228,7 +1228,7 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     own contract), one 3-row threshold frame cross-joined at the end —
     nothing new shuffles beyond what dedup_ngram_jaccard already pays."""
     t = Tables(spark, sf_dir)
-    sh = _doc_shingles(t).cache()
+    sh = _doc_shingles(t)
     cand = lsh_candidate_pairs(minhash_signature(sh))
     # n_common > 0 mirrors the oracle's INNER-grouped `inter` CTE: only
     # overlapping pairs reach `j` (zero-overlap pairs would contribute 0
@@ -1899,7 +1899,7 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify; nothing new shuffles — the whole point is that the per-doc
     index state shrinks 64×."""
     t = Tables(spark, sf_dir)
-    sh = _doc_shingles(t).cache()
+    sh = _doc_shingles(t)
     # sig is the per-doc signature index and cand the LSH candidate set —
     # both referenced more than once below; un-materialized, the banding
     # shuffle re-ran three times and the compiled plan re-derived the

@@ -1257,11 +1257,13 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@query(
-    "text_bigram_perplexity",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
+# Shared bigram-LM cross-entropy stage (with source carried) over an
+# arbitrary docs relation: the one entropy implementation, consumed by
+# `text_bigram_perplexity`, `text_perplexity_buckets` and
+# `pipeline_quality_training_set`.
+_SQL_ENTROPY_STAGES = """toks AS (
+        SELECT doc_id, source, string_split(lower(text), ' ') AS w
+        FROM {docs}
     ),
     vocab AS (
         SELECT COUNT(DISTINCT t.word) AS v FROM (
@@ -1269,25 +1271,79 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) t
     ),
     bg AS (
-        SELECT doc_id,
+        SELECT doc_id, source,
                unnest(list_transform(range(1, len(w)), i -> w[i])) AS w1,
                unnest(list_transform(range(1, len(w)), i -> w[i + 1])) AS w2
         FROM toks WHERE len(w) >= 2
     ),
     c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bg GROUP BY w1, w2),
-    c1 AS (SELECT w1, COUNT(*) AS c FROM bg GROUP BY w1)
-    SELECT bg.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           ROUND(-CAST(SUM(CAST(ROUND(
-                     log2((c2.c + 1.0) / (c1.c + v.v)), 9)
-                 AS DECIMAL(28,9))) AS DOUBLE) / COUNT(*), 6)
-               AS cross_entropy_bits
-    FROM bg
-    JOIN c2 ON c2.w1 = bg.w1 AND c2.w2 = bg.w2
-    JOIN c1 ON c1.w1 = bg.w1
-    CROSS JOIN vocab v
-    GROUP BY bg.doc_id
-    ORDER BY bg.doc_id
+    c1 AS (SELECT w1, COUNT(*) AS c FROM bg GROUP BY w1),
+    h AS (
+        SELECT bg.doc_id, bg.source,
+               CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+               ROUND(-CAST(SUM(CAST(ROUND(
+                         log2((c2.c + 1.0) / (c1.c + v.v)), 9)
+                     AS DECIMAL(28,9))) AS DOUBLE) / COUNT(*), 6) AS h
+        FROM bg
+        JOIN c2 ON c2.w1 = bg.w1 AND c2.w2 = bg.w2
+        JOIN c1 ON c1.w1 = bg.w1
+        CROSS JOIN vocab v
+        GROUP BY bg.doc_id, bg.source
+    )"""
+
+
+def _entropy_by_doc(docs: DataFrame) -> DataFrame:
+    """Spark side of `_SQL_ENTROPY_STAGES`: (doc_id, source, n_bigrams, h)
+    over an arbitrary (doc_id, source, text) relation."""
+    w = F.split(F.lower(F.col("text")), " ")
+    toks = docs.select("doc_id", "source", w.alias("w"))
+    vocab = toks.select(F.explode("w").alias("word")).agg(
+        F.count_distinct("word").alias("v")
+    )
+    d = toks.where(F.size("w") >= 2)
+    bg = d.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.zip_with(
+                F.slice("w", F.lit(1), F.size("w") - 1),
+                F.slice("w", F.lit(2), F.size("w") - 1),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+            )
+        ).alias("p"),
+    ).select("doc_id", "source", "p.w1", "p.w2")
+    # Bigram TYPE-count table: checkpoint once (single-subtree rule), and
+    # derive the context totals FROM it (c1(w1) = sum_w2 c2) instead of a
+    # second corpus aggregate — the plan pays one vocab pass + two bigram
+    # derivations total instead of four.
+    c2 = (
+        bg.groupBy("w1", "w2")
+        .agg(F.count("*").alias("c2"))
+        .localCheckpoint(eager=False)
+    )
+    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
+    term = F.round(
+        F.log2((F.col("c2") + F.lit(1.0)) / (F.col("c1") + F.col("v"))), 9
+    ).cast("decimal(28,9)")
+    return (
+        bg.join(c2, ["w1", "w2"])
+        .join(c1, "w1")
+        .join(F.broadcast(vocab))
+        .groupBy("doc_id", "source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_bigrams"),
+            F.round(-F.sum(term).cast("double") / F.count("*"), 6).alias("h"),
+        )
+    )
+
+
+@query(
+    "text_bigram_perplexity",
+    oracle=f"""
+    WITH {_SQL_ENTROPY_STAGES.format(docs="documents")}
+    SELECT doc_id, n_bigrams, h AS cross_entropy_bits
+    FROM h
+    ORDER BY doc_id
     """,
     tags=("pipeline", "text", "quality", "perplexity", "lm"),
 )
@@ -1307,50 +1363,14 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence stream against both tables by key — vocabulary-scale
     equi-joins, broadcastable while the model fits and shuffled hash
     joins beyond; the vocab size is one broadcast scalar; the per-doc
-    rollup keys on doc_id.  A production filter then drops docs above a
+    rollup keys on doc_id (the shared `_entropy_by_doc` stage, which
+    carries each document's source along).  A production filter then drops docs above a
     per-source entropy percentile (text_quality_percentile_filter's
     threshold machinery)."""
     t = Tables(spark, sf_dir)
-    w = F.split(F.lower(F.col("text")), " ")
-    toks = t.documents.select("doc_id", w.alias("w"))
-    vocab = toks.select(F.explode("w").alias("word")).agg(
-        F.count_distinct("word").alias("v")
-    )
-    d = toks.where(F.size("w") >= 2)
-    bg = d.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice("w", F.lit(1), F.size("w") - 1),
-                F.slice("w", F.lit(2), F.size("w") - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2")
-    # Bigram TYPE-count table: checkpoint once (single-subtree rule), and
-    # derive the context totals FROM it (c1(w1) = sum_w2 c2) instead of a
-    # second corpus aggregate — the plan pays one vocab pass + two bigram
-    # derivations total instead of four.
-    c2 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count("*").alias("c2"))
-        .localCheckpoint(eager=False)
-    )
-    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    term = F.round(
-        F.log2((F.col("c2") + F.lit(1.0)) / (F.col("c1") + F.col("v"))), 9
-    ).cast("decimal(28,9)")
     return (
-        bg.join(c2, ["w1", "w2"])
-        .join(c1, "w1")
-        .join(F.broadcast(vocab))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_bigrams"),
-            F.round(
-                -F.sum(term).cast("double") / F.count("*"), 6
-            ).alias("cross_entropy_bits"),
-        )
+        _entropy_by_doc(t.documents.select("doc_id", "source", "text"))
+        .select("doc_id", "n_bigrams", F.col("h").alias("cross_entropy_bits"))
         .orderBy("doc_id")
     )
 
@@ -2088,81 +2108,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rk")
 
 
-# Shared bigram-LM cross-entropy stage (with source carried) over an
-# arbitrary docs relation — the per-doc scorer `text_perplexity_buckets`
-# and `pipeline_quality_training_set` both chain; a verbatim twin of the
-# driver-proven `text_bigram_perplexity`, parameterized only by the input
-# relation (the proven query itself stays untouched).
-_SQL_ENTROPY_STAGES = """toks AS (
-        SELECT doc_id, source, string_split(lower(text), ' ') AS w
-        FROM {docs}
-    ),
-    vocab AS (
-        SELECT COUNT(DISTINCT t.word) AS v FROM (
-            SELECT unnest(w) AS word FROM toks
-        ) t
-    ),
-    bg AS (
-        SELECT doc_id, source,
-               unnest(list_transform(range(1, len(w)), i -> w[i])) AS w1,
-               unnest(list_transform(range(1, len(w)), i -> w[i + 1])) AS w2
-        FROM toks WHERE len(w) >= 2
-    ),
-    c2 AS (SELECT w1, w2, COUNT(*) AS c FROM bg GROUP BY w1, w2),
-    c1 AS (SELECT w1, COUNT(*) AS c FROM bg GROUP BY w1),
-    h AS (
-        SELECT bg.doc_id, bg.source,
-               ROUND(-CAST(SUM(CAST(ROUND(
-                         log2((c2.c + 1.0) / (c1.c + v.v)), 9)
-                     AS DECIMAL(28,9))) AS DOUBLE) / COUNT(*), 6) AS h
-        FROM bg
-        JOIN c2 ON c2.w1 = bg.w1 AND c2.w2 = bg.w2
-        JOIN c1 ON c1.w1 = bg.w1
-        CROSS JOIN vocab v
-        GROUP BY bg.doc_id, bg.source
-    )"""
-
-
-def _entropy_by_doc(docs: DataFrame) -> DataFrame:
-    """Spark twin of `_SQL_ENTROPY_STAGES`: (doc_id, source, h) over an
-    arbitrary (doc_id, source, text) relation."""
-    w = F.split(F.lower(F.col("text")), " ")
-    toks = docs.select("doc_id", "source", w.alias("w"))
-    vocab = toks.select(F.explode("w").alias("word")).agg(
-        F.count_distinct("word").alias("v")
-    )
-    d = toks.where(F.size("w") >= 2)
-    bg = d.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.zip_with(
-                F.slice("w", F.lit(1), F.size("w") - 1),
-                F.slice("w", F.lit(2), F.size("w") - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p"),
-    ).select("doc_id", "source", "p.w1", "p.w2")
-    c2 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count("*").alias("c2"))
-        .localCheckpoint(eager=False)
-    )
-    c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
-    term = F.round(
-        F.log2((F.col("c2") + F.lit(1.0)) / (F.col("c1") + F.col("v"))), 9
-    ).cast("decimal(28,9)")
-    return (
-        bg.join(c2, ["w1", "w2"])
-        .join(c1, "w1")
-        .join(F.broadcast(vocab))
-        .groupBy("doc_id", "source")
-        .agg(
-            F.round(-F.sum(term).cast("double") / F.count("*"), 6).alias("h")
-        )
-    )
-
-
 @query(
     "text_perplexity_buckets",
     oracle=f"""
@@ -2191,14 +2136,13 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram-LM cross-entropy of `text_bigram_perplexity` (lower entropy =
     'head', the cleanest third of each source) — the standard corpus
     stratification step before sampling more heavily from the head.  The
-    per-doc entropy stage is `_entropy_by_doc` / `_SQL_ENTROPY_STAGES` —
-    a verbatim twin of the proven `text_bigram_perplexity` shared with
-    `pipeline_quality_training_set` (the driver-proven original stays
-    untouched so its artifact proof holds per `_MODIFIED_SINCE_PROOF`);
-    bucket means sum the 6-dp entropies as exact DECIMAL, so every output
-    cell is summation-order-free.
+    per-doc entropy stage is `_entropy_by_doc` / `_SQL_ENTROPY_STAGES`,
+    the one implementation `text_bigram_perplexity` and
+    `pipeline_quality_training_set` also consume; bucket means sum the
+    6-dp entropies as exact DECIMAL, so every output cell is
+    summation-order-free.
 
-    Scale shape: the LM scoring is the proven perplexity plan (model-table
+    Scale shape: the LM scoring is the perplexity plan (model-table
     shuffles + vocabulary-scale equi-joins); the NTILE runs per-source
     (partitioned window, no global sort), and the final rollup is a
     source x 3 aggregate.  At 100 TB the per-source tiles come from the
@@ -2286,9 +2230,9 @@ def pipeline_quality_training_set(
     per-source training-set report: docs kept, token budget, mean
     entropy.  One query = the data a sampler consumes.
 
-    Scale shape: each stage keeps its proven posture — digest-window dedup
-    shuffles 16-byte hashes, the LM stages are the proven perplexity
-    plan over the kept relation, the NTILE partitions by source, and the
+    Scale shape: each stage keeps its own posture — digest-window dedup
+    shuffles 16-byte hashes, the LM stages are the shared perplexity
+    stage over the kept relation, the NTILE partitions by source, and the
     final rollup is source-grain.  Nothing quadratic, nothing global but
     the vocab scalar."""
     t = Tables(spark, sf_dir)

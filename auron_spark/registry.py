@@ -4,12 +4,15 @@ Every operator family from SURVEY.md §2 registers here as a named query:
 a PySpark DataFrame builder plus (where SQL-expressible) an equivalent ANSI-SQL
 oracle string that DuckDB runs over the same parquet tables.  This mirrors the
 reference's test strategy of differential testing against a trusted engine
-(``/root/reference/dev/auron-it/local-run-tpcds.sh:31-37`` diffs Auron vs
-vanilla Spark results; our oracle is DuckDB).
+(Auron's ``dev/auron-it/local-run-tpcds.sh:31-37`` diffs Auron vs vanilla
+Spark results; our oracle is DuckDB).
 
 ``__spark_entry__.py``, ``tests/`` and ``bench.py`` all read this registry, so
 a query registered once is simultaneously smoke-tested, oracle-checked and
-benchmarkable.
+benchmarkable.  The registry is stateless about correctness: every run of
+the oracle battery re-checks every oracle-bearing query, and the record of
+past results lives in git history, not here.  Iteration order is
+registration order.
 
 Oracle-exactness conventions (see tests/conftest.py):
 - money/decimal aggregation goes through DECIMAL so sums are exact and
@@ -68,480 +71,11 @@ def query(
 
 _LOADED = False
 
-# The differential driver checks a prefix window of the registry in iteration
-# order (rounds 1 and 2 each covered exactly the first 50 names), so ordering
-# is evidence policy, not cosmetics.  Rounds 3-9 hand-rotated a 50-name
-# `_DRIVER_WINDOW` tuple each round; since round 10 the window is DERIVED
-# (VERDICT r9 stretch #8) so the rotation can never be mis-transcribed:
-#   1. never-proven oracle-bearing queries, in registration order (every
-#      late-round addition automatically leads the next round's window);
-#   2. names whose builder/oracle semantics changed AFTER their newest
-#      artifact (`_MODIFIED_SINCE_PROOF`) — the artifact no longer proves
-#      the current code, so they re-enter before any plain backfill;
-#   3. then artifact-backed names by OLDEST newest-artifact round (their
-#      surviving rows predate later fixture regens), registration order.
-# (The round-8 "presumed proven" category retired in round 12: every name
-# from the artifact-less round-8 window re-proved in the round-11 driver
-# artifact, so all evidence is now artifact-backed.)
-# Rows-only queries (oracle=None) are permanently excluded from window slots:
-# the driver can only ever return `no_oracle` for them (r5 burned 2 slots
-# this way), so they sort dead-last in `_ordered` by construction.
-_WINDOW_SIZE = 50
-
-# Filled by `_ordered` on every `load_all()`; kept as a module global for
-# introspection by tests/test_harness.py and COVERAGE tooling.
-_DRIVER_WINDOW: tuple[str, ...] = ()
-
-# Names whose builder AND oracle were rewritten after their newest driver
-# artifact landed, so that artifact no longer witnesses the current code
-# (ADVICE r11 #1: a post-proof semantics change must re-enter the window
-# instead of sorting to the lowest re-prove priority).  Remove a name here
-# once a new artifact round re-proves it.
-_MODIFIED_SINCE_PROOF: frozenset[str] = frozenset({
-    # r17 optimization round: builders whose EXECUTED PLAN was materially
-    # rewritten re-enter per the r15 feature_pca_power_iteration precedent
-    # (the r16 artifact witnessed the old plan).  Outputs are unchanged —
-    # each re-verified exact vs DuckDB at sf0.01 + sf0.001 in-round; see
-    # OPTIMIZATION_r17.md.
-    #
-    # Lloyd trainer family: the k-row model state moved from chained
-    # executor frames (per-round localCheckpoint + join chain) to the
-    # driver (`_lloyd_rounds` — one mean-collect job per round, local
-    # relations downstream).  Same Spark-side mean aggregation, same
-    # assignment folds, bit-identical values.
-    "sim_kmeans_lloyd",
-    "sim_knn_ivf_trained",
-    "sim_ivfpq_trained",
-    "sim_semantic_dedup",
-    "sim_silhouette_simplified",
-    # Heavy hitters: lowercasing moved to the Spark side of the Arrow
-    # boundary (ADVICE r16 #1 — one lowercasing engine) and the Python
-    # tokenizer now works per document (ADVICE r16 #2); same counts.
-    "agg_heavy_hitters_mg",
-})
-
-# Green driver rows from CORRECTNESS_r14.json — the whole round-14 window
-# hash-matched 50/50 (the eighth consecutive perfect driver window): the 10
-# round-14 additions, the four `_MODIFIED_SINCE_PROOF` re-entries (their
-# rewritten plans now artifact-proven), and 36 oldest-artifact backfills.
-_R14_PROVEN: frozenset[str] = frozenset({
-    "agg_median_distributed_scale", "agg_quantiles_distributed_scale",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_minhash_lsh_pairs",
-    "dedup_minhash_signature", "dedup_ngram_jaccard",
-    "distinct_dropduplicates", "dq_sequence_gaps_scale",
-    "ds_cross_channel_intersect", "ds_cumulative_crossover",
-    "ds_frequent_items_best_customers", "ds_return_ratio_ranks",
-    "ds_returns_excluded_ratio", "eval_krippendorff_ratio",
-    "exchange_range_partition", "exchange_repartition",
-    "feature_pca_power_iteration", "gen_explode_outer", "gen_inline",
-    "gen_python_udtf", "join_cross", "join_nonequi_inner", "limit_offset",
-    "pipeline_end_to_end", "q10_returned_items",
-    "q18_large_volume_customer", "q1_pricing_summary",
-    "q21_waiting_supplier", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_order_priority_exists",
-    "q5_local_supplier_volume", "q7_volume_shipping", "q8_market_share",
-    "q9_product_type_profit", "rec_als_rank_k", "rec_als_rank_k_implicit",
-    "rec_als_rank_k_round", "scan_projection_pushdown", "set_except",
-    "set_intersect", "set_union_all", "sim_knn_ivf",
-    "sort_nulls_ordering", "take_ordered_topk", "text_chunk_windows",
-    "timeseries_holt_linear", "udaf_partial_merge_stats",
-    "unpivot_part_metrics",
-})
-
-# Green driver rows from CORRECTNESS_r13.json — the whole round-13 window
-# hash-matched 50/50 (the seventh consecutive perfect driver window): the 24
-# round-13 additions, the `sample_neyman_allocation` modified-since-proof
-# re-entry (now proven POST-overflow-fix), and 25 oldest-artifact backfills.
-# Landing it makes every oracle-bearing registered query artifact-proven.
-_R13_PROVEN: frozenset[str] = frozenset({
-    "agg_collect", "agg_cube", "agg_distinct_filter", "agg_global",
-    "agg_grouping_sets", "agg_median_distributed_scale", "agg_minmax_by",
-    "agg_quantiles_distributed_scale", "agg_rollup", "agg_sort_aggregate",
-    "dq_sequence_gaps_scale", "ds_frequent_buyer_band",
-    "eval_auc_delong_ci_scale", "eval_brier_decomposition",
-    "eval_cochran_q", "eval_ece_after_platt", "eval_fleiss_kappa",
-    "eval_friedman_test", "eval_krippendorff_interval",
-    "eval_krippendorff_nominal", "eval_page_trend_test",
-    "eval_wilcoxon_signed_rank", "feature_logreg_fit_quality", "fn_cast",
-    "fn_math", "gen_explode", "gen_posexplode", "join_broadcast",
-    "join_edit_distance_qgram_scaled", "join_existence", "join_full_outer",
-    "join_inner_shuffle_hash", "join_inner_smj", "join_left_anti",
-    "join_left_outer", "join_left_semi", "join_null_aware_anti",
-    "join_right_outer", "rec_als_alternating_round", "rec_als_convergence",
-    "rec_als_implicit_step", "rec_als_item_step",
-    "sample_neyman_allocation", "scan_schema_evolution_widening",
-    "sql_table_udf", "stats_kendall_tau_b", "timeseries_holt_linear",
-    "udf_arrow_python", "udf_map_in_arrow", "udf_map_in_pandas",
-})
-
-# Green driver rows from CORRECTNESS_r12.json — the whole round-12 window
-# hash-matched 50/50 (the sixth consecutive perfect driver window): the 26
-# round-12 additions, the `dq_freshness_lag` modified-since-proof re-entry,
-# and 23 oldest-artifact (r1) backfills.  Landing it makes every
-# oracle-bearing registered query artifact-proven (436/436).
-_R12_PROVEN: frozenset[str] = frozenset({
-    "agg_corr_covar", "agg_listagg_ordered", "agg_median_percentile",
-    "agg_mode_deterministic", "agg_stats_moments",
-    "dedup_connected_components_scaled", "dedup_minhash_lsh_pairs_scaled",
-    "dedup_record_linkage_fs", "dq_freshness_lag", "ds_rollup_topk_hierarchy",
-    "ds_time_band_counts", "eval_auc_delong_ci", "eval_bradley_terry",
-    "eval_cohens_kappa", "eval_cronbach_alpha",
-    "eval_expected_calibration_error", "eval_krippendorff_alpha",
-    "eval_mcnemar_test", "eval_tost_equivalence", "feature_logreg_newton",
-    "feature_platt_scaling", "feature_poisson_glm", "fn_array_ops",
-    "fn_array_set_ops", "fn_binary_map_tail", "fn_bitwise", "fn_conditional",
-    "fn_datetime_tail", "fn_higher_order", "fn_interval", "fn_map_builders",
-    "fn_null_handling", "fn_reference_tail", "fn_struct_map",
-    "fn_to_json_roundtrip", "fn_try_arithmetic",
-    "join_set_similarity_prefix_scaled", "pipeline_quality_training_set",
-    "rec_als_user_step", "sample_neyman_allocation", "scan_schema_evolution",
-    "sql_scalar_udf", "text_perplexity_buckets", "timeseries_changepoint_cusum",
-    "timeseries_changepoint_per_type", "timeseries_seasonal_decompose",
-    "udf_apply_in_pandas_grouped_map", "udf_pandas_grouped_agg",
-    "udf_pandas_scalar", "udf_python_row",
-})
-
-# Green driver rows from CORRECTNESS_r11.json — the whole round-11 window
-# hash-matched 50/50 (the fifth consecutive perfect driver window).  This
-# window contained every name whose only prior proof was the artifact-less
-# round-8 window, so landing it retires the "presumed proven" category:
-# all evidence is now artifact-backed.
-_R11_PROVEN: frozenset[str] = frozenset({
-    "agg_bool_count_if", "agg_countmin_frequency", "agg_grouping_id",
-    "agg_listagg_native", "customer_segment_migration_scale",
-    "dedup_minhash_bbit", "dedup_simhash_pairs_scaled", "dedup_url_canonical",
-    "dq_benford_digits", "dq_psi_drift", "ds_best_customer_sales",
-    "ds_repeat_purchase_pairs", "eval_ab_srm_check", "eval_bootstrap_ci",
-    "eval_calibration_bins", "eval_ks_test", "eval_langid_confusion",
-    "eval_mannwhitney_u", "eval_survival_km", "eval_survival_logrank",
-    "eval_threshold_sweep", "events_inter_arrival_stats",
-    "events_pattern_regex", "feature_hashing_trick",
-    "feature_winsorize_robust_scale", "fn_collation_lcase", "fn_datetime",
-    "fn_decimal_agg_overflow_guard", "fn_decimal_arith", "fn_hash_crypto",
-    "fn_string_basic", "fn_string_pad_case", "gen_stack",
-    "graph_degree_assortativity", "graph_label_propagation",
-    "join_lateral_topk", "mm_binaryfile_scan", "orders_seasonality_index",
-    "pack_shelf_contexts", "sample_poisson_bootstrap", "sim_knn_ivf_serve",
-    "sim_knn_srp_lsh", "sim_semantic_dedup_serve", "sql_recursive_date_spine",
-    "stats_kendall_trend", "stats_spearman_corr", "stream_sliding_distinct",
-    "text_ngram_novelty", "text_pmi_collocations", "window_time_range_frame",
-})
-
-# Green driver rows from CORRECTNESS_r10.json — the whole round-10 window
-# hash-matched 50/50 (the fourth consecutive perfect driver window).  This
-# was the first DERIVED window: 38 never-proven r9/r10 additions plus the 12
-# plan-critical presumed-r8 re-proofs (`_R8_REPROVE_FIRST`), so landing it
-# retires the plan-critical override (see `_window_key`).
-_R10_PROVEN: frozenset[str] = frozenset({
-    "agg_approx_top_k", "sql_group_order_by_all",
-    "sql_parameterized_identifier", "dq_snapshot_reconcile",
-    "market_basket_triples", "dq_schema_drift", "orders_ship_latency_sla",
-    "orders_backlog_aging", "dq_column_entropy_profile", "dq_freshness_lag",
-    "stats_theil_sen_trend", "events_seasonal_anomaly",
-    "timeseries_binary_segmentation", "ds_rollup_margin_rank",
-    "ds_channel_union_rollup", "ds_yoy_brand_delta", "ds_rollup_topk_brand",
-    "ds_cross_period_customers", "ds_monthly_moving_avg",
-    "ds_grouping_sets_mix", "ds_demand_variability",
-    "ds_monthly_deviation_rank", "ds_cumulative_channel_share",
-    "ds_segment_revenue_quartiles", "pipeline_mixture_epoch_plan",
-    "dedup_editdistance_knn", "graph_modularity_score", "eval_ks_two_sample",
-    "eval_permutation_test", "eval_pr_auc", "eval_cumulative_gains",
-    "feature_best_split_stump", "sim_centroid_stability",
-    "sim_nprobe_recall_sweep", "retrieval_bm25_serve",
-    "retrieval_query_expansion_rm3", "text_heaps_law_fit",
-    "text_rake_keywords", "stream_late_data_cutoff", "dedup_bloom_prefilter",
-    "join_bucketed_colocated", "scan_dpp_partitioned",
-    "join_set_similarity_prefix", "join_edit_distance_qgram",
-    "dedup_simhash_hamming_pairs", "scan_csv_typed", "scan_json_lines",
-    "scan_xml_rowtag", "scan_incremental_new_files", "scan_zone_map_skipping",
-})
-
-# Green driver rows from CORRECTNESS_r09.json — the whole round-9 window
-# hash-matched 50/50 (the third consecutive perfect driver window).
-_R9_PROVEN: frozenset[str] = frozenset({
-    "eval_welch_ttest", "eval_anova_oneway", "eval_chi_square_independence",
-    "eval_roc_auc", "eval_cuped_adjustment", "eval_diff_in_differences",
-    "eval_power_analysis", "eval_qini_uplift", "feature_ols_two_var",
-    "feature_ridge_closed_form", "feature_mutual_information",
-    "timeseries_acf", "timeseries_snaive_backtest", "events_burstiness",
-    "agg_heavy_hitters_mg", "rec_item_cooccurrence",
-    "attribution_position_based", "text_zipf_slope", "graph_kcore_peel",
-    "dq_completeness_profile", "parts_abc_xyz_matrix",
-    "events_markov_multistep", "sim_label_centroid_confusion",
-    "geo_grid_cell_stats", "geo_radius_join", "geo_nation_trade_distance",
-    "dq_k_anonymity", "dq_join_explosion_audit", "eval_kfold_ols_oos",
-    "timeseries_linear_interpolate", "timeseries_cross_correlation",
-    "text_kneser_ney_bigram", "text_gopher_filters", "graph_link_prediction",
-    "graph_bfs_reach", "retrieval_eval_map_mrr", "sessionize_entry_stats",
-    "sim_mmr_diversify", "fn_url_parse", "dq_dp_noisy_counts",
-    "rec_user_item_serve", "layout_compaction_plan", "split_temporal_holdout",
-    "sim_vector_analogy", "events_dow_hour_heatmap", "dq_iqr_outliers",
-    "customer_segment_migration", "parts_supplier_hhi",
-    "events_engagement_gini", "fn_regexp_like",
-})
-
-# Green driver rows from CORRECTNESS_r07.json — the whole round-7 window
-# hash-matched 50/50 (the second consecutive perfect driver window).
-_R7_PROVEN: frozenset[str] = frozenset({
-    "mm_image_ahash_dedup", "dedup_minhash_containment",
-    "market_basket_pairs", "anomaly_mad_events", "window_gaps_islands",
-    "text_bigram_perplexity", "events_markov_transitions",
-    "customer_rfm_segments", "sample_kcenter_coreset",
-    "mm_wav_activity_segments", "mm_video_shot_detection",
-    "sim_silhouette_simplified", "pipeline_multimodal_curation",
-    "sim_hard_negatives", "user_behavior_similarity", "asof_join_nearest",
-    "window_running_distinct", "sweepline_open_orders",
-    "sim_ann_recall_report", "dq_audit_events", "pareto_revenue_share",
-    "funnel_time_to_convert", "dedup_incremental_neardup",
-    "sim_pq_distortion_report", "window_rolling_median",
-    "agg_weighted_median", "sample_class_balance",
-    "timeseries_trend_decompose", "split_kfold_assignment",
-    "dq_audit_lineitem", "dedup_degree_distribution", "mm_binary_dedup",
-    "cohort_retention", "sim_matryoshka_topk", "customer_rfm_segments_scale",
-    "pareto_revenue_share_scale", "funnel_time_to_convert_scale",
-    "sim_ivfpq_serve", "agg_approx_bounds", "timeseries_locf_resample",
-    "timeseries_ewma_window", "events_rolling_active",
-    "feature_target_encoding", "feature_woe_iv", "events_top_paths",
-    "orders_cohort_ltv", "dq_referential_integrity",
-    "pivot_topn_other_bucket", "retrieval_eval_ndcg",
-    "timeseries_cusum_drift",
-})
-
-# Green driver rows from CORRECTNESS_r06.json — the whole round-6 window
-# hash-matched 50/50 (the first perfect driver window), so all of it joins
-# the proven tail.
-_R6_PROVEN: frozenset[str] = frozenset({
-    "sim_kmeans_lloyd", "sim_knn_ivf_trained", "sim_pca_power_iteration",
-    "sample_weighted_topk", "text_quality_percentile_filter",
-    "text_zscore_per_source", "cdc_snapshot_diff",
-    "dedup_canonical_selection", "fn_json", "fn_json_nested",
-    "window_lead_lag", "agg_histogram_width_bucket", "agg_first_ordered",
-    "gen_python_udtf_analyze", "mm_binary_metadata", "mm_decode_features",
-    "mm_frame_sample", "mm_resize_plan", "mm_ppm_decode_real", "text_stats",
-    "text_token_regex", "text_rolling_hash", "sim_ivfpq_trained",
-    "sim_pca_top_m", "stream_cdc_upsert", "agg_theta_sketch_bounds",
-    "agg_kll_quantile_bounds", "cdc_apply_changelog", "scd2_history",
-    "pit_lookup_join", "dedup_component_stats", "sessionize_gap",
-    "sim_outlier_filter", "text_bigram_fluency", "text_substring_dedup",
-    "skew_key_stats", "split_group_integrity", "dedup_lsh_quality",
-    "agg_incremental_rollup", "feature_quantile_binning", "text_bpe_train",
-    "text_bpe_encode", "sample_temperature_mixture", "text_word_entropy",
-    "join_interval_overlap", "agg_hll_bounds", "sim_semantic_dedup",
-    "retrieval_rrf_fusion", "split_leakage_audit", "attribution_linear_touch",
-})
-
-# Green driver rows from CORRECTNESS_r05.json — 48 of the 50-slot round-5
-# window hash-matched (the other 2 were rows-only sketch queries that can
-# only return `no_oracle`; they are excluded from windows permanently).
-_R5_PROVEN: frozenset[str] = frozenset({
-    "window_percentiles", "window_sliding_frame", "window_ignore_nulls",
-    "funnel_view_click_purchase", "streak_daily_activity", "gen_json_tuple",
-    "json_parse_once", "fn_variant_json", "stream_tumbling_window",
-    "stream_session_window", "stream_interval_join", "stream_dedup",
-    "stream_static_enrich", "window_ranking", "window_running_agg",
-    "window_range_frame", "window_top_k_per_group", "skew_aqe_join",
-    "skew_salted_join", "pivot_event_counts", "asof_join_purchase_click",
-    "join_range_bands", "stream_sliding_window", "stream_late_data_cutoff",
-    "agg_bitmap_distinct", "agg_linear_regression", "fn_mask_redact",
-    "fn_xml_xpath", "fn_csv_parse", "fn_map_higher_order", "fn_math_trig",
-    "mm_wav_decode_real", "mm_video_frame_sample_real", "text_pii_redact",
-    "text_url_canonicalize", "text_html_strip", "tfidf_top_terms",
-    "bm25_single_term", "sample_mixture_weights",
-    "dedup_incremental_anti_join", "dedup_fuzzy_name_match",
-    "graph_pagerank_fixed_point", "graph_triangle_count",
-    "pyds_synthdocs_scan", "layout_zorder_key", "scan_file_provenance",
-    "sim_normalize_embeddings", "pipeline_curation_end_to_end",
-})
-
-# Green driver rows from CORRECTNESS_r04.json — the 37 of the round-3/4
-# window that passed (the other 13 are the (a) block above).
-_R4_PROVEN: frozenset[str] = frozenset({
-    "udaf_partial_merge_stats", "gen_explode_outer", "gen_inline",
-    "gen_python_udtf", "scan_projection_pushdown", "set_union_distinct",
-    "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
-    "q10_returned_items", "q11_important_stock", "q12_priority_shipping",
-    "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier_cte",
-    "q16_supplier_part_count", "q17_small_quantity_parts",
-    "q19_disjunctive_predicates", "q20_potential_promotion",
-    "q22_global_sales_opportunity", "dedup_simhash_md5",
-    "contamination_ngram_overlap", "dedup_connected_components",
-    "sample_hash_fraction", "split_train_val_test",
-    "sample_stratified_per_group", "shuffle_epoch_order",
-    "sim_knn_bruteforce", "sim_centroids", "sim_quantize_int8",
-    "sim_pq_codes", "sim_pq_adc_topk", "text_lang_id", "text_quality_score",
-    "text_fingerprint", "pack_length_buckets", "text_repetition_filter",
-})
-
-# Green driver rows from CORRECTNESS_r02.json — the whole round-2 window
-# passed 50/50, so all of it joins the proven tail.
-_R2_PROVEN: frozenset[str] = frozenset({
-    "join_inner_smj", "join_inner_shuffle_hash", "join_broadcast",
-    "join_left_outer", "join_right_outer", "join_full_outer",
-    "join_left_semi", "join_left_anti", "join_null_aware_anti",
-    "join_existence", "join_cross", "join_nonequi_inner", "join_range_bands",
-    "skew_salted_join",
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q9_product_type_profit", "q21_waiting_supplier", "q2_min_cost_supplier",
-    "q4_order_priority_exists", "q18_large_volume_customer",
-    "window_ranking", "window_lead_lag", "window_running_agg",
-    "window_top_k_per_group", "window_range_frame",
-    "sort_nulls_ordering", "limit_offset", "take_ordered_topk",
-    "set_union_all", "set_intersect", "set_except", "distinct_dropduplicates",
-    "exchange_repartition", "exchange_range_partition",
-    "pivot_event_counts", "unpivot_part_metrics", "gen_posexplode",
-    "dedup_exact", "dedup_minhash_signature", "dedup_minhash_lsh_pairs",
-    "dedup_ngram_jaccard", "sim_knn_ivf", "dedup_embedding_cosine",
-    "text_chunk_windows", "pipeline_end_to_end",
-    "fn_math", "fn_cast", "udf_map_in_pandas",
-})
-
-# Green driver rows from CORRECTNESS_r01.json — already externally proven, so
-# they yield their window slots to never-checked queries.
-_R1_PROVEN: frozenset[str] = frozenset({
-    "fn_decimal_arith", "fn_decimal_agg_overflow_guard", "fn_string_basic",
-    "fn_string_pad_case", "fn_regexp_like", "fn_datetime", "fn_hash_crypto",
-    "fn_json", "fn_conditional", "fn_array_ops", "fn_struct_map",
-    "fn_higher_order", "fn_map_builders", "fn_bitwise", "fn_null_handling",
-    "fn_interval", "fn_json_nested", "fn_to_json_roundtrip",
-    "agg_listagg_ordered", "fn_reference_tail", "fn_try_arithmetic",
-    "fn_binary_map_tail", "fn_datetime_tail", "fn_array_set_ops",
-    "agg_stats_moments", "agg_corr_covar", "agg_median_percentile",
-    "agg_mode_deterministic", "udf_pandas_scalar", "udf_pandas_grouped_agg",
-    "udf_python_row", "udf_apply_in_pandas_grouped_map",
-    "collect_limit_unordered", "udf_arrow_python", "udf_map_in_arrow",
-    "agg_global", "agg_distinct_filter", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "agg_collect", "agg_minmax_by", "agg_sort_aggregate",
-    "agg_approx", "agg_hll_sketch_mergeable", "asof_join_purchase_click",
-    "gen_explode",
-})
-
-
-# Green driver rows from CORRECTNESS_r15.json — the whole round-15 window
-# hash-matched 50/50 (the ninth consecutive perfect driver window): the 14
-# round-15 additions, the one `_MODIFIED_SINCE_PROOF` re-entry
-# (`feature_pca_power_iteration`, re-proven POST the exchange-free
-# covariance rewrite), and 35 oldest-artifact backfills.
-_R15_PROVEN: frozenset[str] = frozenset({
-    "agg_ams_f2_sketch", "stats_seasonal_kendall_slope",
-    "stats_spearman_global_scale", "stats_gini_concentration_scale",
-    "ds_yoy_ratio_customers", "ds_inventory_shortfall",
-    "ds_multi_supplier_unreturned", "ds_inventory_cv_pairs",
-    "ds_or_exists_segments", "ds_except_chain_customers",
-    "eval_conformal_coverage", "feature_pca_top_m", "feature_jl_projection",
-    "rec_als_rank16_chained", "feature_pca_power_iteration",
-    "q12_priority_shipping", "q16_supplier_part_count",
-    "q20_potential_promotion", "set_union_distinct", "q6_forecast_revenue",
-    "q11_important_stock", "q13_customer_distribution", "q14_promo_effect",
-    "q15_top_supplier_cte", "q17_small_quantity_parts",
-    "q19_disjunctive_predicates", "q22_global_sales_opportunity",
-    "dedup_simhash_md5", "contamination_ngram_overlap",
-    "dedup_connected_components", "sample_hash_fraction",
-    "split_train_val_test", "sample_stratified_per_group",
-    "shuffle_epoch_order", "sim_knn_bruteforce", "sim_centroids",
-    "sim_quantize_int8", "sim_pq_codes", "sim_pq_adc_topk", "text_lang_id",
-    "text_quality_score", "text_fingerprint", "pack_length_buckets",
-    "text_repetition_filter", "fn_mask_redact", "fn_xml_xpath",
-    "fn_csv_parse", "fn_map_higher_order", "fn_math_trig",
-    "agg_bitmap_distinct",
-})
-
-
-# Green driver rows from CORRECTNESS_r16.json — the whole round-16 window
-# hash-matched 50/50 (the tenth consecutive perfect driver window; names
-# recorded in PERF_r16.json `queries_newly_passing`, VERDICT r16 gate):
-# the 17 r16 plan-rewrite re-entries (their rewritten plans now
-# artifact-proven), the 4 r15-advice fix re-entries, the interrupted-BUILD
-# additions (`dedup_lsh_serve`, `agg_heavy_hitters_mg` et al.) and
-# oldest-artifact backfills.
-_R16_PROVEN: frozenset[str] = frozenset({
-    "agg_heavy_hitters_mg", "agg_linear_regression",
-    "asof_join_purchase_click", "dedup_fuzzy_name_match",
-    "dedup_incremental_anti_join", "dedup_lsh_quality", "dedup_lsh_serve",
-    "dedup_lsh_serve_verified", "dedup_minhash_bbit", "dedup_ngram_jaccard",
-    "dedup_simhash_hamming_pairs", "dedup_simhash_pairs_scaled",
-    "ds_before_after_event_split", "ds_moving_avg_neighbors",
-    "eval_conformal_coverage", "eval_conformal_global_scale",
-    "feature_jl_projection", "funnel_view_click_purchase", "gen_json_tuple",
-    "graph_pagerank_fixed_point", "graph_triangle_count", "join_range_bands",
-    "join_set_similarity_prefix", "join_set_similarity_prefix_scaled",
-    "mm_video_frame_sample_real", "mm_wav_decode_real", "pivot_event_counts",
-    "retrieval_rrf_fusion", "sample_mixture_weights", "scan_file_provenance",
-    "sim_hard_negatives", "sim_knn_srp_lsh", "sim_mmr_diversify",
-    "sim_normalize_embeddings", "sim_semantic_dedup", "sim_vector_analogy",
-    "stats_gini_concentration_scale", "stats_spearman_global_scale",
-    "stats_theil_sen_global_scale", "streak_daily_activity",
-    "text_bpe_encode", "text_bpe_train", "text_kneser_ney_bigram",
-    "window_ignore_nulls", "window_percentiles", "window_range_frame",
-    "window_ranking", "window_running_agg", "window_sliding_frame",
-    "window_top_k_per_group",
-})
-
-
-# Rounds with an in-tree driver artifact (CORRECTNESS_r0N.json committed).
-# Round 8's artifact never landed; every name from that window re-proved in
-# round 11, so the map now covers all evidence.
-_ARTIFACT_PROVEN: dict[int, frozenset[str]] = {
-    1: _R1_PROVEN,
-    2: _R2_PROVEN,
-    4: _R4_PROVEN,
-    5: _R5_PROVEN,
-    6: _R6_PROVEN,
-    7: _R7_PROVEN,
-    9: _R9_PROVEN,
-    10: _R10_PROVEN,
-    11: _R11_PROVEN,
-    12: _R12_PROVEN,
-    13: _R13_PROVEN,
-    14: _R14_PROVEN,
-    15: _R15_PROVEN,
-    16: _R16_PROVEN,
-}
-
-_PROVEN: frozenset[str] = frozenset().union(*_ARTIFACT_PROVEN.values())
-
-def _window_key(reg: dict[str, QuerySpec], reg_rank: dict[str, int]):
-    """Sort key implementing the mechanical window policy (see module
-    comment at `_WINDOW_SIZE`): (0) never proven, (1) rewritten after the
-    newest artifact (`_MODIFIED_SINCE_PROOF`), (2) artifact-backed by
-    ascending newest-artifact round."""
-
-    def key(name: str) -> tuple[int, int, int]:
-        rounds = [r for r, s in _ARTIFACT_PROVEN.items() if name in s]
-        if not rounds:
-            return (0, 0, reg_rank[name])
-        if name in _MODIFIED_SINCE_PROOF:
-            return (1, 0, reg_rank[name])
-        return (2, max(rounds), reg_rank[name])
-
-    return key
-
-
-def _ordered(reg: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    global _DRIVER_WINDOW
-    reg_rank = {n: i for i, n in enumerate(reg)}
-    candidates = sorted(
-        (n for n, s in reg.items() if s.oracle is not None),
-        key=_window_key(reg, reg_rank),
-    )
-    _DRIVER_WINDOW = tuple(candidates[:_WINDOW_SIZE])
-    window_rank = {n: i for i, n in enumerate(_DRIVER_WINDOW)}
-
-    def key(name: str) -> tuple[int, int]:
-        if reg[name].oracle is None:
-            # Rows-only: the driver can only record `no_oracle`, so a window
-            # slot spent here yields zero evidence.  Permanently last.
-            return (3, reg_rank[name])
-        if name in window_rank:
-            return (0, window_rank[name])
-        if name in _PROVEN:
-            return (2, reg_rank[name])
-        return (1, reg_rank[name])
-
-    return {n: reg[n] for n in sorted(reg, key=key)}
-
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every module that registers queries; idempotent."""
+    """Import every module that registers queries; idempotent.  Returns a
+    copy of the registry in registration order (module import order, then
+    declaration order within each module)."""
     global _LOADED
     if not _LOADED:
         # Imports are for registration side effects.
@@ -553,10 +87,11 @@ def load_all() -> dict[str, QuerySpec]:
         from auron_spark import streaming as _streaming  # noqa: F401
 
         _LOADED = True
-    return _ordered(REGISTRY)
+    return dict(REGISTRY)
 
 
 def queries() -> dict[str, Builder]:
+    """Every registered builder by name, in registration order."""
     return {name: spec.build for name, spec in load_all().items()}
 
 

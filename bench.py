@@ -465,8 +465,13 @@ def _run_group(group: str, sf_dir: str, second: str,
     # variance, while the identical leg at 24g reads 24.8 s with every
     # component inside the r11/r12 brackets.  This is the local mirror of
     # sizing executor memory to concurrent task state at 100 TB; tests keep
-    # the 8g default (their per-query data is fixture-small).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # the 8g default (their per-query data is fixture-small).  Capped at
+    # half the machine's physical memory: a heap larger than RAM (with no
+    # swap) trades GC thrash for the OOM killer.
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    os.environ.setdefault(
+        "SPARK_GRAFT_DRIVER_MEM", f"{min(24 << 10, phys // 2 >> 20)}m"
+    )
     from auron_spark.registry import bench_queries, load_all
     from auron_spark.session import get_spark
     from auron_spark.tables import Tables  # noqa: F401 (registry import)

@@ -37,26 +37,20 @@ def _value_hash(norm_rows: list[tuple]) -> str:
 def _counts_block() -> tuple[str, str]:
     """Compute the coverage headline from the registry itself (VERDICT r7
     stretch #8): returns (COVERAGE.md block, README.md inline fragment).
-    The numbers can never drift from the artifacts because they ARE the
-    artifacts — registry size, oracle count, and the proven sets that
-    mirror the driver's CORRECTNESS_r0N.json green rows."""
+    The numbers can never drift from the code because they are read from
+    the registry: its size, its oracle count and its rows-only names."""
     import textwrap
 
-    from auron_spark.registry import _PROVEN, load_all
+    from auron_spark.registry import load_all
 
     specs = load_all()
     total = len(specs)
     rows_only = sorted(n for n, s in specs.items() if s.oracle is None)
     n_oracle = total - len(rows_only)
-    # Count only oracle-bearing names: three rows-only queries sit in the
-    # round-1 artifact as `no_oracle` rows and must not inflate the headline.
-    proven = sum(
-        1 for n, s in specs.items() if s.oracle is not None and n in _PROVEN
-    )
     names = ", ".join(f"`{n}`" for n in rows_only)
     block = textwrap.fill(
         f"**{total} registered queries, {n_oracle} with exact DuckDB "
-        f"oracles, {proven} with a green driver row** (rows-only: {names}).",
+        f"oracles** (rows-only: {names}).",
         width=74,
     )
     inline = (

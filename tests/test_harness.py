@@ -38,84 +38,48 @@ def test_nested_arrays_tagged():
     assert _norm_cell([1, 2]) == _norm_cell((1, 2))
 
 
-def test_driver_window_spans_all_families():
-    """The driver checks a 50-query prefix of the registry.  Since round 10
-    the window is DERIVED, not hand-rotated (VERDICT r9 stretch #8): never-
-    proven oracle queries first (registration order), then re-prove backfill
-    — names rewritten after their newest artifact (modified-since-proof),
-    then oldest artifact-backed proofs.  This test pins the policy
-    invariants so the rotation can never be mis-transcribed.
-    Rows-only queries are permanently excluded from window slots: the
-    driver can only record `no_oracle` for them (round 5 burned 2 slots
-    that way)."""
+def test_fast_tier_keeps_bench_oracles(monkeypatch):
+    """A whole-directory run keeps, from the oracle battery, exactly the
+    oracle tests of the bench queries that have an oracle (so the quick
+    gate re-checks the queries whose speed is measured), plus every test
+    of the tier's own files; `load_all()` keeps registration order."""
+    from types import SimpleNamespace
+
     from auron_spark import registry
+    from tests import conftest
 
     specs = registry.load_all()
-    window = list(specs)[: registry._WINDOW_SIZE]
-    order = {n: i for i, n in enumerate(specs)}
-    # the derived window IS the registry prefix
-    assert tuple(window) == registry._DRIVER_WINDOW
-    # no unproven oracle query may sort after any proven one (as long as
-    # the unproven set fits the window, it is fully inside it)
-    never_proven = {
-        n
-        for n, s in specs.items()
-        if s.oracle is not None and n not in registry._PROVEN
-    }
-    if never_proven:
-        last_unproven = max(order[n] for n in never_proven)
-        proven_not_windowed = [
-            n for n, s in specs.items()
-            if s.oracle is not None and n in registry._PROVEN
-            and n not in set(window)
-        ]
-        if len(never_proven) <= registry._WINDOW_SIZE:
-            assert never_proven <= set(window), (
-                f"unproven oracle queries left outside the driver window: "
-                f"{never_proven - set(window)}"
-            )
-        if proven_not_windowed:
-            assert last_unproven < min(order[n] for n in proven_not_windowed)
-    # no rows-only query may occupy a window slot, this round or ever
-    rows_only = {n for n, s in specs.items() if s.oracle is None}
-    wasted = set(window) & rows_only
-    assert not wasted, f"window wastes slots on rows-only queries: {wasted}"
-    # backfill slots hold the weakest evidence FIRST: a name whose artifact
-    # still witnesses its current code may enter only after every
-    # modified-since-proof name (stale artifact) is inside the window
-    backfill = [n for n in window if n not in never_proven]
-    stale = registry._MODIFIED_SINCE_PROOF & {
-        n for n, s in specs.items() if s.oracle is not None
-    }
-    fresh_backfill_in_window = [n for n in backfill if n not in stale]
-    stale_outside = sorted(stale - set(window))
-    if fresh_backfill_in_window:
-        assert not stale_outside, (
-            f"window holds artifact-proven {fresh_backfill_in_window} while "
-            f"stale-proof candidates wait outside: {stale_outside}"
+    assert list(specs) == list(registry.REGISTRY)
+    want = {n for n, s in specs.items() if s.bench and s.oracle is not None}
+    assert want
+
+    def item(fname, name=None):
+        return SimpleNamespace(
+            fspath=f"tests/{fname}", nodeid=f"tests/{fname}::{name}",
+            callspec=SimpleNamespace(params={"name": name}),
         )
-    # every modified-since-proof name must actually be artifact-backed
-    # (otherwise it belongs in the never-proven category, not here)
-    assert registry._MODIFIED_SINCE_PROOF <= registry._PROVEN
-    # backfill within the fresh tail is oldest-newest-artifact first
-    newest = {
-        n: max(r for r, s in registry._ARTIFACT_PROVEN.items() if n in s)
-        for n in registry._PROVEN
+
+    items = [item("test_oracle_all.py", n) for n in specs]
+    items += [item("test_harness.py"), item("test_plans.py")]
+    deselected = []
+    config = SimpleNamespace(
+        invocation_params=SimpleNamespace(args=("tests/", "-q")),
+        hook=SimpleNamespace(
+            pytest_deselected=lambda items: deselected.extend(items)
+        ),
+        pluginmanager=SimpleNamespace(get_plugin=lambda name: None),
+    )
+    monkeypatch.delenv("SPARK_GRAFT_SUITE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_TEST_SHARD", raising=False)
+    conftest.pytest_collection_modifyitems(config, items)
+    kept = {
+        it.callspec.params["name"]
+        for it in items if it.fspath.endswith("test_oracle_all.py")
     }
-    fresh_rounds = [newest[n] for n in fresh_backfill_in_window]
-    outside_fresh = [
-        newest[n]
-        for n, s in specs.items()
-        if s.oracle is not None
-        and n in registry._PROVEN
-        and n not in stale
-        and n not in set(window)
-    ]
-    if fresh_rounds and outside_fresh:
-        assert max(fresh_rounds) <= min(outside_fresh), (
-            "window backfills a newer-artifact name while an older-artifact "
-            "name waits outside"
-        )
+    assert kept == want
+    assert [it.fspath for it in items if it.callspec.params["name"] is None] \
+        == ["tests/test_harness.py"]
+    assert len(items) + len(deselected) == len(specs) + 2
 
 
 def test_shingles_short_documents(spark):
@@ -213,18 +177,27 @@ def _all_query_schemas(spark):
     raise are collected (not swallowed) so the caller can assert the gate
     still has coverage — a blanket skip would let the lints pass vacuously
     (ADVICE r3).  Memoized per session: the ~55 s build pass runs once even
-    though multiple gate tests consume it (ADVICE r4)."""
+    though multiple gate tests consume it (ADVICE r4).  Every build must
+    leave the session's plan cache empty."""
     from auron_spark.registry import load_all
 
     key = id(spark)
     if key in _SCHEMA_MEMO:
         return _SCHEMA_MEMO[key]
     schemas, errors = {}, {}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), "the session-wide plan cache is not empty"
     for name, spec in load_all().items():
         try:
             schemas[name] = spec.build(spark, SF_SMOKE).schema
         except Exception as e:  # capability-gated builders land here
             errors[name] = repr(e)
+        # A .cache()/.persist() never released registers its plan in the
+        # session-wide CacheManager, which then serves every later query
+        # with the same subplan — dropping that query's own pushed filters.
+        assert cache.isEmpty(), (
+            f"building {name} left a plan in the session cache"
+        )
     _SCHEMA_MEMO[key] = (schemas, errors)
     return schemas, errors
 

@@ -2977,6 +2977,22 @@ def test_theil_sen_global_no_single_partition_window(spark):
     assert "EvalPython" not in plan, plan
 
 
+def test_lsh_verify_build_keeps_serve_scan_filters(spark):
+    """Building an LSH verify query must leave no plan in the session-wide
+    cache: a cached corpus-shingle subplan would then serve
+    dedup_lsh_serve_verified's documents scans and drop their sampling
+    filter, so the serve plan's pruning would depend on what ran before."""
+    SPECS["dedup_ngram_jaccard"].build(spark, SF_DIR)
+    plan = _plan(spark, "dedup_lsh_serve_verified")
+    scans = [
+        l for l in plan.splitlines()
+        if "FileScan parquet" in l and "documents.parquet" in l
+    ]
+    assert scans, plan
+    for s in scans:
+        assert "% 10) = 0" in s, s
+
+
 def test_lsh_serve_verified_pruned_verification(spark):
     """dedup_lsh_serve_verified: the exact-Jaccard verification must be
     CANDIDATE-bounded — the candidate ids reach the doc-bucket-PARTITIONED
