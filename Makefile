@@ -1,6 +1,9 @@
 check:
 	python selfcheck.py
 
+# The whole suite (~40 min serial on 4 cores); SPARK_GRAFT_SUITE=fast
+# keeps only the fast tier (harness gates, bench plan goldens, the bench
+# queries' oracle tests).
 test:
 	python -m pytest tests/ -x -q
 

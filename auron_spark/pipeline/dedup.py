@@ -546,17 +546,28 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar count).  The DuckDB oracle computes the same fixpoint exactly via
     a recursive CTE — an exact oracle for an iterative algorithm."""
     t = Tables(spark, sf_dir)
-    pairs = lsh_candidate_pairs(
-        minhash_signature(_doc_shingles(t, dedup=False))
-    ).localCheckpoint(eager=False)
+    return lsh_components(
+        t.documents.select("doc_id"), _doc_shingles(t, dedup=False)
+    ).orderBy("doc_id")
+
+
+def lsh_components(nodes: DataFrame, doc_shingles: DataFrame) -> DataFrame:
+    """(doc_id, canonical_id) for every row of ``nodes``: the connected
+    components of the MinHash-LSH candidate graph over ``doc_shingles``
+    (doc_id, shingle), canonical id = the component's smallest doc_id.
+    The candidate pairs become a symmetric edge list, persisted for the
+    iterative `connected_components` and released once it converges."""
+    pairs = lsh_candidate_pairs(minhash_signature(doc_shingles)).localCheckpoint(
+        eager=False
+    )
     edges = (
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .union(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .persist()
     )
-    labels = connected_components(t.documents.select("doc_id"), edges)
+    labels = connected_components(nodes, edges)
     edges.unpersist()
-    return labels.orderBy("doc_id")
+    return labels
 
 
 def connected_components(
@@ -1072,16 +1083,9 @@ def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     t = Tables(spark, sf_dir)
-    pairs = lsh_candidate_pairs(
-        minhash_signature(_doc_shingles(t, dedup=False))
-    ).localCheckpoint(eager=False)
-    edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .persist()
+    labels = lsh_components(
+        t.documents.select("doc_id"), _doc_shingles(t, dedup=False)
     )
-    labels = connected_components(t.documents.select("doc_id"), edges)
-    edges.unpersist()
     ranked = labels.withColumnRenamed("canonical_id", "component").join(
         t.documents.select("doc_id", "n_chars"), "doc_id"
     )
@@ -1150,16 +1154,9 @@ def dedup_component_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidate-size rounds), then two tiny aggregations (per-component
     size, then size histogram) — output is O(distinct sizes)."""
     t = Tables(spark, sf_dir)
-    pairs = lsh_candidate_pairs(
-        minhash_signature(_doc_shingles(t, dedup=False))
-    ).localCheckpoint(eager=False)
-    edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .persist()
+    labels = lsh_components(
+        t.documents.select("doc_id"), _doc_shingles(t, dedup=False)
     )
-    labels = connected_components(t.documents.select("doc_id"), edges)
-    edges.unpersist()
     return (
         labels.groupBy("canonical_id")
         .agg(F.count("*").alias("component_size"))

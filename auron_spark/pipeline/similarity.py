@@ -12,7 +12,8 @@ North-star extension.  Two paths:
   results are reproducible across runs/partitionings.
 
 All arithmetic in double precision with index-ordered sequential folds so the
-DuckDB oracle (same fold order) produces bit-identical sums.
+DuckDB oracle (same fold order) produces bit-identical sums; the Arrow batch
+kernels (`_vector_kernels`) screen with BLAS and decide with the same folds.
 """
 
 from __future__ import annotations
@@ -68,104 +69,79 @@ _SQL_NORM_C = (
 )
 
 
-@query(
-    "sim_knn_bruteforce",
-    oracle=f"""
-    SELECT query_id, neighbor_id, cos_sim FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROUND({_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}), 6) AS cos_sim,
-               ROW_NUMBER() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) DESC,
-                            c.vec_id) AS rn
-        FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        WHERE q.vec_id % {QUERY_MOD} = 0
-          AND q.vec_id < {QUERY_MOD * QUERY_BUDGET}
-    ) WHERE rn <= {TOP_K}
-    ORDER BY query_id, neighbor_id
-    """,
-    tags=("pipeline", "similarity", "knn"),
-    bench=True,
-)
-def sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × streamed corpus + per-query
-    WindowGroupLimit top-k.  The query side is capped at QUERY_BUDGET vectors
-    (vec_id-prefix, deterministic and oracle-mirrorable) so the broadcast
-    stays constant-size as the corpus grows."""
-    from pyspark.sql import Window
-
-    t = Tables(spark, sf_dir)
-    # norms are precomputed per side (not per pair): O(n+q) folds instead of
-    # O(n*q) — higher-order functions are interpreted, so this matters
-    q = (
-        t.embeddings.filter(
-            (F.col("vec_id") % QUERY_MOD == 0)
-            & (F.col("vec_id") < QUERY_MOD * QUERY_BUDGET)
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("qn"),
-        )
-    )
-    c = t.parallel("embeddings").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("q_emb"), F.col("c_emb")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos_sim"))
-        .orderBy("query_id", "neighbor_id")
-    )
-
-
-#: Screen margin of the exact k-NN kernel (see `_knn_kernels`).
+#: Fixed screen margin of the exact kernels (see `_vector_kernels`).
 KNN_SCREEN_MARGIN = 1e-9
-#: Block width of the k-NN screen's lower bound (see `_knn_kernels`).
+#: Block width of the k-NN screen's lower bound (see `_vector_kernels`).
 KNN_SCREEN_BLOCK = 64
+#: Unit roundoff of IEEE double precision.
+UNIT_ROUNDOFF = 2.0**-53
 
 
-def _knn_kernels():
-    """The exact k-NN batch kernels ``(fold_dot, screen)``, built as
+def _vector_kernels():
+    """The exact Arrow batch kernels of the vector family, built as
     closures so cloudpickle ships them to the Python workers BY VALUE
     (the workers never import this package) — and so they are testable
-    without Spark.
+    without Spark.  Every kernel follows one device: a BLAS screen finds
+    the few candidates that can win, and only those are recomputed in
+    the index-ordered fold arithmetic the DuckDB oracles use, so every
+    decision is the oracle's, bit for bit.
 
-    ``fold_dot(a, b)`` is the fold twin's exact arithmetic vectorized
-    ACROSS rows: per row the 64 products accumulate strictly left to right
-    from 0.0, bit-identical to ``F.aggregate(zip_with(a, b, x*y), 0.0,
-    acc+x)``.
+    ``fold_dot(a, b)`` / ``fold_sqdist(a, b)``: per row, the products
+    ``a*b`` (or squared differences ``(a-b)*(a-b)``) accumulate strictly
+    left to right from 0.0 — vectorized ACROSS rows, bit-identical to
+    ``F.aggregate(zip_with(...), 0.0, acc+x)`` (`dot`, `_sqdist`,
+    `_sub_l2`) and to the oracles' ``list_sum``.
 
-    ``screen(qhat, qids, chat, nids, k)`` returns the ``(query, row)``
-    index pairs that survive one batch's top-k screen: every non-self pair
-    whose BLAS cosine is within ``KNN_SCREEN_MARGIN`` of its query's k-th
-    largest in the batch.  ``qhat`` are the unit-norm queries, sorted by
-    their ids ``qids``; ``chat`` the batch's unit-norm rows with ids
-    ``nids``.  The screen matrix ``qhat @ chat.T`` is (queries x batch), so
-    every per-query reduction runs along a contiguous row.  Self matches
-    are found with ``searchsorted`` on the sorted ids instead of an
-    (n x q) equality matrix.  The k-th largest is not selected over the
-    whole row: each query's k-th largest block maximum (blocks of
-    ``KNN_SCREEN_BLOCK`` columns) is a lower bound on it — k distinct
-    blocks hold k distinct elements at or above that value — so only the
-    few candidates at or above ``bound - margin`` are sorted, and the
-    survivors (at or above ``kth - margin >= bound - margin``) are all
-    among them.  With fewer than k whole blocks the bound is the exact
-    k-th largest (``np.partition`` along the row)."""
+    ``screen(qhat, qids, chat, nids, k)`` (k-NN) returns the ``(query,
+    row)`` index pairs that survive one batch's top-k screen: every
+    non-self pair whose BLAS cosine is within ``KNN_SCREEN_MARGIN`` of its
+    query's k-th largest in the batch.  ``qhat`` are the unit-norm
+    queries, sorted by their ids ``qids``; ``chat`` the batch's unit-norm
+    rows with ids ``nids``.  The screen matrix ``qhat @ chat.T`` is
+    (queries x batch), so every per-query reduction runs along a
+    contiguous row.  Self matches are found with ``searchsorted`` on the
+    sorted ids instead of an (n x q) equality matrix.  The k-th largest is
+    not selected over the whole row: each query's k-th largest block
+    maximum (blocks of ``KNN_SCREEN_BLOCK`` columns) is a lower bound on
+    it — k distinct blocks hold k distinct elements at or above that
+    value — so only the few candidates at or above ``bound - margin`` are
+    sorted, and the survivors (at or above ``kth - margin >= bound -
+    margin``) are all among them.  With fewer than k whole blocks the
+    bound is the exact k-th largest (``np.partition`` along the row).
+
+    ``argmin(x, c)`` returns, per row of ``x`` (n x d), the index of its
+    nearest row of ``c`` (m x d, rows sorted by id) under the FOLD squared
+    distance, ties to the smallest index — the oracles' ``ROW_NUMBER()
+    OVER (ORDER BY dist, id)`` and the folds' ``array_min(struct(d,
+    id))``.  The screen is the BLAS expansion ``s = |x|^2 - 2 x.c +
+    |c|^2``.  Its error against the fold value ``f`` scales with ``S =
+    |x|^2 + |c|^2``, not with the distance, so no fixed margin covers
+    every corpus.  With unit roundoff u and ``g(n) = n u / (1 - n u)``:
+    each d-term sum (the two squared norms, the BLAS dot in any order)
+    errs by at most ``g(d)`` times its absolute terms, the dot's terms
+    bounded by ``|x||c| <= S/2``; the two additions of the expansion add
+    at most ``5 u S``; so ``|s - |x-c|^2| <= (2 g(d) + 6 u) S``.  The fold
+    sums d nonnegative terms each rounded three times (difference,
+    square, add), so ``|f - |x-c|^2| <= g(d + 2) |x-c|^2 <= 2 g(d + 2)
+    S``.  Hence ``|s - f| <= E(S) = (4 d + 10) u S`` to first order.  If
+    j0 is the screen minimum and j* a fold minimum of row i, then ``s_ij*
+    <= f_ij* + E <= f_ij0 + E <= s_ij0 + 2 E``: every fold minimum lies
+    within ``2 E`` of the screen minimum, with E taken at the row's
+    ``|x|^2`` and the largest ``|c|^2``.  The kernel keeps every
+    candidate within twice that (a factor of two for the computed norms
+    and the first-order bound) plus ``KNN_SCREEN_MARGIN``; a row with one
+    candidate is decided, and the rest recompute their candidates with
+    ``fold_sqdist`` and take the smallest (distance, index).
+
+    ``over_threshold(x, nrm, thr)`` returns the index pairs ``(i, j)``,
+    ``i < j``, whose FOLD cosine ``fold_dot(x_i, x_j) / (nrm_i nrm_j)`` is
+    at least ``thr``; ``nrm`` are the fold norms ``sqrt(fold_dot(x,
+    x))``.  The screen is one gram matrix over the same norms, so it and
+    the fold differ only in how the d products of the dot are summed:
+    by at most ``2 g(d) |x_i| |x_j|`` plus one rounding of the quotient,
+    about 3e-14 in cosine units at d = 64.  A cosine is bounded by 1, so
+    here the fixed ``KNN_SCREEN_MARGIN`` does cover every corpus: only
+    the pairs within it of ``thr`` are recomputed in fold order."""
     import numpy as np
 
     def fold_dot(a, b):
@@ -174,6 +150,10 @@ def _knn_kernels():
         for d in range(prod.shape[1]):
             acc = acc + prod[:, d]
         return acc
+
+    def fold_sqdist(a, b):
+        diff = a - b
+        return fold_dot(diff, diff)
 
     def screen(qhat, qids, chat, nids, k):
         sim = qhat @ chat.T
@@ -201,37 +181,83 @@ def _knn_kernels():
         keep = (val >= kth[qi] - KNN_SCREEN_MARGIN) & ~np.isneginf(val)
         return qi[keep], cj[keep]
 
-    return fold_dot, screen
+    def argmin(x, c):
+        xx = (x * x).sum(1)
+        cc = (c * c).sum(1)
+        dist = xx[:, None] - 2.0 * (x @ c.T) + cc[None, :]
+        best = dist.argmin(1)
+        err = (4 * x.shape[1] + 10) * UNIT_ROUNDOFF * (xx + cc.max())
+        tol = KNN_SCREEN_MARGIN + 4.0 * err
+        near = dist <= (dist[np.arange(len(x)), best] + tol)[:, None]
+        rows = np.flatnonzero(near.sum(1) > 1)
+        if len(rows):
+            ri, cj = np.nonzero(near[rows])
+            ri = rows[ri]
+            exact = fold_sqdist(x[ri], c[cj])
+            # Grouped by row; within a row ascending (distance, index).
+            order = np.lexsort((cj, exact, ri))
+            ri, cj = ri[order], cj[order]
+            first = np.r_[True, ri[1:] != ri[:-1]]
+            best[ri[first]] = cj[first]
+        return best
+
+    def over_threshold(x, nrm, thr):
+        iu, ju = np.triu_indices(len(x), k=1)
+        cos = ((x @ x.T) / np.outer(nrm, nrm))[iu, ju]
+        hit = cos >= thr
+        near = np.abs(cos - thr) <= KNN_SCREEN_MARGIN
+        ni, nj = iu[near], ju[near]
+        hit[near] = fold_dot(x[ni], x[nj]) / (nrm[ni] * nrm[nj]) >= thr
+        return iu[hit], ju[hit]
+
+    from types import SimpleNamespace
+
+    return SimpleNamespace(
+        fold_dot=fold_dot,
+        fold_sqdist=fold_sqdist,
+        screen=screen,
+        argmin=argmin,
+        over_threshold=over_threshold,
+    )
 
 
 @query(
     "sim_knn_bruteforce_arrow",
-    # No DuckDB oracle by nature (the kernel is a Python batch transform,
-    # not SQL); correctness is pinned by test_arrow_knn_matches_fold, which
-    # asserts row-for-row equality with the oracle-proven fold path at two
-    # SFs, and by the 32k-corpus bench twin in the vector_scale leg.
+    oracle=f"""
+    SELECT query_id, neighbor_id, cos_sim FROM (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               ROUND({_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}), 6) AS cos_sim,
+               ROW_NUMBER() OVER (
+                   PARTITION BY q.vec_id
+                   ORDER BY {_SQL_DOT} / ({_SQL_NORM_Q} * {_SQL_NORM_C}) DESC,
+                            c.vec_id) AS rn
+        FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+        WHERE q.vec_id % {QUERY_MOD} = 0
+          AND q.vec_id < {QUERY_CAP}
+    ) WHERE rn <= {TOP_K}
+    ORDER BY query_id, neighbor_id
+    """,
     tags=("pipeline", "similarity", "knn", "arrow", "kernel"),
     bench=True,
 )
 def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k with an Arrow-vectorized distance kernel — the
-    100 TB serving twin of `sim_knn_bruteforce`.  Same semantics (same
-    query cap, same top-k, same 6-dp rounding), different kernel: instead
-    of per-pair interpreted `F.aggregate` folds, the corpus streams
-    through `mapInPandas` in Arrow batches and each batch screens ALL
-    query cosines with ONE BLAS matmul ((n_queries x 64) @ (64 x batch)),
-    keeps its per-query top-k candidates, and the per-batch partials
-    reduce through the usual WindowGroupLimit.  The distributed shape is
-    the fold's: a broadcast constant-size query matrix, one corpus scan,
+    """Exact cosine top-k with an Arrow-vectorized distance kernel: the
+    query set (capped at QUERY_BUDGET vectors by a vec_id prefix, so it
+    stays constant-size as the corpus grows) broadcasts, the corpus
+    streams through `mapInPandas` in Arrow batches, and each batch screens
+    ALL query cosines with ONE BLAS matmul ((n_queries x 64) @ (64 x
+    batch)), keeps its per-query top-k candidates, and the per-batch
+    partials reduce through a WindowGroupLimit top-k — one corpus scan,
     no shuffle before the k*|queries|-row rank stage.  On the benchmark's
     `vector` workload (32,768 vectors, 1,000 queries, four 8,192-row
     batches, single-threaded BLAS on a 4-core x86 host) the batch kernel
     costs ~0.4 CPU-seconds for all four batches.
 
-    A flat 64-term codegen expression was ALSO measured and is 6x SLOWER
+    Per-pair interpreted `F.aggregate` folds are the SQL alternative; a
+    flat 64-term codegen expression was also measured and is 6x SLOWER
     than the fold (128 `element_at` calls pay per-element bounds checks
     and the expression bails out of whole-stage codegen), so Arrow + BLAS
-    is the right scale path, not more SQL.
+    is the scale path, not more SQL.
 
     Scale shape: the query matrix is QUERY_BUDGET-capped (driver holds at
     most 1000 x 64 doubles — model-state-sized, like the k-means codebook
@@ -239,15 +265,15 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     same scan) and never materialized, and batch size is Arrow's
     (spark.sql.execution.arrow.maxRecordsPerBatch).
 
-    Exactness: BLAS only SCREENS candidates (`_knn_kernels` `screen`):
+    Exactness: BLAS only SCREENS candidates (`_vector_kernels` `screen`):
     its reduction order depends on the matrix shapes, so the same pair
     can differ in the last ulp between batches of different sizes — enough
     to break exact ties nondeterministically if emitted as the answer.
     Each batch keeps every row within KNN_SCREEN_MARGIN = 1e-9 of its
     query's k-th best screen cosine, then recomputes the survivors'
-    cosines in the fold's exact left-to-right order, so every EMITTED
-    value is bit-identical to the fold twin and the global window applies
-    the fold's (cos desc, neighbor_id asc) rule on identical doubles —
+    cosines in the oracle's exact left-to-right fold order, so every
+    EMITTED value is bit-identical to the oracle's and the global window
+    applies its (cos desc, neighbor_id asc) rule on identical doubles —
     exact ties (bitwise-duplicate vectors) and near-ties alike resolve
     exactly as the oracle does.  The k-th best screen value is found
     without a full selection: a query's k-th largest 64-column block
@@ -261,8 +287,7 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     is below that of k rows of its own batch as long as 1e-9 exceeds
     twice the screen-vs-fold error — which it does by ~4 orders of
     magnitude — and it can never enter the top-k.  Zero-norm vectors fail
-    loudly, matching the fold's ANSI divide-by-zero (both gated by
-    test_kernel_twins_degenerate_inputs)."""
+    loudly, as the oracle's division does."""
     import numpy as np
     import pandas as pd
 
@@ -275,9 +300,8 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # QUERY_BUDGET-capped: <= 1000 x 64 doubles of model state
     )
     if not qrows:
-        # Empty query set: the fold twin's join over zero query rows yields
-        # an empty result, while norm(0-length 1-D array, axis=1) would
-        # raise AxisError — match the fold's behavior (ADVICE r10).
+        # Empty query set: empty result (norm of a 0-length 1-D array
+        # along axis 1 would raise AxisError).
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cos_sim double"
         )
@@ -289,7 +313,8 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"zero-norm query embedding(s): vec_id {qids[qnorm == 0][:5]}"
         )
-    fold_dot, screen = _knn_kernels()
+    kern = _vector_kernels()
+    fold_dot, screen = kern.fold_dot, kern.screen
     qn_exact = np.sqrt(fold_dot(qmat, qmat))
     bq = spark.sparkContext.broadcast(
         (qids, qmat, qmat / qnorm[:, None], qn_exact)
@@ -303,9 +328,8 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             cmat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             cnorm = np.linalg.norm(cmat, axis=1)
             if not cnorm.all():
-                # Same domain contract as the fold twin: under ANSI mode its
-                # cosine division THROWS on a zero-norm vector (DuckDB's
-                # oracle does too) — fail loudly, never emit silent NaN.
+                # Outside the domain: the cosine divides by the norm — fail
+                # loudly, never emit silent NaN.
                 bad = pdf["vec_id"].to_numpy()[cnorm == 0]
                 raise ValueError(f"zero-norm embedding(s): vec_id {bad[:5]}")
             nids = pdf["vec_id"].to_numpy()
@@ -1203,18 +1227,17 @@ def sim_kmeans_lloyd(
     (cid, dim, centroid, n) rows with n = final cluster size (empty clusters
     keep their previous centroid with n = 0).
 
-    Scale shape (Spark MLlib's distributed k-means layout, re-expressed in
-    DataFrame ops): centroids fold into ONE array-of-structs row that
-    broadcasts to every corpus partition, so nearest-centroid assignment is
-    a map-side ``array_min`` over k candidates — no per-vector shuffle, no
-    window function.  The only exchange per iteration carries the partial
-    hash-agg states of the per-(cid, dim) decimal sums: k x 64 rows per
-    partition, constant in corpus size.  The driver-side loop holds only
-    plan handles (KM_ITERS is fixed); ``localCheckpoint`` cuts lineage per
-    round like the other iterative ops (connected components, PageRank).
-    Arithmetic contract: distances are index-ordered double folds and means
-    go through DECIMAL(18,6) of 6-dp-rounded components, so DuckDB's
-    unrolled recursion reproduces every value bit-exactly.
+    Scale shape (Spark MLlib's distributed k-means layout): the k x 64
+    codebook broadcasts to the Python workers and each Arrow batch assigns
+    its vectors with the exact argmin kernel (`_vector_kernels`) — no
+    per-vector shuffle, no window function.  The only exchange per
+    iteration carries the partial hash-agg states of the per-(cid, dim)
+    decimal sums: k x 64 rows per partition, constant in corpus size.  The
+    driver holds the k-row model state between rounds (`_lloyd_rounds`).
+    Arithmetic contract: every assignment is the one the index-ordered
+    double fold picks (smallest cid on a tie) and means go through
+    DECIMAL(18,6) of 6-dp-rounded components, so DuckDB's unrolled
+    recursion reproduces every value bit-exactly.
 
     Reference frame: the reference has no trainer (its IVF analog consumes
     a prebuilt index); this extends SURVEY §2's ANN family end-to-end.
@@ -1231,9 +1254,7 @@ def sim_kmeans_lloyd(
 def _emit_codebook(
     spark: SparkSession, cent: DataFrame, last_mean: DataFrame
 ) -> DataFrame:
-    """Trained codebook as per-dim rows, carrying empty clusters at n = 0
-    — SHARED by both Lloyd trainers so the twins' emission can never
-    diverge (only the assignment kernel differs)."""
+    """Trained codebook as per-dim rows, carrying empty clusters at n = 0."""
     dims = spark.range(EMB_DIM).select(F.col("id").cast("int").alias("dim"))
     return (
         cent.crossJoin(F.broadcast(dims))
@@ -1248,41 +1269,6 @@ def _emit_codebook(
         )
         .orderBy("cid", "dim")
     )
-
-
-@query(
-    "sim_kmeans_lloyd_arrow",
-    # No DuckDB oracle by nature (the assignment kernel is a Python batch
-    # transform); correctness is pinned by test_lloyd_arrow_matches_fold —
-    # row-for-row equality with the oracle-proven fold trainer at two SFs,
-    # scaled k, seeded random corpora and degenerate inputs.
-    tags=("pipeline", "similarity", "kmeans", "arrow", "kernel"),
-    bench=True,
-)
-def sim_kmeans_lloyd_arrow(
-    spark: SparkSession, sf_dir: str, k: int = KM_K
-) -> DataFrame:
-    """`sim_kmeans_lloyd` with the per-iteration nearest-centroid
-    ASSIGNMENT as an Arrow kernel — the training-side twin that closes the
-    kernel family (kNN serve, SemDeDup pairs, IVF-PQ encode were round 10;
-    Lloyd assignment dominated the remaining trainer wall).  Everything
-    else — init, decimal-exact centroid means, empty-cluster carry, final
-    per-dim emission — is the SAME shared code as the fold trainer
-    (`_lloyd_rounds`/`_lloyd_mean_rows`), so the twins differ only in how argmin-over-k is
-    evaluated: interpreted fold per (row, centroid) vs one BLAS matmul per
-    Arrow batch.
-
-    Scale shape: identical to the fold — broadcast k×64 model state,
-    map-side assignment, one k×dim partial-agg exchange per round; the
-    kernel adds a k-row collect per iteration (the codebook every trainer
-    already materializes)."""
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select(
-        "vec_id",
-        F.transform("embedding", lambda v: v.cast("double")).alias("e"),
-    )
-    cent, last_mean = _lloyd_arrow(spark, emb, k)
-    return _emit_codebook(spark, cent, last_mean)
 
 
 def _sqdist(e: Column, cv: Column) -> Column:
@@ -1330,7 +1316,7 @@ def _lloyd_apply_mean(cvs: list[list[float]], mean_rows: list) -> None:
     Precondition: every embedding has the centroids' length.  A ragged
     corpus would leave a cluster with means for missing or extra dims, or
     with per-dim means over different member counts; that fails here
-    with an assertion naming the precondition."""
+    with a ValueError naming the precondition."""
     by_cid: dict[int, dict[int, float]] = {}
     counts: dict[int, set[int]] = {}
     for r in mean_rows:
@@ -1338,12 +1324,13 @@ def _lloyd_apply_mean(cvs: list[list[float]], mean_rows: list) -> None:
         counts.setdefault(r.cid, set()).add(r.n)
     for cid, dims in by_cid.items():
         width = len(cvs[cid])
-        assert sorted(dims) == list(range(width)) and len(counts[cid]) == 1, (
-            f"ragged embeddings: cluster {cid} has means for {len(dims)} "
-            f"dims (highest {max(dims)}) over member counts "
-            f"{sorted(counts[cid])}; every embedding must have exactly the "
-            f"centroids' {width} dims"
-        )
+        if sorted(dims) != list(range(width)) or len(counts[cid]) != 1:
+            raise ValueError(
+                f"ragged embeddings: cluster {cid} has means for {len(dims)} "
+                f"dims (highest {max(dims)}) over member counts "
+                f"{sorted(counts[cid])}; every embedding must have exactly "
+                f"the centroids' {width} dims"
+            )
         cvs[cid] = [dims[j] for j in range(width)]
 
 
@@ -1363,30 +1350,26 @@ def _lloyd_frames(spark: SparkSession, cvs: list, mean_rows: list):
 
 
 def _lloyd_rounds(
-    spark: SparkSession, emb: DataFrame, k: int, arrow: bool
+    spark: SparkSession, emb: DataFrame, k: int
 ) -> tuple[list, list]:
     """KM_ITERS Lloyd rounds with the k-row model state held on the DRIVER
-    (r17, VERDICT r16 next #1): per round exactly ONE Spark job runs — the
-    corpus assignment feeding the decimal-exact per-(cid, dim) mean
-    aggregation, collected as k×64 rows — and the centroid update happens
-    driver-side on the collected values (MLlib's layout).  The old shape
-    kept centroids as chained k-row executor frames, which cost per round:
-    a localCheckpoint materialization job, a multi-job AQE collect of the
-    k-row join chain, and — dominating at bench SF — eager Catalyst
-    re-analysis of the ever-growing composed plan on every DataFrame call
-    (profiled at 24 s fold / 50 s arrow of driver time per build at sf0.1,
-    plans/r17/phaseprof.py).  Values are bit-identical: the means are the
-    same Spark aggregation, and doubles round-trip collect/createDataFrame
+    (MLlib's layout): per round exactly ONE Spark job runs — the corpus
+    assignment feeding the decimal-exact per-(cid, dim) mean aggregation,
+    collected as k×64 rows — and the centroid update happens driver-side
+    on the collected values.  Doubles round-trip collect/createDataFrame
     exactly.
 
-    ``arrow`` selects the assignment kernel: the oracle-exact index-ordered
-    fold (argmin over the broadcast codebook row) or the numpy matmul
-    kernel (||e||² − 2eCᵀ + ||C||², cid-sorted rows + first-min argmin =
-    the fold's smallest-cid tie-break).  Kernel distances differ in the
-    last ulp, so twin equality stays pinned by test_lloyd_arrow_matches_fold.
+    Assignment: each round's codebook (rows in cid order) broadcasts to
+    the Python workers and every Arrow batch runs the exact argmin kernel
+    (`_vector_kernels` ``argmin``: BLAS screen, fold-order recompute of the
+    near-ties), so each vector joins the cluster the index-ordered fold
+    picks, smallest cid on a tie — the oracle's ROW_NUMBER() rule.
 
     Returns ``(cvs, mean_rows)``: the final centroid arrays (index = cid)
     and the final round's collected mean rows."""
+    import numpy as np
+    import pandas as pd
+
     # deterministic init: the k lowest vec_ids, cid in vec_id order
     init_rows = (
         emb.orderBy("vec_id")
@@ -1397,74 +1380,32 @@ def _lloyd_rounds(
     mean_rows: list = []
     if not init_rows:
         # Empty corpus: zero centroids train; empty frames downstream
-        # instead of raising on 0-length model arrays (ADVICE r10 pattern).
+        # instead of raising on 0-length model arrays.
         return cvs, mean_rows
 
-    if arrow:
-        import numpy as np
-        import pandas as pd
-
-        for _ in range(KM_ITERS):
-            # rows are cid-ascending by construction (index = cid)
-            cids = np.arange(len(cvs), dtype=np.int32)
-            cmat = np.array(cvs, dtype=np.float64)
-            bstate = spark.sparkContext.broadcast((cids, cmat))
-
-            def _assign(it, _b=bstate):
-                b_cids, b_c = _b.value
-                c_sq = (b_c**2).sum(1)
-                for pdf in it:
-                    if len(pdf) == 0:
-                        continue
-                    mat = np.array(pdf["e"].tolist(), dtype=np.float64)
-                    d = (
-                        (mat**2).sum(1)[:, None]
-                        - 2.0 * (mat @ b_c.T)
-                        + c_sq[None, :]
-                    )
-                    yield pd.DataFrame(
-                        {"cid": b_cids[d.argmin(1)], "e": pdf["e"]}
-                    )
-
-            assigned = emb.select("e").mapInPandas(
-                _assign, "cid int, e array<double>"
-            )
-            mean_rows = _lloyd_mean_rows(assigned)
-            # The collect above IS the assignment job, so nothing pending
-            # references this round's model state (ADVICE r11 #2: without
-            # the destroy, one k×64-double broadcast per iteration
-            # accumulates on executors for the session lifetime).
-            bstate.destroy()
-            _lloyd_apply_mean(cvs, mean_rows)
-        return cvs, mean_rows
-
-    sqdist = _sqdist
+    argmin = _vector_kernels().argmin
     for _ in range(KM_ITERS):
-        # centroids -> one broadcast row holding array<struct<cid,cv>>,
-        # built from the driver-held state (LocalTableScan: the broadcast
-        # needs no executor job and embeds no prior-round lineage)
-        cent = spark.createDataFrame(
-            [(i, cv) for i, cv in enumerate(cvs)], "cid int, cv array<double>"
-        )
-        cents_row = cent.agg(
-            F.collect_list(F.struct("cid", "cv")).alias("cents")
-        )
-        assigned = (
-            emb.join(F.broadcast(cents_row))
-            .select(
-                F.array_min(
-                    F.transform(
-                        "cents",
-                        lambda c: F.struct(
-                            sqdist(F.col("e"), c["cv"]).alias("d"),
-                            c["cid"].alias("cid"),
-                        ),
-                    )
-                )["cid"].alias("cid"),
-                "e",
-            )
+        bstate = spark.sparkContext.broadcast(np.array(cvs, dtype=np.float64))
+
+        def _assign(it, _b=bstate):
+            b_c = _b.value
+            for pdf in it:
+                if len(pdf) == 0:
+                    continue
+                mat = np.array(pdf["e"].tolist(), dtype=np.float64)
+                yield pd.DataFrame(
+                    {"cid": argmin(mat, b_c).astype(np.int32), "e": pdf["e"]}
+                )
+
+        assigned = emb.select("e").mapInPandas(
+            _assign, "cid int, e array<double>"
         )
         mean_rows = _lloyd_mean_rows(assigned)
+        # The collect above IS the assignment job, so nothing pending
+        # references this round's model state; without the destroy, one
+        # k×64-double broadcast per iteration accumulates on executors for
+        # the session lifetime.
+        bstate.destroy()
         _lloyd_apply_mean(cvs, mean_rows)
     return cvs, mean_rows
 
@@ -1474,35 +1415,14 @@ def _lloyd(spark: SparkSession, emb: DataFrame, k: int = KM_K):
 
     Returns ``(cent, last_mean)``: the trained codebook (cid, cv) and the
     final per-(cid, dim) mean/count frame — LOCAL relations backed by the
-    driver-held model state (see `_lloyd_rounds` for the r17 layout and
-    the per-round scale shape: one k×dim decimal partial-agg exchange +
-    one k×64-row collect per round, constant in corpus size).  ``k``
-    defaults to the registered queries' KM_K; the bench scale leg passes
-    k ∝ corpus size — the SemDeDup/IVF block-size knob — so the broadcast
-    codebook and the k×64 partial-agg exchange are exercised at
-    production list counts, not just the fixture's 8."""
-    cvs, mean_rows = _lloyd_rounds(spark, emb, k, arrow=False)
-    return _lloyd_frames(spark, cvs, mean_rows)
-
-
-def _lloyd_arrow(spark: SparkSession, emb: DataFrame, k: int = KM_K):
-    """`_lloyd` with the ASSIGNMENT hot loop as an Arrow kernel (VERDICT
-    r10 ask #4): each round's k×64 codebook broadcasts to the Python
-    workers and each Arrow batch computes distances to ALL centroids as
-    one numpy matmul (||e||² − 2eCᵀ + ||C||² expansion), feeding the SAME
-    decimal-exact mean aggregation as the fold (`_lloyd_mean_rows`) — the
-    twins differ ONLY in the assignment kernel.  Same distributed shape:
-    map-side assignment over broadcast state, one k×dim partial-agg
-    exchange + one k×64-row collect per round.
-
-    Tie-break parity: the fold's array_min(struct(d, cid)) picks the
-    smallest cid on equal distance; the kernel's centroid matrix is
-    cid-sorted and numpy argmin returns the first minimum — same rule.
-    Distances differ from the fold in the last ulp (BLAS vs sequential
-    fold), so twin equality is an empirical bit-level statement pinned by
-    test_lloyd_arrow_matches_fold on fixtures, random corpora and
-    degenerate inputs."""
-    cvs, mean_rows = _lloyd_rounds(spark, emb, k, arrow=True)
+    driver-held model state (see `_lloyd_rounds` for the per-round scale
+    shape: one k×dim decimal partial-agg exchange + one k×64-row collect
+    per round, constant in corpus size).  ``k`` defaults to the registered
+    queries' KM_K; the bench scale leg passes k ∝ corpus size — the
+    SemDeDup/IVF block-size knob — so the broadcast codebook and the k×64
+    partial-agg exchange are exercised at production list counts, not
+    just the fixture's 8."""
+    cvs, mean_rows = _lloyd_rounds(spark, emb, k)
     return _lloyd_frames(spark, cvs, mean_rows)
 
 
@@ -1947,22 +1867,23 @@ def sim_ivfpq_trained(
 
     Scale shape (the plan you'd run at 100 TB):
     - training shuffles k×64 decimal partials per Lloyd round (`_lloyd`);
-    - corpus assignment AND residuals AND encoding are all map-side over
-      broadcast state (centroid row + sub→codewords map; argmin is an
-      array_min fold, not a window — nothing corpus-sized shuffles to pick
-      a code);
+    - corpus assignment AND residuals AND encoding are all map-side Arrow
+      batch kernels over broadcast model state (`_ivfpq_train_frames`;
+      every argmin is the exact kernel, not a window — nothing
+      corpus-sized shuffles to pick a code);
     - the serving LUT is (queries × nprobe × 8 × n_codes) rows, hard-capped
       by QUERY_BUDGET, broadcast;
     - the candidate scan joins codes⋈LUT on (cid, sub, code) — an equi-join
       whose corpus side carries ONLY (vec_id, cid, sub, code) ints, 32×
       smaller than the embeddings; with the corpus laid out by cid the join
       prunes to probed lists, so work per query is |corpus| × nprobe/k.
-    The only window functions are the oracle-side argmin twin and the final
+    The only window functions are the ADC shortlist and the final
     per-query top-k (WindowGroupLimit).  Arithmetic contract: distances are
-    index-ordered double folds; LUT entries round to DECIMAL(28,9) so the
-    8-entry ADC sums are order-insensitive; codebook means go through
-    DECIMAL(18,6) — DuckDB's unrolled CTE chain reproduces every value
-    bit-exactly.
+    index-ordered double folds (the kernels' argmins pick exactly the
+    fold's winner, smallest id on a tie); LUT entries round to
+    DECIMAL(28,9) so the 8-entry ADC sums are order-insensitive; codebook
+    means go through DECIMAL(18,6) — DuckDB's unrolled CTE chain
+    reproduces every value bit-exactly.
     """
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select(
@@ -1978,121 +1899,55 @@ def sim_ivfpq_trained(
     )
 
 
-def _ivfpq_res_arrow(
-    spark: SparkSession, emb: DataFrame, cent: DataFrame
-) -> DataFrame:
-    """(vec_id, label, cid, r) — corpus coarse assignment + residual as an
-    Arrow kernel: per batch, distances to all k centroids via the
-    ||e||² − 2eCᵀ + ||C||² expansion, residual as one matrix subtract
-    against the winning centroid rows.  Tie-break parity with the fold's
-    array_min(struct(d, cid)): the centroid matrix is cid-sorted and numpy
-    argmin returns the first minimum.  The residual is x − c elementwise
-    IEEE double — bit-identical to the fold's zip_with given the same cid.
-    Model state is one broadcast of the k×64 codebook (the collect every
-    trainer already does); everything else is map-side, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    cent_rows = cent.collect()  # k x 64 doubles of model state
-    if not cent_rows:
-        # Empty corpus trains zero centroids (cent is empty iff emb is);
-        # return the fold twin's empty frame shape (ADVICE r10 pattern).
-        return spark.createDataFrame(
-            [], "vec_id long, label int, cid int, r array<double>"
-        )
-    order = np.argsort([r.cid for r in cent_rows])
-    cids = np.array([cent_rows[i].cid for i in order], dtype=np.int32)
-    cmat = np.array([cent_rows[i].cv for i in order], dtype=np.float64)
-    bstate = spark.sparkContext.broadcast((cids, cmat))
-
-    def _assign(it):
-        b_cids, b_c = bstate.value
-        c_sq = (b_c**2).sum(1)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf["e"].tolist(), dtype=np.float64)
-            d = (
-                (mat**2).sum(1)[:, None]
-                - 2.0 * (mat @ b_c.T)
-                + c_sq[None, :]
-            )
-            idx = d.argmin(1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "label": pdf["label"].to_numpy(),
-                    "cid": b_cids[idx],
-                    "r": list(mat - b_c[idx]),
-                }
-            )
-
-    return emb.select("vec_id", "label", "e").mapInPandas(
-        _assign, "vec_id long, label int, cid int, r array<double>"
-    )
-
-
-def _ivfpq_train_frames(
-    spark: SparkSession,
-    emb: DataFrame,
-    k: int = KM_K,
-    lloyd=None,
-    assign_kernel: bool = False,
-):
+def _ivfpq_train_frames(spark: SparkSession, emb: DataFrame, k: int = KM_K):
     """Training half of IVF-PQ (shared by the end-to-end query and the
     persisted-index builder): Lloyd coarse quantizer, residual PQ codebook,
     8-byte codes per corpus vector.  ``emb`` is (vec_id, label, e).
     Returns ``(cent, cents_row, cmap_row, rcarr, codes)`` — the model
     frames `_ivfpq_serve_stage` and `build_ivfpq_index` consume.
-    ``lloyd`` selects the coarse-quantizer trainer: the oracle-exact fold
-    `_lloyd` (default) or the Arrow-kernel `_lloyd_arrow` (equality-pinned
-    twin — `sim_ivfpq_trained_arrow` passes it so BOTH trainer hot loops
-    run vectorized).  ``assign_kernel`` swaps the CORPUS residual
-    assignment (the one remaining per-vector k-argmin fold after the
-    round-11 Lloyd kernel — profiled at 2.3 s of the 8 s warm training at
-    32k/k=128, VERDICT r11 ask #5) for the same numpy matmul argmin the
-    Lloyd kernel runs; the residual subtraction is elementwise IEEE
-    double in both paths, so given bit-agreeing assignments the codeword
-    means downstream are identical plans over identical rows."""
-    cent, _ = (lloyd or _lloyd)(spark, emb.select("vec_id", "e"), k)
+
+    Two Arrow passes over the corpus run the per-vector hot loops with the
+    exact argmin kernel (`_vector_kernels`): the first assigns each vector
+    to its nearest centroid and emits its residual, feeding the
+    decimal-exact PQ codeword means; the second ENCODES — coarse argmin,
+    residual, and one code argmin per 8-dim subvector against that sub's
+    codewords (label order, so a tie goes to the smallest label).  The
+    residual is x − c elementwise IEEE double, as in the oracle.  Model
+    state (k×64 centroids, n_codes×8×8 codewords) is broadcast, the
+    codebook-sized collect every trainer already does; nothing
+    corpus-sized shuffles."""
+    import numpy as np
+    import pandas as pd
+
+    cvs, mean_rows = _lloyd_rounds(spark, emb.select("vec_id", "e"), k)
+    cent, _ = _lloyd_frames(spark, cvs, mean_rows)
     cents_row = cent.agg(F.collect_list(F.struct("cid", "cv")).alias("cents"))
     cmap_row = cent.agg(
         F.map_from_entries(F.collect_list(F.struct("cid", "cv"))).alias("cmap")
     )
-    dist_structs = F.transform(
-        "cents",
-        lambda c: F.struct(
-            _sqdist(F.col("e"), c["cv"]).alias("d"), c["cid"].alias("cid")
-        ),
+    argmin = _vector_kernels().argmin
+    # rows in cid order; an empty corpus trains none and runs no batch
+    bcent = spark.sparkContext.broadcast(np.array(cvs, dtype=np.float64))
+
+    def _residuals(it):
+        b_c = bcent.value
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            mat = np.array(pdf["e"].tolist(), dtype=np.float64)
+            idx = argmin(mat, b_c)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "label": pdf["label"].to_numpy(),
+                    "cid": idx.astype(np.int32),
+                    "r": list(mat - b_c[idx]),
+                }
+            )
+
+    res = emb.select("vec_id", "label", "e").mapInPandas(
+        _residuals, "vec_id long, label int, cid int, r array<double>"
     )
-    with_state = emb.join(F.broadcast(cents_row)).join(F.broadcast(cmap_row))
-    if assign_kernel:
-        res = _ivfpq_res_arrow(spark, emb, cent)
-    else:
-        # corpus: nearest-list assignment (map-side argmin) then residual
-        res = with_state.select(
-            "vec_id",
-            "label",
-            F.array_min(dist_structs)["cid"].alias("cid"),
-            "e",
-            "cmap",
-        ).select(
-            "vec_id",
-            "label",
-            "cid",
-            F.zip_with(
-                "e", F.element_at("cmap", F.col("cid")), lambda x, c: x - c
-            ).alias("r"),
-        )
-    # r16 note: `res` (coarse assignment + residual) feeds TWO consumers
-    # (the PQ-codebook aggregation and the encode branch) and looks like a
-    # checkpoint candidate — but an isolated A/B at the 32k/k=128
-    # vector-scale leg read the checkpointed version WORSE (warm 29-30 s
-    # stable recomputed vs 33-71 s cached, cold 56 -> 321 s): cutting the
-    # lineage here breaks whole-stage pipelining of the fold into both
-    # consumers' partial aggregates and nests the materialization inside
-    # rcarr's own lazy-checkpoint/broadcast build.  Deliberately left
-    # recomputed.
     # deterministic PQ codebook over residual subvectors
     rcent = (
         res.select("label", F.posexplode("r").alias("pos0", "v"))
@@ -2106,165 +1961,53 @@ def _ivfpq_train_frames(
             ).alias("c")
         )
     )
-    # n_labels x 8 rows of model state; checkpoint so the TWO broadcast
-    # consumers (corpus codebook map + query LUT) don't each recompute the
-    # corpus-residual aggregation behind it
+    # n_labels x 8 rows of model state, consumed three times (the collect
+    # below, the serving LUT broadcast, the index writer): the lazy
+    # checkpoint computes the corpus-residual aggregation behind it once,
+    # inside the collect's own job.
     rcarr = rcent.groupBy("label", "sub").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("p", "c"))), lambda s: s["c"]
         ).alias("cv")
-    # Lazy (r16): still computed once per execution and shared by the TWO
-    # broadcast consumers (corpus codebook map + query LUT) — concurrent
-    # broadcast builds dedupe through the block manager's per-partition
-    # locks — but without a dedicated eager job (one driver round trip
-    # fewer; the arrow twin's rcarr.collect() materializes it the same way).
     ).localCheckpoint(eager=False)
-    # codebook folds to ONE broadcast row: sub -> [(label, codeword)]
-    cb_row = (
-        rcarr.groupBy("sub")
-        .agg(F.collect_list(F.struct("label", "cv")).alias("entries"))
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("sub", "entries"))
-            ).alias("cb")
-        )
-    )
-    # encode: map-side argmin over the broadcast codebook — no window
-    rsv = res.select(
-        "vec_id",
-        "cid",
-        F.explode(F.sequence(F.lit(0), F.lit(7))).alias("sub"),
-        "r",
-    ).select(
-        "vec_id", "cid", "sub", F.slice("r", F.col("sub") * 8 + 1, 8).alias("v8")
-    )
-    codes = rsv.join(F.broadcast(cb_row)).select(
-        "vec_id",
-        "cid",
-        "sub",
-        F.array_min(
-            F.transform(
-                F.element_at("cb", F.col("sub")),
-                lambda en: F.struct(
-                    _sub_l2(F.col("v8"), en["cv"]).alias("d"),
-                    en["label"].alias("code"),
-                ),
-            )
-        )["code"].alias("code"),
-    )
-    return cent, cents_row, cmap_row, rcarr, codes
-
-
-@query(
-    "sim_ivfpq_trained_arrow",
-    # Rows-only by nature (Python batch kernel); correctness is pinned by
-    # test_ivfpq_arrow_matches_fold — row-for-row equality with the
-    # oracle-proven fold variant at two SFs.
-    tags=("pipeline", "similarity", "kmeans", "ivf", "pq", "ann", "arrow",
-          "kernel"),
-    bench=True,
-)
-def sim_ivfpq_trained_arrow(
-    spark: SparkSession, sf_dir: str, k: int = KM_K
-) -> DataFrame:
-    """IVF-PQ with the corpus ENCODE as an Arrow kernel — the production
-    twin of `sim_ivfpq_trained`.  Training runs the SAME `_ivfpq_train_frames`
-    program with the Arrow Lloyd assignment kernel (`_lloyd_arrow`,
-    round 11: training dominated the end-to-end after the encode swap —
-    Amdahl) AND the Arrow corpus-residual assignment (`_ivfpq_res_arrow`,
-    round 12: the last per-vector k-argmin fold in the training path,
-    2.3 s of the 8 s warm training at 32k/k=128) feeding the shared
-    decimal-exact PQ codeword means; the fold `codes` plan is simply never
-    executed, and the serve stage (LUT, ADC join, exact re-rank) is the
-    SAME DataFrame program.  Also swapped
-    since round 10 is the per-vector encode hot loop —
-    coarse-list argmin, residual, and 8 per-sub code argmins — which runs
-    as ONE `mapInPandas` pass: per Arrow batch, distances to all k
-    centroids via the ||e||² − 2eCᵀ + ||C||² expansion, residuals as one
-    matrix subtract, and per-sub code argmins via the same expansion
-    against each 8-dim codeword matrix.  Model state (k×64 centroids +
-    n_codes×8×8 codewords) is collected and broadcast — the codebook-sized
-    collect every trainer already does.
-
-    Tie-break parity: the fold's `array_min(struct(d, cid/code))` picks
-    the smallest id on equal distance; the kernel sorts ids ascending and
-    numpy argmin returns the first minimum — same rule.  Distances differ
-    from the fold in the last ulp (BLAS vs sequential fold), so equality
-    with the fold twin is an empirical bit-level statement on the
-    fixtures, pinned by the test at two SFs."""
-    import numpy as np
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda v: v.cast("double")).alias("e"),
-    )
-    cent, cents_row, cmap_row, rcarr, _codes_fold = _ivfpq_train_frames(
-        spark, emb, k, lloyd=_lloyd_arrow, assign_kernel=True
-    )
-    cent_rows = cent.collect()  # k x 64 doubles of model state
-    if not cent_rows:
-        # Empty corpus trains zero centroids; the fold twin's joins over the
-        # empty codes frame yield an empty result, while reshaping 0-length
-        # 1-D arrays below would raise — match the fold (ADVICE r10).
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, l2_dist double, rk long"
-        )
-    order = np.argsort([r.cid for r in cent_rows])
-    cids = np.array([cent_rows[i].cid for i in order], dtype=np.int32)
-    cmat = np.array([cent_rows[i].cv for i in order], dtype=np.float64)
-    rc_rows = rcarr.collect()  # n_codes x 8 subs of model state
-    cb: dict[int, tuple] = {}
+    rc_rows = rcarr.collect()
+    cb = []
     for sub in range(8):
-        ent = sorted(
-            ((r.label, r.cv) for r in rc_rows if r.sub == sub),
-            key=lambda x: x[0],
+        ent = sorted((r.label, r.cv) for r in rc_rows if r.sub == sub)
+        cb.append(
+            (
+                np.array([x[0] for x in ent], dtype=np.int32),
+                np.array([x[1] for x in ent], dtype=np.float64),
+            )
         )
-        cb[sub] = (
-            np.array([x[0] for x in ent], dtype=np.int32),
-            np.array([x[1] for x in ent], dtype=np.float64),
-        )
-    bstate = spark.sparkContext.broadcast((cids, cmat, cb))
+    bcb = spark.sparkContext.broadcast(cb)
 
     def _encode(it):
-        b_cids, b_c, b_cb = bstate.value
-        c_sq = (b_c**2).sum(1)
+        b_c, b_cb = bcent.value, bcb.value
         for pdf in it:
             if len(pdf) == 0:
                 continue
             mat = np.array(pdf["e"].tolist(), dtype=np.float64)
-            d = (mat**2).sum(1)[:, None] - 2.0 * (mat @ b_c.T) + c_sq[None, :]
-            idx = d.argmin(1)
-            res = mat - b_c[idx]
-            code_cols = []
-            for sub in range(8):
-                codes_l, cw = b_cb[sub]
-                v = res[:, sub * 8 : (sub + 1) * 8]
-                dd = (
-                    (v**2).sum(1)[:, None]
-                    - 2.0 * (v @ cw.T)
-                    + (cw**2).sum(1)[None, :]
-                )
-                code_cols.append(codes_l[dd.argmin(1)])
+            idx = argmin(mat, b_c)
+            r = mat - b_c[idx]
+            code_cols = [
+                labels[argmin(r[:, sub * 8 : (sub + 1) * 8], cw)]
+                for sub, (labels, cw) in enumerate(b_cb)
+            ]
             n = len(mat)
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(pdf["vec_id"].to_numpy(), 8),
-                    "cid": np.repeat(b_cids[idx], 8),
+                    "cid": np.repeat(idx.astype(np.int32), 8),
                     "sub": np.tile(np.arange(8, dtype=np.int32), n),
                     "code": np.stack(code_cols, axis=1).ravel(),
                 }
             )
 
-    codes = (
-        emb.select("vec_id", "e")
-        .mapInPandas(_encode, "vec_id long, cid int, sub int, code int")
+    codes = emb.select("vec_id", "e").mapInPandas(
+        _encode, "vec_id long, cid int, sub int, code int"
     )
-    return _ivfpq_serve_stage(
-        emb.select("vec_id", "e"), cents_row, cmap_row, rcarr, codes
-    )
+    return cent, cents_row, cmap_row, rcarr, codes
 
 
 def _ivfpq_serve_stage(
@@ -2767,7 +2510,7 @@ def sim_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     search is bounded — the overlap test pins an order of magnitude above
     the random baseline, not production recall.)
 
-    Scale shape: identical to sim_knn_bruteforce — the corpus streams and
+    Scale shape: that of sim_knn_bruteforce_arrow — the corpus streams and
     never shuffles; the only difference is 4x less arithmetic and (with a
     prefix-projected parquet column) 4x less I/O per scan.  Quality vs
     the full-width search is pinned by
@@ -2819,12 +2562,10 @@ SEMDEDUP_COS = 0.3  # same tail-hitting threshold as dedup_embedding_cosine
 
 
 def _semdedup_assigned(spark: SparkSession, sf_dir: str, k: int):
-    """Shared SemDeDup front half: train the coarse quantizer (`_lloyd`),
-    assign every vector to its nearest centroid map-side, and carry the
-    precomputed norm.  Returns (vec_id, e, nrm, cid) — consumed by the
-    oracle-exact fold pair stage (`sim_semantic_dedup`) and the Arrow
-    kernel twin (`sim_semantic_dedup_arrow`), so the two variants differ
-    ONLY in the within-cluster pair kernel, never in clustering."""
+    """SemDeDup front half: train the coarse quantizer (`_lloyd`) and
+    assign every vector to its nearest centroid map-side (an index-ordered
+    fold argmin over the broadcast codebook, smallest cid on a tie).
+    Returns (vec_id, e, cid)."""
     t = Tables(spark, sf_dir)
     emb = t.embeddings.select(
         "vec_id",
@@ -2839,11 +2580,9 @@ def _semdedup_assigned(spark: SparkSession, sf_dir: str, k: int):
         ),
     )
     return emb.join(F.broadcast(cents_row)).select(
-        "vec_id",
-        "e",
-        norm(F.col("e")).alias("nrm"),
-        F.array_min(dist_structs)["cid"].alias("cid"),
+        "vec_id", "e", F.array_min(dist_structs)["cid"].alias("cid")
     )
+
 
 _SQL_SEM_COS = (
     "list_sum(list_transform(range(1, 65), i -> "
@@ -2909,114 +2648,50 @@ def sim_semantic_dedup(
 
     Scale shape: training is `_lloyd` (per-round shuffles carry k x dim
     decimal partials only); final assignment is a map-side array_min over
-    the broadcast codebook; the pair search is an EQUI-join on cid —
+    the broadcast codebook; the pair search is ONE exchange on cid, and
+    each cluster block flows through `applyInPandas` as one group —
     quadratic only within a cluster, the knob being k (more clusters =
-    smaller blocks), exactly how SemDeDup runs at web scale.  The drop
-    rule (exists a similar neighbor with smaller id) needs one semi-join
-    — no iterative connected components — and is deterministic.
-    Arithmetic: cosine is the index-ordered double fold shared with the
-    ANN family, so the threshold compare is bit-identical in DuckDB."""
-    # r16: the clustering front half (Lloyd training + the per-vector
-    # k-argmin fold) feeds THREE consumers (both pair sides and the final
-    # report join); without materialization each consumer re-runs the
-    # corpus assignment fold — the query's single most expensive stage,
-    # 3x.  One lazy checkpoint computes it once per execution and shares
-    # the cache (persist(MEMORY_AND_DISK) at cluster scale, the standard
-    # shared-relation contract); rows identical.
-    assigned = _semdedup_assigned(spark, sf_dir, k).localCheckpoint(
-        eager=False
-    )
-    a = assigned.select(
-        F.col("cid"),
-        F.col("vec_id").alias("ai"),
-        F.col("e").alias("ae"),
-        F.col("nrm").alias("an"),
-    )
-    b = assigned.select(
-        F.col("cid"),
-        F.col("vec_id").alias("bi"),
-        F.col("e").alias("be"),
-        F.col("nrm").alias("bn"),
-    )
-    dropped = (
-        a.join(b, "cid")
-        .filter(F.col("ai") < F.col("bi"))
-        .filter(
-            dot(F.col("ae"), F.col("be")) / (F.col("an") * F.col("bn"))
-            >= SEMDEDUP_COS
-        )
-        .select(F.col("bi").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(dropped.withColumn("is_dropped", F.lit(1)), "vec_id", "left")
-        .groupBy("cid")
-        .agg(
-            F.count("*").cast("bigint").alias("n_vectors"),
-            F.count("is_dropped").cast("bigint").alias("n_dropped"),
-        )
-        .orderBy("cid")
-    )
+    smaller blocks; the bench vector_scale leg runs k = n/256, so blocks
+    stay ~256 rows regardless of corpus size), which is how SemDeDup runs
+    at web scale (BLAS within blocks).  The drop rule (exists a similar
+    neighbor with smaller id) needs no iterative connected components and
+    is deterministic.
 
-
-@query(
-    "sim_semantic_dedup_arrow",
-    # Rows-only by nature (Python batch kernel, not SQL); correctness is
-    # pinned by test_semdedup_arrow_matches_fold — row-for-row equality
-    # with the oracle-proven fold variant at two SFs.
-    tags=("pipeline", "similarity", "dedup", "kmeans", "semantic", "arrow",
-          "kernel"),
-    bench=True,
-)
-def sim_semantic_dedup_arrow(
-    spark: SparkSession, sf_dir: str, k: int = KM_K
-) -> DataFrame:
-    """SemDeDup with the within-cluster pair stage as an Arrow kernel —
-    the production twin of `sim_semantic_dedup`, sharing its EXACT
-    clustering front half (`_semdedup_assigned`: same `_lloyd` codebook,
-    same map-side fold argmin, so cluster membership is bit-identical to
-    the oracle-proven variant).  Each cluster block then flows through
-    `applyInPandas` as ONE group: a numpy gram matrix over the block's
-    vectors, upper-triangle thresholding, and the drop rule (has a
-    similar lower-id neighbor) — which is how SemDeDup actually runs at
-    web scale (FAISS-style BLAS within blocks), vs the fold variant's
-    per-pair interpreted cosines.
-
-    Scale shape: the block size is n/k, bounded by the k knob (the bench
-    vector_scale leg runs k = n/256, so blocks stay ~256 rows and each
-    gram matrix is ~256x256 regardless of corpus size); the shuffle is
-    the SAME single exchange on cid the fold variant pays — the kernel
-    swap changes per-block compute only, not the plan shape."""
+    Exactness: the block's gram matrix only SCREENS pairs; the exact
+    threshold kernel (`_vector_kernels` ``over_threshold``) recomputes
+    every pair within KNN_SCREEN_MARGIN of SEMDEDUP_COS with the oracle's
+    index-ordered fold cosine, so each drop decision is the oracle's.  A
+    zero-norm vector that has a pair is outside the cosine's domain and
+    fails loudly."""
     import numpy as np
     import pandas as pd
+
+    kern = _vector_kernels()
+    fold_dot, over_threshold = kern.fold_dot, kern.over_threshold
 
     def _per_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
         mat = np.array(pdf["e"].tolist(), dtype=np.float64)[order]
-        nrm = pdf["nrm"].to_numpy()[order]
-        if not nrm.all():
-            # Same domain contract as the fold twin: its cosine division
-            # THROWS under ANSI mode on a zero-norm vector — fail loudly.
+        nrm = np.sqrt(fold_dot(mat, mat))
+        if len(ids) > 1 and not nrm.all():  # a pair's cosine would divide by 0
             raise ValueError(
                 f"zero-norm embedding(s): vec_id {ids[nrm == 0][:5]}"
             )
-        gram = (mat @ mat.T) / np.outer(nrm, nrm)
-        iu = np.triu_indices(len(ids), k=1)  # row < col => id[row] < id[col]
-        hit = gram[iu] >= SEMDEDUP_COS
-        n_dropped = len(np.unique(iu[1][hit]))
+        # rows are id-sorted, so j (> i) is the higher id of each pair
+        _, j = over_threshold(mat, nrm, SEMDEDUP_COS)
         return pd.DataFrame(
             {
                 "cid": [int(pdf["cid"].iloc[0])],
                 "n_vectors": [len(ids)],
-                "n_dropped": [n_dropped],
+                "n_dropped": [len(np.unique(j))],
             }
         )
 
-    assigned = _semdedup_assigned(spark, sf_dir, k)
     return (
-        assigned.groupBy("cid")
+        _semdedup_assigned(spark, sf_dir, k)
+        .groupBy("cid")
         .applyInPandas(_per_cluster, "cid int, n_vectors long, n_dropped long")
         .orderBy("cid")
     )
@@ -3169,7 +2844,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivial).  This is the retrieval shape every two-tower/CLIP-style
     data pipeline runs between epochs.
 
-    Scale shape: identical posture to sim_knn_bruteforce — the query set
+    Scale shape: the posture of sim_knn_bruteforce_arrow — the query set
     is hard-capped (QUERY_BUDGET) and broadcasts; the label-mismatch
     filter and cosine are map-side over the streamed corpus; per-query
     top-k goes through WindowGroupLimit.  At 100 TB the corpus scan
@@ -3225,7 +2900,7 @@ def _ann_recall_oracle() -> str:
     bit-exact), so ANN recall itself becomes a driver-provable number."""
     from auron_spark.registry import REGISTRY as _R
 
-    brute = _R["sim_knn_bruteforce"].oracle
+    brute = _R["sim_knn_bruteforce_arrow"].oracle
     ivf = _R["sim_knn_ivf_trained"].oracle
     return f"""
     WITH b AS ({brute}), v AS ({ivf})
@@ -3260,7 +2935,7 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracles verbatim so the report can never drift from the tiers."""
     from auron_spark.registry import REGISTRY as _R
 
-    brute = _R["sim_knn_bruteforce"].build(spark, sf_dir)
+    brute = _R["sim_knn_bruteforce_arrow"].build(spark, sf_dir)
     ivf = _R["sim_knn_ivf_trained"].build(spark, sf_dir)
     b = brute.select("query_id", "neighbor_id")
     v = ivf.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
@@ -4111,7 +3786,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus-sized work is exactly one brute-force scoring
     pass against ONE query vector (TakeOrdered top-12, the
-    `sim_knn_bruteforce` shape); the pool and its 12x12 pairwise-sim
+    exact brute-force shape); the pool and its 12x12 pairwise-sim
     table are then eagerly localCheckpoint-ed, so the greedy loop builds
     on two constant-size in-memory relations.  Without the checkpoint the
     loop NESTS the un-materialized pool plan into every round's
@@ -4247,7 +3922,7 @@ def sim_vector_analogy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the target vector is a 1-row broadcast (three dim-table
     lookups + map-side arithmetic); scoring is one streamed corpus pass;
     top-5 is TakeOrdered with a vec_id tiebreak — the
-    `sim_knn_bruteforce` shape with a synthesized query."""
+    exact brute-force shape with a synthesized query."""
     from auron_spark.tables import Tables as _T
 
     t = _T(spark, sf_dir)
@@ -4404,7 +4079,7 @@ _SWEEP_PROBES = (1, 2, 4)
 def _nprobe_sweep_oracle() -> str:
     from auron_spark.registry import REGISTRY as _R
 
-    brute = _R["sim_knn_bruteforce"].oracle
+    brute = _R["sim_knn_bruteforce_arrow"].oracle
     return f"""
     WITH b AS ({brute}),
     cents AS (
@@ -4578,7 +4253,7 @@ def sim_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_cand")
     )
     brute = (
-        _R["sim_knn_bruteforce"]
+        _R["sim_knn_bruteforce_arrow"]
         .build(spark, sf_dir)
         .select("query_id", "neighbor_id")
     )

@@ -33,8 +33,8 @@ from auron_spark.pipeline.dedup import (
     _SQL_SHINGLES,
     _doc_shingles,
     _sql_signature_cte,
-    connected_components,
     lsh_candidate_pairs,
+    lsh_components,
     minhash_signature,
     shingles,
 )
@@ -703,21 +703,12 @@ def dedup_connected_components_scaled(
     fan-out as every scale proof, map-side before shingling."""
     t = Tables(spark, sf_dir)
     docs = _scaled_docs_10x(spark, t)
-    pairs = lsh_candidate_pairs(
-        minhash_signature(
-            docs.select(
-                "doc_id", F.split(F.lower(F.col("text")), " ").alias("w")
-            ).select("doc_id", F.explode(shingles()).alias("shingle"))
-        )
-    ).localCheckpoint(eager=False)
-    edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .union(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .persist()
-    )
-    labels = connected_components(docs.select("doc_id"), edges)
-    edges.unpersist()
-    return labels.orderBy("doc_id")
+    return lsh_components(
+        docs.select("doc_id"),
+        docs.select(
+            "doc_id", F.split(F.lower(F.col("text")), " ").alias("w")
+        ).select("doc_id", F.explode(shingles()).alias("shingle")),
+    ).orderBy("doc_id")
 
 
 # 10x derived-NAMES corpus for the edit-distance family (the fourth exact

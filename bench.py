@@ -94,12 +94,9 @@ if _REPO not in sys.path:
 # pollutes anything sharing their JVM.  Run last, in their own session.
 _TRAINERS = {
     "sim_kmeans_lloyd",
-    "sim_kmeans_lloyd_arrow",
     "sim_knn_ivf_trained",
     "sim_ivfpq_trained",
-    "sim_ivfpq_trained_arrow",
     "sim_semantic_dedup",
-    "sim_semantic_dedup_arrow",
     "dedup_canonical_selection",
 }
 # Light relational shapes: the round-over-round comparable set.  "ds_"
@@ -147,23 +144,11 @@ _VECTOR_SCALE_QUERIES = (
     "sim_knn_bruteforce_arrow",
     "dedup_embedding_cosine",
 )
-# The quadratic F.aggregate FOLD twin is GC-bound at 32k vectors and runs
-# warm-slower-than-cold when it shares a JVM with the trainers (r12
-# session-pollution diagnosis; VERDICT r12 ask #6b).  Stabilization
-# decision: it measures in its OWN child JVM (fresh session, nothing
-# before it), while the Arrow serving kernel stays the in-series row —
-# the fold exists as the oracle-provable twin, not the serve path.  Its
-# numbers still merge into the vector_scale section/subtotal so the
-# round-over-round series keeps its membership.
-_VECTOR_FOLD_QUERIES = ("sim_knn_bruteforce",)
 _VECTOR_SCALE_KSCALED = (
     "sim_kmeans_lloyd",
-    "sim_kmeans_lloyd_arrow",
     "sim_knn_ivf_trained",
     "sim_ivfpq_trained",
-    "sim_ivfpq_trained_arrow",
     "sim_semantic_dedup",
-    "sim_semantic_dedup_arrow",
 )
 
 
@@ -180,10 +165,21 @@ _PER_QUERY_FACTOR = 2.5
 _PER_QUERY_FLOOR_SEC = 0.25
 
 
+def _scale_key(sf_dir: str) -> dict:
+    """What a bracket record's numbers depend on: the sf dir, the
+    text/vector corpus sizes and the box's core count."""
+    return {
+        "sf_dir": sf_dir,
+        "text_docs": int(os.environ.get("SPARK_GRAFT_TEXT_DOCS", "65536")),
+        "vector_vecs": int(os.environ.get("SPARK_GRAFT_VECTOR_VECS", "32768")),
+        "cpus": os.cpu_count(),
+    }
+
+
 def _load_brackets(scale_key: dict) -> dict:
     """Load the committed bracket record, DISCARDING it when the run's
-    scale knobs (sf dir, text/vector corpus sizes) differ — subtotals at
-    another SF would spuriously trip (or never trip) every trigger."""
+    scale key (`_scale_key`) differs — subtotals at another SF or on
+    another box would spuriously trip (or never trip) every trigger."""
     try:
         rec = json.loads(Path(_BRACKETS_PATH).read_text())
     except (OSError, ValueError):
@@ -196,8 +192,9 @@ def _load_brackets(scale_key: dict) -> dict:
 def _persist_brackets(brackets: dict) -> bool:
     """Write the min-merged bracket record — UNLESS the file on disk was
     recorded at a different `_scale` (VERDICT r16 wrong #4: an sf0.01 /
-    reduced-corpus run must never overwrite the committed sf0.1 record;
-    r16 caught that relapse by review, this makes it impossible).  The
+    reduced-corpus run, or a run on a box with another core count, must
+    never overwrite the committed record; r16 caught that relapse by
+    review, this makes it impossible).  The
     in-memory record still adjudicated this run; it just doesn't persist.
     Returns whether the write happened."""
     try:
@@ -480,8 +477,6 @@ def _run_group(group: str, sf_dir: str, second: str,
     k_scaled: int | None = None
     if group == "text_scale":
         specs = {n: all_specs[n] for n in _TEXT_SCALE_QUERIES}
-    elif group == "vector_fold":
-        specs = {n: all_specs[n] for n in _VECTOR_FOLD_QUERIES}
     elif group == "vector_scale":
         from types import SimpleNamespace
 
@@ -647,11 +642,7 @@ def main() -> None:
     warm2: dict[str, float] = {}
     subtotals: dict[str, float] = {}
     index_build: dict[str, float] = {}
-    brackets = _load_brackets({
-        "sf_dir": sf_dir,
-        "text_docs": int(os.environ.get("SPARK_GRAFT_TEXT_DOCS", "65536")),
-        "vector_vecs": int(os.environ.get("SPARK_GRAFT_VECTOR_VECS", "32768")),
-    })
+    brackets = _load_brackets(_scale_key(sf_dir))
     adjudications: list[dict] = []
     for group in ("relational", "pipeline", "trainers"):
         res = _child(["--group", group, run_dir, second_dir])
@@ -701,22 +692,10 @@ def main() -> None:
     if vec_vecs > 0:
         vcorpus = f"{_SHARD_ROOT}/veccorpus_{vec_vecs}"
         vbuilt = _child(["--veccorpus", vcorpus, str(vec_vecs)])
-        # The quadratic fold twin first, alone in a fresh JVM (see
-        # _VECTOR_FOLD_QUERIES), then the in-series group.
-        fold = _child(["--group", "vector_fold", vcorpus, ""])
         res = _child(["--group", "vector_scale", vcorpus, ""])
-        for key in ("warm", "warm_runs", "cold"):
-            res[key].update(fold[key])
-
-        def _rerun_vector() -> dict:
-            f2 = _child(["--group", "vector_fold", vcorpus, "", "rerun"])
-            r2 = _child(["--group", "vector_scale", vcorpus, "", "rerun"])
-            for key in ("warm", "warm_runs", "cold"):
-                r2[key].update(f2[key])
-            return r2
-
         res, verdict = _adjudicate(
-            "vector_scale", res, brackets, _rerun_vector
+            "vector_scale", res, brackets,
+            lambda: _child(["--group", "vector_scale", vcorpus, "", "rerun"]),
         )
         if verdict:
             adjudications.append(verdict)
@@ -725,7 +704,6 @@ def main() -> None:
             "n_vecs": vec_vecs,
             "k_scaled": res["k_scaled"],
             "corpus_build_sec": vbuilt["build_sec"],
-            "fold_isolated": sorted(_VECTOR_FOLD_QUERIES),
             "queries_warm": res["warm"],
             "warm_runs": res["warm_runs"],
             "queries_cold": res["cold"],

@@ -92,9 +92,9 @@ def main() -> int:
     t0 = time.perf_counter()
     procs = []
     for label, args, extra in _WORKERS:
-        # FULL suite always (r17): the fast-tier collection filter
-        # (tests/conftest.py) only trims whole-directory driver runs;
-        # partest remains the full-battery runner by contract.
+        # FULL suite always: an inherited SPARK_GRAFT_SUITE=fast (the
+        # opt-in fast tier, tests/conftest.py) must not trim a worker;
+        # partest is the full-battery runner by contract.
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(per_worker),
                    SPARK_GRAFT_SUITE="full", **extra)
         log = (logdir / f"{label}.log").open("w")

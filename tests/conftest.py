@@ -134,35 +134,17 @@ def assert_matches_oracle(spark_df, con, sql: str, name: str = "") -> None:
     assert not mismatches, f"{name}: value mismatches (row, got, want): {mismatches}"
 
 
-# --- driver-budget FAST tier (VERDICT r16 next #2) --------------------------
-# The full suite (1,100+ tests; the 501-query oracle battery alone) outgrew
-# a serial pytest budget, so a whole-directory `pytest tests/` collects the
-# FAST tier: the harness gates, the bench-set plan goldens, and the oracle
-# battery restricted to the bench queries that carry an oracle — the quick
-# gate re-checks exactly the queries whose speed is measured.  The FULL
-# battery is unchanged and runs via `python partest.py` (which sets
-# SPARK_GRAFT_SUITE=full), via any explicit file/test selection
-# (`pytest tests/test_plans.py` collects everything in it), or via
-# SPARK_GRAFT_SUITE=full on a directory run.
+# --- opt-in FAST tier --------------------------------------------------------
+# Every run collects the whole suite unless SPARK_GRAFT_SUITE=fast, which
+# keeps only the FAST tier: the harness gates, the bench-set plan goldens,
+# and the oracle battery restricted to the bench queries that carry an
+# oracle — a quick gate that re-checks exactly the queries whose speed is
+# measured.  The tier is chosen by the variable alone, never by parsing
+# the command line.
 _FAST_TIER_FILES = {
     "test_harness.py",        # registry/tier/bench-contract gates
     "test_plan_stability.py",  # bench-set plan goldens (the plan gate)
 }
-
-
-def _fast_tier_applies(config) -> bool:
-    if os.environ.get("SPARK_GRAFT_SUITE", "fast") == "full":
-        return False
-    args = [
-        str(a) for a in config.invocation_params.args
-        if not str(a).startswith("-")
-    ]
-    # Only whole-directory runs get the tier; naming any file/test collects
-    # it fully (so `pytest tests/test_plans.py` still means what it says).
-    return all(
-        a.rstrip("/").endswith("tests") or a.rstrip("/").endswith(_REPO)
-        for a in args
-    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -179,10 +161,10 @@ def pytest_collection_modifyitems(config, items):
     (the ADVICE r12 #2 property).  Unset (the default, and CI) collects
     everything.
 
-    Whole-directory runs additionally collect only the FAST tier (see
-    `_FAST_TIER_FILES` above) unless SPARK_GRAFT_SUITE=full.  The tier's
-    dropped items are reported as deselected (they show in the summary's
-    "N deselected"), and one banner line names the tier that ran."""
+    With SPARK_GRAFT_SUITE=fast only the FAST tier is kept (see
+    `_FAST_TIER_FILES` above).  The tier's dropped items are reported as
+    deselected (they show in the summary's "N deselected"), and one
+    banner line names the tier that ran."""
     shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
     if shard:
         import hashlib
@@ -193,7 +175,7 @@ def pytest_collection_modifyitems(config, items):
             if int(hashlib.md5(it.nodeid.encode()).hexdigest(), 16) % n == i
         ]
     collected = len(items)
-    fast = _fast_tier_applies(config)
+    fast = os.environ.get("SPARK_GRAFT_SUITE") == "fast"
     if fast:
         from auron_spark.registry import bench_queries
 
@@ -220,7 +202,7 @@ def pytest_collection_modifyitems(config, items):
     if reporter is not None:
         reporter.write_line(
             f"suite tier: FAST, {len(items)} of {collected} tests kept "
-            "(SPARK_GRAFT_SUITE=full runs the whole battery)"
+            "(unset SPARK_GRAFT_SUITE to run the whole battery)"
             if fast
             else f"suite tier: full, all {collected} collected tests kept"
         )

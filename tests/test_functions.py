@@ -80,7 +80,7 @@ def test_lsh_recall_vs_bruteforce(spark):
     against the exact brute-force top-k; random-hyperplane LSH with bucket
     probing must recover a meaningful fraction of true neighbors on the
     planted-cluster fixture."""
-    brute = SPECS["sim_knn_bruteforce"].build(spark, SF_DIR).collect()
+    brute = SPECS["sim_knn_bruteforce_arrow"].build(spark, SF_DIR).collect()
     lsh = SPECS["sim_knn_lsh"].build(spark, SF_DIR).collect()
     truth: dict[int, set[int]] = {}
     for r in brute:
@@ -322,7 +322,7 @@ def test_trained_ivf_recall_vs_bruteforce(spark):
     lists): its neighbor sets must recover a meaningful fraction of the
     exact brute-force top-k on the planted-cluster fixture — the end-to-end
     quality contract of the trained coarse quantizer."""
-    brute = SPECS["sim_knn_bruteforce"].build(spark, SF_DIR).collect()
+    brute = SPECS["sim_knn_bruteforce_arrow"].build(spark, SF_DIR).collect()
     ivf = SPECS["sim_knn_ivf_trained"].build(spark, SF_DIR).collect()
     truth: dict[int, set[int]] = {}
     for r in brute:
@@ -507,7 +507,7 @@ def test_matryoshka_overlap_vs_full(spark):
     overlap is ~1%; measured prefix overlap is ~13%.  With MRL-trained
     embeddings the same plan serves the real trick; this pins the
     plumbing plus non-degeneracy."""
-    full = SPECS["sim_knn_bruteforce"].build(spark, SF_DIR).collect()
+    full = SPECS["sim_knn_bruteforce_arrow"].build(spark, SF_DIR).collect()
     trunc = SPECS["sim_matryoshka_topk"].build(spark, SF_DIR).collect()
     t_full: dict[int, set[int]] = {}
     for r in full:

@@ -7,6 +7,7 @@ import datetime
 from decimal import Decimal
 
 import pandas as pd
+import pytest
 
 from tests.conftest import SF_SMOKE, _norm_cell
 
@@ -38,20 +39,17 @@ def test_nested_arrays_tagged():
     assert _norm_cell([1, 2]) == _norm_cell((1, 2))
 
 
-def test_fast_tier_keeps_bench_oracles(monkeypatch):
-    """A whole-directory run keeps, from the oracle battery, exactly the
-    oracle tests of the bench queries that have an oracle (so the quick
-    gate re-checks the queries whose speed is measured), plus every test
-    of the tier's own files; `load_all()` keeps registration order."""
+def _tier_collection(monkeypatch, suite, args):
+    """Drive `conftest.pytest_collection_modifyitems` on synthetic items —
+    one oracle test per registered query plus a harness and a plans test
+    — with SPARK_GRAFT_SUITE set to ``suite`` (None: unset) and the given
+    command-line ``args``.  Returns (specs, kept items, deselected)."""
     from types import SimpleNamespace
 
     from auron_spark import registry
     from tests import conftest
 
     specs = registry.load_all()
-    assert list(specs) == list(registry.REGISTRY)
-    want = {n for n, s in specs.items() if s.bench and s.oracle is not None}
-    assert want
 
     def item(fname, name=None):
         return SimpleNamespace(
@@ -63,15 +61,34 @@ def test_fast_tier_keeps_bench_oracles(monkeypatch):
     items += [item("test_harness.py"), item("test_plans.py")]
     deselected = []
     config = SimpleNamespace(
-        invocation_params=SimpleNamespace(args=("tests/", "-q")),
+        invocation_params=SimpleNamespace(args=args),
         hook=SimpleNamespace(
             pytest_deselected=lambda items: deselected.extend(items)
         ),
         pluginmanager=SimpleNamespace(get_plugin=lambda name: None),
     )
-    monkeypatch.delenv("SPARK_GRAFT_SUITE", raising=False)
+    if suite is None:
+        monkeypatch.delenv("SPARK_GRAFT_SUITE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SUITE", suite)
     monkeypatch.delenv("SPARK_GRAFT_TEST_SHARD", raising=False)
     conftest.pytest_collection_modifyitems(config, items)
+    return specs, items, deselected
+
+
+def test_fast_tier_keeps_bench_oracles(monkeypatch):
+    """SPARK_GRAFT_SUITE=fast keeps, from the oracle battery, exactly the
+    oracle tests of the bench queries that have an oracle (so the quick
+    gate re-checks the queries whose speed is measured), plus every test
+    of the tier's own files; `load_all()` keeps registration order."""
+    from auron_spark import registry
+
+    specs, items, deselected = _tier_collection(
+        monkeypatch, "fast", ("tests/", "-q")
+    )
+    assert list(specs) == list(registry.REGISTRY)
+    want = {n for n, s in specs.items() if s.bench and s.oracle is not None}
+    assert want
     kept = {
         it.callspec.params["name"]
         for it in items if it.fspath.endswith("test_oracle_all.py")
@@ -80,6 +97,19 @@ def test_fast_tier_keeps_bench_oracles(monkeypatch):
     assert [it.fspath for it in items if it.callspec.params["name"] is None] \
         == ["tests/test_harness.py"]
     assert len(items) + len(deselected) == len(specs) + 2
+
+
+@pytest.mark.parametrize(
+    "args",
+    [("tests/",), ("tests/", "-p", "no:warnings"), ("tests/", "-q")],
+    ids=["dir", "dir-p-value", "dir-q"],
+)
+def test_unset_suite_keeps_every_test(monkeypatch, args):
+    """With SPARK_GRAFT_SUITE unset every collected test is kept, whatever
+    the command line says — an option's value (``-p no:warnings``) is not
+    a path that could switch the tier."""
+    specs, items, deselected = _tier_collection(monkeypatch, None, args)
+    assert len(items) == len(specs) + 2 and not deselected
 
 
 def test_shingles_short_documents(spark):
@@ -442,21 +472,21 @@ def test_bench_brackets_record_structure():
 
 def test_bench_brackets_cross_scale_write_refused(tmp_path, monkeypatch):
     """_persist_brackets (VERDICT r16 wrong #4): a bench run at a
-    DIFFERENT `_scale` (sf dir / corpus knobs) must never overwrite the
-    committed bracket record — r16 caught an sf0.01 record committed by
-    review; the writer now refuses structurally.  Same-scale writes and
-    first-ever seeding still land."""
+    DIFFERENT `_scale` (sf dir / corpus knobs / core count) must never
+    overwrite the committed bracket record — r16 caught an sf0.01 record
+    committed by review; the writer now refuses structurally.  Same-scale
+    writes and first-ever seeding still land."""
     import json
-    from pathlib import Path
+    import os
 
     import bench
 
     p = tmp_path / "bench_brackets.json"
     monkeypatch.setattr(bench, "_BRACKETS_PATH", str(p))
     sf01 = {"sf_dir": "/root/testdata/sf0.1", "text_docs": 65536,
-            "vector_vecs": 32768}
+            "vector_vecs": 32768, "cpus": 32}
     sf001 = {"sf_dir": "/root/testdata/sf0.01", "text_docs": 0,
-             "vector_vecs": 0}
+             "vector_vecs": 0, "cpus": 32}
     seeded = {"_scale": sf01, "relational": {"best_subtotal": 10.0,
               "queries": ["q1_pricing_summary"],
               "best_queries": {"q1_pricing_summary": 10.0}}}
@@ -469,6 +499,18 @@ def test_bench_brackets_cross_scale_write_refused(tmp_path, monkeypatch):
                "best_queries": {"q1_pricing_summary": 1.0}}}
     assert bench._persist_brackets(foreign) is False
     assert json.loads(p.read_text()) == seeded
+    # so is one that differs only in the box's core count, which the
+    # run's own key always carries
+    monkeypatch.delenv("SPARK_GRAFT_TEXT_DOCS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_VECTOR_VECS", raising=False)
+    key = bench._scale_key(sf01["sf_dir"])
+    assert key == {**sf01, "cpus": os.cpu_count()}
+    other_box = dict(seeded, _scale={**sf01, "cpus": 4})
+    assert bench._persist_brackets(other_box) is False
+    assert json.loads(p.read_text()) == seeded
+    assert bench._load_brackets({**sf01, "cpus": 4}) == {
+        "_scale": {**sf01, "cpus": 4}
+    }
     # a same-scale min-merge still lands
     merged = dict(seeded)
     merged["relational"] = {"best_subtotal": 9.0,

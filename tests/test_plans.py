@@ -11,6 +11,7 @@ and catastrophic at 100 TB.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -114,17 +115,31 @@ def test_q1_wholestage_codegen(spark):
     assert "WholeStageCodegen" in _explain(spark, "q1_pricing_summary", "codegen")
 
 
-def test_knn_broadcasts_queries(spark):
-    plan = _plan(spark, "sim_knn_bruteforce")
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    # the corpus side must NOT be exchanged for the join itself
-    assert "CartesianProduct" not in plan
-    # the broadcast query side is capped to a CONSTANT budget (not a corpus
-    # fraction): the cap predicate must reach the query-side scan, bounding
-    # the broadcast at any corpus size
+def test_knn_broadcasts_queries(spark, monkeypatch):
+    """sim_knn_bruteforce_arrow ships the query set to the corpus scan as
+    broadcast model state: the corpus streams into the kernel without a
+    join (no CartesianProduct, and no hash exchange between the scan and
+    MapInPandas — at most a round-robin spread for scan parallelism), and
+    the broadcast side is capped to a CONSTANT budget
+    (not a corpus fraction) — the cap predicate reaches the scan of the
+    collect that builds it, bounding the broadcast at any corpus size."""
     from auron_spark.pipeline.similarity import QUERY_BUDGET, QUERY_MOD
 
-    assert f"LessThan(vec_id,{QUERY_MOD * QUERY_BUDGET})" in plan, plan
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    collected = []
+    collect = DataFrame.collect
+
+    def spy(df):
+        collected.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    plan = _plan(spark, "sim_knn_bruteforce_arrow")
+    assert "CartesianProduct" not in plan and "Join" not in plan, plan
+    below = plan[plan.index("MapInPandas"):].splitlines()[1:]
+    assert not any("hashpartitioning" in line for line in below), plan
+    cap = f"LessThan(vec_id,{QUERY_MOD * QUERY_BUDGET})"
+    assert any(cap in q and "FileScan" in q for q in collected), collected
 
 
 @pytest.mark.parametrize(
@@ -754,18 +769,16 @@ def test_interval_overlap_is_binned_equi_join(spark):
 
 
 def test_semantic_dedup_blocked_pairs(spark):
-    """sim_semantic_dedup's pair search must be an equi-join on the
-    learned cluster id (quadratic only within a cluster), with the
-    codebook reaching assignment via broadcast — a cartesian pair plan
-    is the O(n^2) scan SemDeDup's clustering exists to avoid."""
+    """sim_semantic_dedup's pair search must be blocked on the learned
+    cluster id (quadratic only within a cluster: one hash exchange on cid
+    feeding the per-cluster pandas kernel), with the codebook reaching
+    assignment via broadcast — a cartesian pair plan is the O(n^2) scan
+    SemDeDup's clustering exists to avoid."""
     plan = _plan(spark, "sim_semantic_dedup")
     assert "CartesianProduct" not in plan, plan
-    joins = [
-        line
-        for line in plan.splitlines()
-        if "HashJoin" in line or "SortMergeJoin" in line
-    ]
-    assert any("cid" in j for j in joins), plan
+    assert "FlatMapGroupsInPandas [cid" in plan, plan
+    assert re.search(r"Exchange hashpartitioning\(cid#\d+", plan), plan
+    assert "BroadcastExchange" in plan, plan
 
 
 def test_rrf_fusion_broadcast_queries(spark):

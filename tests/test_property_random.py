@@ -1290,149 +1290,95 @@ def test_kmeans_k_knob_oracle_exact(spark, oracle, k):
         assert_matches_oracle(fn(spark, SF_DIR, k), oracle, sql, f"{name}@k={k}")
 
 
-def _assert_twin_rows_equal(arrow, fold, ctx):
-    """Exact row-for-row equality FIRST; on failure, diagnose whether the
-    mismatch is a last-ulp numeric flip (every differing float within 1e-9
-    of its partner, same row keys) — i.e. a BLAS/numpy version change
-    perturbing a near-tied cosine/argmin — or a structural kernel
-    regression (different keys / large deltas).  The twins' correctness
-    pin stays EXACT; this only makes the failure mode actionable
-    (ADVICE r10)."""
-    if arrow == fold:
-        return
-    detail = "row-count mismatch"
-    if len(arrow) == len(fold):
-        max_delta, structural = 0.0, False
-        for ra, rf in zip(arrow, fold):
-            if len(ra) != len(rf):
-                structural = True
-                break
-            for a, b in zip(ra, rf):
-                if a == b:
-                    continue
-                if isinstance(a, float) and isinstance(b, float):
-                    max_delta = max(max_delta, abs(a - b))
-                else:
-                    structural = True
-        if structural:
-            detail = "STRUCTURAL: non-float fields differ (keys/ranks)"
-        elif max_delta <= 1e-9:
-            detail = (
-                f"last-ulp numeric drift only (max |delta| = {max_delta:.3e}"
-                " <= 1e-9): likely a BLAS/numpy version change flipping a"
-                " near-tie, not a kernel logic regression"
-            )
-        else:
-            detail = f"numeric drift beyond ulp tolerance: max {max_delta:.3e}"
-    raise AssertionError(
-        f"arrow twin != fold twin at {ctx}: {detail}; "
-        f"{len(arrow)} arrow rows vs {len(fold)} fold rows"
-    )
+def _embeddings_oracle(sf_dir: str):
+    """A DuckDB connection with ``embeddings`` over ``sf_dir``'s table —
+    the oracle side for a corpus the session fixture does not cover."""
+    import os
+
+    import duckdb
+
+    path = f"{sf_dir}/embeddings.parquet"
+    if os.path.isdir(path):  # written by Spark: a directory of parts
+        path += "/*.parquet"
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
-def test_arrow_knn_matches_fold(spark):
-    """`sim_knn_bruteforce_arrow` (numpy-matmul kernel over mapInPandas)
-    returns row-for-row the same top-k as the oracle-proven fold path at
-    two SFs — the rows-only registration's correctness pin.  Both paths
-    rank on raw doubles and round to 6 dp at the end, so this is a
-    bit-level statement about the BLAS kernel on the fixtures."""
+def _vector_oracle(name: str, k: int | None = None) -> str:
+    """The registered oracle of ``name``; for the k-means-backed queries,
+    trained at ``k`` clusters (k enters their SQL only through the init
+    CTE's LIMIT, see test_kmeans_k_knob_oracle_exact)."""
+    from auron_spark.pipeline.similarity import KM_K
     from auron_spark.registry import load_all
-    from tests.conftest import SF_DIR
 
-    specs = load_all()
-    for sf in (SF_DIR, SF_SMOKE):
-        fold = sorted(
-            tuple(r)
-            for r in specs["sim_knn_bruteforce"].build(spark, sf).collect()
+    sql = load_all()[name].oracle
+    if k is not None:
+        assert sql.count(f"LIMIT {KM_K}") == 1, name
+        sql = sql.replace(f"LIMIT {KM_K}", f"LIMIT {k}")
+    return sql
+
+
+def _write_embeddings(spark, sf_dir: str, mat, labels=None, parts=None):
+    """Write ``mat`` (rows = vec_ids 0..n-1) as ``sf_dir``'s embeddings
+    table (float32 components, label 0 unless given)."""
+    if labels is None:
+        labels = [0] * len(mat)
+    rows = [
+        (i, [float(x) for x in mat[i]], int(labels[i])) for i in range(len(mat))
+    ]
+    data = spark.sparkContext.parallelize(rows, parts) if parts else rows
+    spark.createDataFrame(
+        data, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sim_knn_bruteforce_arrow",
+        "sim_kmeans_lloyd",
+        "sim_ivfpq_trained",
+        "sim_semantic_dedup",
+    ],
+)
+def test_vector_kernel_matches_oracle(spark, oracle, name):
+    """Each exact Arrow kernel query equals its DuckDB oracle beyond the
+    battery's sf0.01 run: at sf0.001, and for the k-means-backed ones at
+    k = 16 clusters at sf0.01 (the bench leg's knob)."""
+    from auron_spark.registry import load_all
+    from tests.conftest import SF_DIR, assert_matches_oracle
+
+    fn = load_all()[name].build
+    smoke = _embeddings_oracle(SF_SMOKE)
+    try:
+        assert_matches_oracle(
+            fn(spark, SF_SMOKE), smoke, _vector_oracle(name), f"{name}@sf0.001"
         )
-        arrow = sorted(
-            tuple(r)
-            for r in specs["sim_knn_bruteforce_arrow"].build(spark, sf).collect()
+    finally:
+        smoke.close()
+    if name != "sim_knn_bruteforce_arrow":
+        assert_matches_oracle(
+            fn(spark, SF_DIR, 16), oracle, _vector_oracle(name, 16),
+            f"{name}@k=16",
         )
-        _assert_twin_rows_equal(arrow, fold, sf)
-
-
-def test_semdedup_arrow_matches_fold(spark):
-    """`sim_semantic_dedup_arrow` (numpy gram-matrix pair kernel over
-    applyInPandas, sharing the fold variant's exact clustering front
-    half) returns row-for-row the same per-cluster dedup report as the
-    oracle-proven fold variant at two SFs — and at a scaled k, since the
-    bench leg runs it there."""
-    from auron_spark.pipeline.similarity import (
-        sim_semantic_dedup,
-        sim_semantic_dedup_arrow,
-    )
-    from tests.conftest import SF_DIR
-
-    for sf, k in ((SF_DIR, 8), (SF_SMOKE, 8), (SF_DIR, 16)):
-        fold = sorted(
-            tuple(r) for r in sim_semantic_dedup(spark, sf, k).collect()
-        )
-        arrow = sorted(
-            tuple(r) for r in sim_semantic_dedup_arrow(spark, sf, k).collect()
-        )
-        _assert_twin_rows_equal(arrow, fold, (sf, k))
-
-
-def test_lloyd_arrow_matches_fold(spark):
-    """`sim_kmeans_lloyd_arrow` (BLAS assignment kernel feeding the SHARED
-    `_lloyd_update` decimal-exact mean) returns row-for-row the same
-    trained codebook as the oracle-proven fold trainer at two SFs and at
-    a scaled k (the bench leg's knob)."""
-    from auron_spark.pipeline.similarity import (
-        sim_kmeans_lloyd,
-        sim_kmeans_lloyd_arrow,
-    )
-    from tests.conftest import SF_DIR
-
-    for sf, k in ((SF_DIR, 8), (SF_SMOKE, 8), (SF_DIR, 16)):
-        fold = sorted(
-            tuple(r) for r in sim_kmeans_lloyd(spark, sf, k).collect()
-        )
-        arrow = sorted(
-            tuple(r) for r in sim_kmeans_lloyd_arrow(spark, sf, k).collect()
-        )
-        _assert_twin_rows_equal(arrow, fold, (sf, k))
-
-
-def test_ivfpq_arrow_matches_fold(spark):
-    """`sim_ivfpq_trained_arrow` (numpy encode kernel over mapInPandas,
-    sharing the fold variant's training frames and serve stage) returns
-    row-for-row the same re-ranked top-k as the oracle-proven fold
-    variant at two SFs."""
-    from auron_spark.pipeline.similarity import (
-        sim_ivfpq_trained,
-        sim_ivfpq_trained_arrow,
-    )
-    from tests.conftest import SF_DIR
-
-    for sf, k in ((SF_DIR, 8), (SF_SMOKE, 8), (SF_DIR, 16)):
-        fold = sorted(
-            tuple(r) for r in sim_ivfpq_trained(spark, sf, k).collect()
-        )
-        arrow = sorted(
-            tuple(r) for r in sim_ivfpq_trained_arrow(spark, sf, k).collect()
-        )
-        _assert_twin_rows_equal(arrow, fold, (sf, k))
 
 
 @pytest.mark.parametrize("seed", range(3))
-def test_kernel_twins_match_on_random_corpora(spark, tmp_path, seed):
-    """The Arrow kernel twins equal their fold twins on ARBITRARY corpora,
-    not just the driver fixtures: a seeded random embeddings table (skewed
+def test_vector_kernels_match_oracle_on_random_corpora(spark, tmp_path, seed):
+    """The exact kernels equal their oracles on ARBITRARY corpora, not
+    just the driver fixtures: a seeded random embeddings table (skewed
     cluster sizes, planted exact duplicates, a zero-tail vector to probe
-    the norm edge) is written to a temp dir and both variants of knn and
-    SemDeDup run over it."""
+    the norm edge) is written to a temp dir and k-NN, SemDeDup and Lloyd
+    run over it."""
     import numpy as np
 
     from auron_spark.pipeline.similarity import (
         sim_kmeans_lloyd,
-        sim_kmeans_lloyd_arrow,
-        sim_knn_bruteforce,
         sim_knn_bruteforce_arrow,
         sim_semantic_dedup,
-        sim_semantic_dedup_arrow,
     )
+    from tests.conftest import assert_matches_oracle
 
     rng = np.random.default_rng(424200 + seed)
     n = 120
@@ -1443,19 +1389,19 @@ def test_kernel_twins_match_on_random_corpora(spark, tmp_path, seed):
     for i in range(19, n, 40):
         mat[i] = mat[i - 1]  # planted exact duplicates
     sf = str(tmp_path / "corpus")
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in mat[i]], int(cl[i])) for i in range(n)],
-        "vec_id long, embedding array<float>, label int",
-    ).write.parquet(f"{sf}/embeddings.parquet")
+    _write_embeddings(spark, sf, mat, cl)
 
-    for fold_fn, arrow_fn, kw in (
-        (sim_knn_bruteforce, sim_knn_bruteforce_arrow, {}),
-        (sim_semantic_dedup, sim_semantic_dedup_arrow, {"k": 5}),
-        (sim_kmeans_lloyd, sim_kmeans_lloyd_arrow, {"k": 5}),
+    con = _embeddings_oracle(sf)
+    for fn, k in (
+        (sim_knn_bruteforce_arrow, None),
+        (sim_semantic_dedup, 5),
+        (sim_kmeans_lloyd, 5),
     ):
-        fold = sorted(tuple(r) for r in fold_fn(spark, sf, **kw).collect())
-        arrow = sorted(tuple(r) for r in arrow_fn(spark, sf, **kw).collect())
-        _assert_twin_rows_equal(arrow, fold, (fold_fn.__name__, seed))
+        df = fn(spark, sf) if k is None else fn(spark, sf, k)
+        assert_matches_oracle(
+            df, con, _vector_oracle(fn.__name__, k), (fn.__name__, seed)
+        )
+    con.close()
 
 
 def _knn_screen_case(rng, nb, nq=40):
@@ -1493,7 +1439,7 @@ def _knn_screen_case(rng, nb, nq=40):
 
 
 def test_knn_screen_matches_full_sort():
-    """The exact k-NN kernel's per-batch screen (`_knn_kernels` `screen`,
+    """The exact k-NN kernel's per-batch screen (`_vector_kernels` `screen`,
     Spark-free) keeps exactly the pairs a full sort of the same screen
     matrix keeps — every non-self pair within the margin of its query's
     k-th largest — on batch sizes on both sides of the 64-column block
@@ -1504,10 +1450,11 @@ def test_knn_screen_matches_full_sort():
     from auron_spark.pipeline.similarity import (
         KNN_SCREEN_MARGIN,
         TOP_K,
-        _knn_kernels,
+        _vector_kernels,
     )
 
-    fold_dot, screen = _knn_kernels()
+    kern = _vector_kernels()
+    fold_dot, screen = kern.fold_dot, kern.screen
     rng = np.random.default_rng(20240)
     for nb in (1, TOP_K - 1, TOP_K, 319, 320, 321, 8192):
         qhat, qids, chat, nids = _knn_screen_case(rng, nb)
@@ -1547,20 +1494,114 @@ def test_knn_screen_matches_full_sort():
             assert ties, (nb, "no exact tie at the k-th value was planted")
 
 
-def test_arrow_knn_matches_fold_on_block_bound_batches(spark, tmp_path):
-    """`sim_knn_bruteforce_arrow` equals its fold twin on a corpus whose
+def _fold_argmin(kern, x, c):
+    """Reference argmin: the fold distance to every row of ``c``, smallest
+    (distance, index) per row of ``x``."""
+    import numpy as np
+
+    dist = np.stack(
+        [kern.fold_sqdist(x, np.broadcast_to(cj, x.shape)) for cj in c], axis=1
+    )
+    idx = np.broadcast_to(np.arange(len(c)), dist.shape)
+    return np.lexsort((idx, dist), axis=1)[:, 0]
+
+
+def test_exact_argmin_matches_fold_on_near_ties():
+    """The exact argmin kernel (`_vector_kernels` ``argmin``, Spark-free)
+    picks the fold's nearest row with the smallest-index tie-break on
+    planted near-ties: centroids 1e-3 apart around a common offset (the
+    expansion's rounding error scales with |x|^2 + |c|^2, here ~1e8, far
+    above any fixed 1e-9 margin), points planted halfway between two
+    centroids, an exact duplicate centroid, and 8-dim subvectors as the
+    IVF-PQ encoder uses them.  In the large-offset cases the plain BLAS
+    screen's argmin is wrong on some rows, so they exercise the
+    recompute."""
+    import numpy as np
+
+    from auron_spark.pipeline.similarity import _vector_kernels
+
+    kern = _vector_kernels()
+    rng = np.random.default_rng(31337)
+    for d, offset in ((64, 1e3), (64, 1.0), (8, 1e3)):
+        base = offset * np.ones(d)
+        c = base + 1e-3 * rng.normal(size=(12, d))
+        c[5] = c[2]  # exact duplicate: a tie the smaller index must win
+        x = np.concatenate([
+            base + 1e-3 * rng.normal(size=(300, d)),
+            (c[0] + c[1]) / 2 + 1e-9 * rng.normal(size=(100, d)),
+            np.repeat(c[2:3], 20, axis=0),
+        ])
+        want = _fold_argmin(kern, x, c)
+        got = kern.argmin(x, c)
+        assert (got == want).all(), (d, offset, np.flatnonzero(got != want)[:5])
+        assert not (want == 5).any()
+        if offset > 1:
+            blas = (
+                (x * x).sum(1)[:, None] - 2.0 * (x @ c.T) + (c * c).sum(1)[None, :]
+            ).argmin(1)
+            assert (blas != want).any(), (d, "no near-tie fooled the screen")
+
+
+def test_over_threshold_matches_fold_on_near_ties():
+    """The exact threshold kernel (`_vector_kernels` ``over_threshold``,
+    Spark-free) returns exactly the pairs whose fold cosine is >= the
+    threshold, on pairs planted so that their fold cosine sits within an
+    ulp of SEMDEDUP_COS (many exactly on it — a tie must count as a
+    hit), mixed with random vectors."""
+    import numpy as np
+
+    from auron_spark.pipeline.similarity import (
+        KNN_SCREEN_MARGIN,
+        SEMDEDUP_COS,
+        _vector_kernels,
+    )
+
+    kern = _vector_kernels()
+    rng = np.random.default_rng(2718)
+    d, thr = 64, SEMDEDUP_COS
+
+    def fold_cos(a, b):
+        na = np.sqrt(kern.fold_dot(a[None], a[None]))[0]
+        nb = np.sqrt(kern.fold_dot(b[None], b[None]))[0]
+        return kern.fold_dot(a[None], b[None])[0] / (na * nb)
+
+    rows = []
+    for _ in range(40):
+        u = rng.normal(size=d)
+        u /= np.linalg.norm(u)
+        v = rng.normal(size=d)
+        v -= (v @ u) * u
+        v /= np.linalg.norm(v)
+        a = u * rng.uniform(0.5, 3)
+        b = (0.29 * u + np.sqrt(1 - 0.29**2) * v) * rng.uniform(0.5, 3)
+        lo, hi = 0.0, 0.1  # the cosine of (a, b + s a) grows with s
+        for _ in range(100):
+            mid = (lo + hi) / 2
+            lo, hi = (lo, mid) if fold_cos(a, b + mid * a) >= thr else (mid, hi)
+        rows += [a, b + hi * a, b + lo * a]
+    x = np.vstack([np.array(rows), rng.normal(size=(60, d))])
+    x = x[rng.permutation(len(x))]
+    nrm = np.sqrt(kern.fold_dot(x, x))
+    iu, ju = np.triu_indices(len(x), k=1)
+    fold = kern.fold_dot(x[iu], x[ju]) / (nrm[iu] * nrm[ju])
+    want = {(int(i), int(j)) for i, j in zip(iu[fold >= thr], ju[fold >= thr])}
+    i, j = kern.over_threshold(x, nrm, thr)
+    assert set(zip(i.tolist(), j.tolist())) == want
+    assert len(i) == len(want)
+    assert (fold == thr).any() and (np.abs(fold - thr) <= KNN_SCREEN_MARGIN).sum() >= 40
+
+
+def test_knn_matches_oracle_on_block_bound_batches(spark, tmp_path):
+    """`sim_knn_bruteforce_arrow` equals its oracle on a corpus whose
     Arrow batches are large enough (>= TOP_K * 64 rows) for the screen's
     block lower bound, with exact duplicates straddling 64-row blocks
     inside one batch and across batches, and a row count that is not a
     multiple of 64 (so every batch has a partial tail block)."""
     import numpy as np
 
-    from auron_spark.pipeline.similarity import (
-        TOP_K,
-        sim_knn_bruteforce,
-        sim_knn_bruteforce_arrow,
-    )
+    from auron_spark.pipeline.similarity import TOP_K, sim_knn_bruteforce_arrow
     from auron_spark.tables import min_parallel, table
+    from tests.conftest import assert_matches_oracle
 
     # One file, hence one Arrow batch, per slice: >= 400 rows each, and an
     # odd row count.
@@ -1574,28 +1615,28 @@ def test_arrow_knn_matches_fold_on_block_bound_batches(spark, tmp_path):
         for pos in (63, 64, 127, 128, 255, 256, 319, 320):
             mat[p * n // parts + pos] = w
     sf = str(tmp_path / "corpus")
-    rows = [(i, [float(x) for x in mat[i]], 0) for i in range(n)]
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, parts),
-        "vec_id long, embedding array<float>, label int",
-    ).write.parquet(f"{sf}/embeddings.parquet")
+    _write_embeddings(spark, sf, mat, parts=parts)
     sizes = (
         min_parallel(table(spark, sf, "embeddings")).rdd.glom().map(len).collect()
     )
     assert min(sizes) >= TOP_K * 64, sizes
 
-    fold = sorted(tuple(r) for r in sim_knn_bruteforce(spark, sf).collect())
-    arrow = sorted(tuple(r) for r in sim_knn_bruteforce_arrow(spark, sf).collect())
-    _assert_twin_rows_equal(arrow, fold, "block-bound batches")
-    top0 = [nid for q, nid, c in fold if q == 0]
-    assert len(top0) == TOP_K and all(c == 1.0 for q, _, c in fold if q == 0)
+    df = sim_knn_bruteforce_arrow(spark, sf)
+    con = _embeddings_oracle(sf)
+    assert_matches_oracle(
+        df, con, _vector_oracle("sim_knn_bruteforce_arrow"), "block-bound"
+    )
+    con.close()
+    top0 = [(nid, c) for q, nid, c in df.collect() if q == 0]
+    assert len(top0) == TOP_K and all(c == 1.0 for _, c in top0)
 
 
 def test_lloyd_apply_mean_rejects_ragged_embeddings():
     """`_lloyd_apply_mean` (driver only) copies complete per-dim means into
     the centroid and keeps an empty cluster's centroid; mean rows from a
     ragged corpus (missing dims, extra dims, or per-dim member counts that
-    differ) fail with an assertion that names the precondition."""
+    differ) fail with a ValueError that names the precondition, which
+    survives ``python -O``."""
     from collections import namedtuple
 
     from auron_spark.pipeline.similarity import _lloyd_apply_mean
@@ -1610,139 +1651,93 @@ def test_lloyd_apply_mean_rejects_ragged_embeddings():
         [R(0, d, 1.0, 2) for d in range(4)],  # a member longer than 3
         [R(0, 0, 1.0, 2), R(0, 1, 1.0, 2), R(0, 2, 1.0, 1)],  # mixed lengths
     ):
-        with pytest.raises(AssertionError, match="ragged embeddings"):
+        with pytest.raises(ValueError, match="ragged embeddings"):
             _lloyd_apply_mean([[0.0] * 3, [0.0] * 3], rows)
 
 
-def test_kernel_twins_degenerate_inputs(spark, tmp_path):
-    """Adversarial twin-equality cases from the round-10 review: (a) a
-    tiny corpus (fewer rows than TOP_K) must not leak the arrow kernel's
-    self-match sentinel rows; (b) bitwise-duplicate vectors guarantee
-    exact cosine TIES at the top-k boundary, which per-batch pruning must
-    not break (the fold tie-breaks by neighbor_id in the global window);
-    (c) a zero-norm embedding is OUTSIDE both variants' domain — the fold
-    throws ANSI DIVIDE_BY_ZERO, so the arrow kernels must fail loudly
-    too, never emit silent NaN."""
+def test_vector_kernels_degenerate_inputs(spark, tmp_path):
+    """The exact kernels on adversarial corpora, each against its oracle:
+    (a) a tiny corpus (fewer rows than TOP_K) must not leak the k-NN
+    kernel's self-match sentinel rows, and Lloyd trains only as many
+    centroids as there are vectors; (b) bitwise-duplicate vectors
+    guarantee exact cosine TIES at the top-k boundary, which per-batch
+    pruning must keep for the global window's id tie-break, and send
+    every vector to one cluster while the rest carry their init centroid
+    at n = 0; (c) a zero-norm embedding is outside the cosine's domain,
+    so the k-NN and SemDeDup kernels fail loudly, never emit silent NaN;
+    (d) a corpus with no query vector yields an empty k-NN result with the
+    query's schema; (e) an empty corpus trains zero centroids, and IVF-PQ
+    and Lloyd return empty frames instead of raising on 0-length model
+    arrays."""
     import numpy as np
-
-    from auron_spark.pipeline.similarity import (
-        sim_knn_bruteforce,
-        sim_knn_bruteforce_arrow,
-        sim_semantic_dedup,
-        sim_semantic_dedup_arrow,
-    )
-
-    # (a) tiny corpus: 4 vectors, one query (vec_id 0)
-    tiny = str(tmp_path / "tiny")
-    rng = np.random.default_rng(7)
-    m = rng.normal(size=(4, 64))
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in m[i]], 0) for i in range(4)],
-        "vec_id long, embedding array<float>, label int",
-    ).write.parquet(f"{tiny}/embeddings.parquet")
-    fold = sorted(tuple(r) for r in sim_knn_bruteforce(spark, tiny).collect())
-    arrow = sorted(
-        tuple(r) for r in sim_knn_bruteforce_arrow(spark, tiny).collect()
-    )
-    assert arrow == fold
-    assert all(q != n for q, n, _ in arrow)  # no self rows leaked
-
-    # (b) ties saturating the top-k boundary: 8 bitwise copies of ONE
-    # vector (all pairwise cos exactly 1.0) — per-batch pruning must keep
-    # the boundary ties so the global window can apply the id tie-break.
-    deg = str(tmp_path / "deg")
-    base = rng.normal(size=64)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in base], 0) for i in range(8)],
-        "vec_id long, embedding array<float>, label int",
-    ).write.parquet(f"{deg}/embeddings.parquet")
-    for fold_fn, arrow_fn, kw in (
-        (sim_knn_bruteforce, sim_knn_bruteforce_arrow, {}),
-        (sim_semantic_dedup, sim_semantic_dedup_arrow, {"k": 3}),
-    ):
-        fold = sorted(tuple(r) for r in fold_fn(spark, deg, **kw).collect())
-        arrow = sorted(tuple(r) for r in arrow_fn(spark, deg, **kw).collect())
-        assert arrow == fold, fold_fn.__name__
-
-    # (c) zero-norm vector: every variant rejects it loudly
-    zer = str(tmp_path / "zer")
-    # 3 identical vectors + the zero vector: identical init centroids force
-    # every vector (incl. the zero one) into ONE cluster, so the fold's
-    # pair stage deterministically reaches the throwing division.
-    rows = [(int(i), [float(x) for x in base], 0) for i in range(3)]
-    rows.append((3, [0.0] * 64, 0))
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.parquet(f"{zer}/embeddings.parquet")
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
-    for fn, kw in (
-        (sim_knn_bruteforce, {}),
-        (sim_knn_bruteforce_arrow, {}),
-        (sim_semantic_dedup, {"k": 1}),  # one cluster: the pair stage
-        (sim_semantic_dedup_arrow, {"k": 1}),  # must reach the zero vector
-    ):
+    from auron_spark.pipeline.similarity import (
+        sim_ivfpq_trained,
+        sim_kmeans_lloyd,
+        sim_knn_bruteforce_arrow,
+        sim_semantic_dedup,
+    )
+    from tests.conftest import assert_matches_oracle
+
+    def check(fn, sf, k=None):
+        df = fn(spark, sf) if k is None else fn(spark, sf, k)
+        con = _embeddings_oracle(sf)
+        try:
+            assert_matches_oracle(
+                df, con, _vector_oracle(fn.__name__, k), (fn.__name__, sf)
+            )
+        finally:
+            con.close()
+        return df
+
+    rng = np.random.default_rng(7)
+    # (a) tiny corpus: 4 vectors, one query (vec_id 0)
+    tiny = str(tmp_path / "tiny")
+    _write_embeddings(spark, tiny, rng.normal(size=(4, 64)))
+    rows = check(sim_knn_bruteforce_arrow, tiny).collect()
+    assert rows and all(q != n for q, n, _ in rows)  # no self rows leaked
+    check(sim_kmeans_lloyd, tiny, 8)
+
+    # (b) 8 bitwise copies of ONE vector: all pairwise cos exactly 1.0
+    deg = str(tmp_path / "deg")
+    base = rng.normal(size=64)
+    _write_embeddings(spark, deg, np.tile(base, (8, 1)))
+    check(sim_knn_bruteforce_arrow, deg)
+    check(sim_semantic_dedup, deg, 3)
+    check(sim_kmeans_lloyd, deg, 8)
+
+    # (c) zero-norm vector: 3 identical vectors + the zero vector; with
+    # k = 1 every vector shares ONE cluster, so the pair stage reaches it
+    zer = str(tmp_path / "zer")
+    _write_embeddings(spark, zer, np.vstack([np.tile(base, (3, 1)), np.zeros(64)]))
+    for fn, kw in ((sim_knn_bruteforce_arrow, {}), (sim_semantic_dedup, {"k": 1})):
         with pytest.raises((PySparkException, Py4JJavaError, ValueError)):
             fn(spark, zer, **kw).collect()
 
-    # (d) EMPTY QUERY SET (ADVICE r10): no vec_id satisfies the query
-    # predicate (vec_id % QUERY_MOD == 0 and < QUERY_CAP) — the fold's
-    # join over zero query rows returns empty; the arrow kernel must too
-    # (its qmat would be a 0-length 1-D array, norm(axis=1) raises).
+    # (d) no vec_id satisfies the query predicate (vec_id % QUERY_MOD == 0
+    # and < QUERY_CAP): vec_ids 1..6
     noq = str(tmp_path / "noq")
-    m2 = rng.normal(size=(6, 64))
     spark.createDataFrame(
-        [(int(i), [float(x) for x in m2[i - 1]], 0) for i in range(1, 7)],
+        [(i, [float(x) for x in rng.normal(size=64)], 0) for i in range(1, 7)],
         "vec_id long, embedding array<float>, label int",
     ).write.parquet(f"{noq}/embeddings.parquet")
-    fold = sim_knn_bruteforce(spark, noq).collect()
-    arrow_df = sim_knn_bruteforce_arrow(spark, noq)
-    arrow = arrow_df.collect()
-    assert fold == [] and arrow == []
-    assert [f.name for f in arrow_df.schema.fields] == [
+    df = check(sim_knn_bruteforce_arrow, noq)
+    assert df.collect() == [] and df.columns == [
         "query_id", "neighbor_id", "cos_sim",
     ]
 
-    # (e) EMPTY CORPUS (ADVICE r10): zero centroids train, so the IVF-PQ
-    # arrow kernel must return the fold's empty frame instead of raising
-    # on 0-length model arrays.
-    from auron_spark.pipeline.similarity import (
-        sim_ivfpq_trained,
-        sim_ivfpq_trained_arrow,
-    )
-
+    # (e) empty corpus
     emp = str(tmp_path / "emp")
     spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{emp}/embeddings.parquet")
-    fold_df = sim_ivfpq_trained(spark, emp)
-    arrow_df = sim_ivfpq_trained_arrow(spark, emp)
-    assert fold_df.collect() == [] and arrow_df.collect() == []
-    assert [f.name for f in arrow_df.schema.fields] == [
-        f.name for f in fold_df.schema.fields
+    df = check(sim_ivfpq_trained, emp)
+    assert df.collect() == [] and df.columns == [
+        "query_id", "neighbor_id", "l2_dist", "rk",
     ]
-
-    # (f) the Lloyd twins on the same degenerate inputs: fewer vectors
-    # than k (init trains len(corpus) centroids), all-duplicate vectors
-    # (one cluster absorbs everything, the rest carry their init
-    # centroid at n = 0), and the empty corpus.
-    from auron_spark.pipeline.similarity import (
-        sim_kmeans_lloyd,
-        sim_kmeans_lloyd_arrow,
-    )
-
-    for sf_deg in (tiny, deg):
-        fold = sorted(
-            tuple(r) for r in sim_kmeans_lloyd(spark, sf_deg, 8).collect()
-        )
-        arrow = sorted(
-            tuple(r)
-            for r in sim_kmeans_lloyd_arrow(spark, sf_deg, 8).collect()
-        )
-        _assert_twin_rows_equal(arrow, fold, ("lloyd", sf_deg))
-    assert sim_kmeans_lloyd(spark, emp).collect() == []
-    assert sim_kmeans_lloyd_arrow(spark, emp).collect() == []
+    assert check(sim_kmeans_lloyd, emp).collect() == []
 
 
 def test_freshness_lag_zero_span_yields_null_rate(spark, tmp_path):
