@@ -7,8 +7,8 @@ check:
 test:
 	python -m pytest tests/ -x -q
 
-# Same coverage split across 6 worker processes (see partest.py);
-# ~3x faster wall on a 32-core box.
+# Same coverage split across as many worker processes as cores and RAM
+# allow (see partest.py); one serial worker on a 4-core, 15 GB box.
 test-par:
 	python partest.py
 

@@ -7,7 +7,7 @@ the driver's tail-capture window and parsed as null):
 - several leading JSON lines carry the bulky sections (`{"section": "cold",
   ...}`, `{"section": "sf2", ...}`, `{"section": "groups", ...}`,
   `{"section": "shards", ...}`, `{"section": "variance", ...}`,
-  `{"section": "index_build", ...}`, `{"section": "adjudication", ...}`);
+  `{"section": "index_build", ...}`);
 - the LAST printed line is the compact headline
   `{"metric", "value", "unit", "queries", "sf"}` — always complete inside a
   tail-capture window, so the driver can parse it.
@@ -57,23 +57,6 @@ live in their own section and group subtotal, never in the headline series.
 Methodology: the headline `value` / `queries` numbers are warm times: at
 100 TB the one-shot compile costs amortize to zero, so warm is the number
 that scales.
-
-Self-adjudication (VERDICT r13 ask #5): the box shows up to 2x same-day
-variance with byte-stable plans, concentrated in single group JVMs (the
-r13 record's trainers group read 79.4 s vs isolated brackets of 36.5-37.4
-s, polluting the round headline).  `bench_brackets.json` commits each
-group's BEST OBSERVED warm subtotal AND per-query bests (min-merged
-across runs while the group's query set is unchanged — the
-partest_walls.json device).  When a group's subtotal exceeds 1.5x its
-bracket, OR any single query exceeds 2.5x its per-query best (VERDICT
-r14 wrong #4: r14's sim_knn_ivf_serve spiked 2.69x on a byte-stable
-plan while its group stayed at 1.25x — invisible to the group
-trigger), the harness automatically re-runs that group in a fresh
-child JVM, takes the per-query min of the two passes for the headline
-(the existing min-warm protocol, one more sample), and records BOTH
-subtotals plus the spiking queries in an `adjudication` section — so a
-noise spike can neither hide nor silently pollute the round-over-round
-series.
 """
 
 from __future__ import annotations
@@ -150,138 +133,6 @@ _VECTOR_SCALE_KSCALED = (
     "sim_ivfpq_trained",
     "sim_semantic_dedup",
 )
-
-
-_BRACKETS_PATH = f"{_REPO}/bench_brackets.json"
-_ADJUDICATE_FACTOR = 1.5
-# Per-query trigger (VERDICT r14 wrong #4): a single-query spike can sail
-# under the GROUP trigger when the rest of its group reads fast (r14's
-# sim_knn_ivf_serve ran 2.69x its best while the pipeline subtotal stayed
-# at 1.25x).  Any query exceeding this factor times its committed best
-# also forces the isolated rerun.  Looser than the group factor because
-# single-query wall times are noisier than 8-22-query subtotals; floored
-# so sub-100ms queries can't trip on scheduler jitter.
-_PER_QUERY_FACTOR = 2.5
-_PER_QUERY_FLOOR_SEC = 0.25
-
-
-def _scale_key(sf_dir: str) -> dict:
-    """What a bracket record's numbers depend on: the sf dir, the
-    text/vector corpus sizes and the box's core count."""
-    return {
-        "sf_dir": sf_dir,
-        "text_docs": int(os.environ.get("SPARK_GRAFT_TEXT_DOCS", "65536")),
-        "vector_vecs": int(os.environ.get("SPARK_GRAFT_VECTOR_VECS", "32768")),
-        "cpus": os.cpu_count(),
-    }
-
-
-def _load_brackets(scale_key: dict) -> dict:
-    """Load the committed bracket record, DISCARDING it when the run's
-    scale key (`_scale_key`) differs — subtotals at another SF or on
-    another box would spuriously trip (or never trip) every trigger."""
-    try:
-        rec = json.loads(Path(_BRACKETS_PATH).read_text())
-    except (OSError, ValueError):
-        return {"_scale": scale_key}
-    if rec.get("_scale") != scale_key:
-        return {"_scale": scale_key}
-    return rec
-
-
-def _persist_brackets(brackets: dict) -> bool:
-    """Write the min-merged bracket record — UNLESS the file on disk was
-    recorded at a different `_scale` (VERDICT r16 wrong #4: an sf0.01 /
-    reduced-corpus run, or a run on a box with another core count, must
-    never overwrite the committed record; r16 caught that relapse by
-    review, this makes it impossible).  The
-    in-memory record still adjudicated this run; it just doesn't persist.
-    Returns whether the write happened."""
-    try:
-        on_disk = json.loads(Path(_BRACKETS_PATH).read_text())
-    except (OSError, ValueError):
-        on_disk = None
-    if (
-        on_disk is not None
-        and on_disk.get("_scale") != brackets.get("_scale")
-    ):
-        return False
-    Path(_BRACKETS_PATH).write_text(
-        json.dumps(brackets, indent=1, sort_keys=True) + "\n"
-    )
-    return True
-
-
-def _adjudicate(group: str, res: dict, brackets: dict,
-                rerun) -> tuple[dict, dict | None]:
-    """If this group's warm subtotal exceeds the committed best-observed
-    bracket by _ADJUDICATE_FACTOR, OR any single query exceeds
-    _PER_QUERY_FACTOR times its committed per-query best (VERDICT r14
-    wrong #4 — the group trigger is blind to one-query spikes), re-run
-    the group in a fresh child JVM and per-query-min the two passes;
-    always min-merge the adopted subtotal AND per-query bests back into
-    the bracket record (reset when the query set changes)."""
-    names = sorted(res["warm"])
-    subtotal = round(sum(res["warm"].values()), 3)
-    rec = brackets.get(group)
-    verdict = None
-    same_set = bool(rec) and rec.get("queries") == names
-    # ADVICE r15 #3: a set change must not discard the per-query bests of
-    # the names still present — previously best_q reset to {} and the
-    # first run after a reset seeded the committed floor verbatim, so one
-    # noise spike inflated the 2.5x trigger threshold until later runs
-    # min-merged it down.  Only the SUBTOTAL bracket (not comparable
-    # across sets) resets; newly added names still seed from this run's
-    # min-of-warm-runs and are refined by the next pass's min-merge.
-    best_q = {
-        n: v
-        for n, v in (rec or {}).get("best_queries", {}).items()
-        if n in names
-    }
-    spiked = sorted(
-        n for n in names
-        if n in best_q
-        and res["warm"][n] > max(
-            _PER_QUERY_FACTOR * best_q[n], _PER_QUERY_FLOOR_SEC
-        )
-    )
-    subtotal_trip = same_set and (
-        subtotal > _ADJUDICATE_FACTOR * rec["best_subtotal"]
-    )
-    if subtotal_trip or spiked:
-        first_subtotal = subtotal
-        first_spiked = {n: res["warm"][n] for n in spiked}
-        second = rerun()
-        re_subtotal = round(sum(second["warm"].values()), 3)
-        for n in names:
-            res["warm"][n] = min(res["warm"][n], second["warm"][n])
-            res["warm_runs"][n] = res["warm_runs"][n] + second["warm_runs"][n]
-        subtotal = round(sum(res["warm"].values()), 3)
-        verdict = {
-            "group": group,
-            "trigger": "subtotal" if subtotal_trip else "per_query",
-            "per_query_spikes": {
-                n: {"first": first_spiked[n], "adopted": res["warm"][n],
-                    "bracket": best_q[n]}
-                for n in spiked
-            },
-            "first_subtotal": first_subtotal,
-            "rerun_subtotal": re_subtotal,
-            "adopted_subtotal": subtotal,
-            "bracket": rec["best_subtotal"] if same_set else None,
-        }
-    best = subtotal
-    if same_set:
-        best = min(best, rec["best_subtotal"])
-    brackets[group] = {
-        "best_subtotal": best,
-        "queries": names,
-        "best_queries": {
-            n: round(min(res["warm"][n], best_q.get(n, res["warm"][n])), 3)
-            for n in names
-        },
-    }
-    return res, verdict
 
 
 def _group_of(name: str) -> str:
@@ -450,12 +301,8 @@ def _build_vector_corpus(dest: str, n_vecs: int) -> dict:
             "build_sec": round(time.perf_counter() - t0, 3)}
 
 
-def _run_group(group: str, sf_dir: str, second: str,
-               rerun: bool = False) -> dict:
-    """Child mode: run one group's queries in this process's own JVM.
-    ``rerun`` marks an adjudication re-measurement: only the warm numbers
-    are adopted by `_adjudicate`, so the sf2 leg and the index builds —
-    which the caller would discard — are skipped (review r14 #4)."""
+def _run_group(group: str, sf_dir: str, second: str) -> dict:
+    """Child mode: run one group's queries in this process's own JVM."""
     # Size the bench JVM heap to its 32 concurrent tasks (round-13 text_scale
     # diagnosis): at the session default 8g, 32 string-heavy tasks GC-thrash —
     # the leg read 30.8-38.0 s with uniform inflation and huge run-to-run
@@ -519,7 +366,7 @@ def _run_group(group: str, sf_dir: str, second: str,
         # are now a round-over-round series like the headline set, so they
         # carry the same two-pass variance bracket.
         warm_runs[name] = [run(spec, sf_dir) for _ in range(2)]
-    if not rerun and second and os.path.isdir(second) and second != sf_dir:
+    if second and os.path.isdir(second) and second != sf_dir:
         for name, spec in sorted(specs.items()):
             warm2[name] = run(spec, second)
 
@@ -536,7 +383,7 @@ def _run_group(group: str, sf_dir: str, second: str,
             "index_build": index_build,
             "k_scaled": k_scaled,
         }
-    if group == "trainers" and not rerun:
+    if group == "trainers":
         from auron_spark.pipeline.retrieval import build_bm25_index
         from auron_spark.pipeline.similarity import build_ivfpq_index
 
@@ -552,7 +399,7 @@ def _run_group(group: str, sf_dir: str, second: str,
         build_bm25_index(spark, sf_dir, force=True, out_dir=scratch)
         index_build["bm25_sec"] = round(time.perf_counter() - t0, 3)
         shutil.rmtree(scratch, ignore_errors=True)
-    if group == "text_scale" and not rerun:
+    if group == "text_scale":
         # The scale corpus is where the BM25 build cost is actually visible
         # (the driver fixture is 500 docs at every SF).
         from auron_spark.pipeline.retrieval import build_bm25_index
@@ -600,10 +447,7 @@ def main() -> None:
 
     if len(sys.argv) > 1 and sys.argv[1] == "--group":
         # Child: print this group's result as the last line and exit.
-        print(json.dumps(_run_group(
-            sys.argv[2], sys.argv[3], sys.argv[4],
-            rerun=len(sys.argv) > 5 and sys.argv[5] == "rerun",
-        )))
+        print(json.dumps(_run_group(sys.argv[2], sys.argv[3], sys.argv[4])))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--shard":
         print(json.dumps(_build_shards(sys.argv[2:])))
@@ -642,16 +486,8 @@ def main() -> None:
     warm2: dict[str, float] = {}
     subtotals: dict[str, float] = {}
     index_build: dict[str, float] = {}
-    brackets = _load_brackets(_scale_key(sf_dir))
-    adjudications: list[dict] = []
     for group in ("relational", "pipeline", "trainers"):
         res = _child(["--group", group, run_dir, second_dir])
-        res, verdict = _adjudicate(
-            group, res, brackets,
-            lambda g=group: _child(["--group", g, run_dir, "", "rerun"]),
-        )
-        if verdict:
-            adjudications.append(verdict)
         warm.update(res["warm"])
         warm_runs.update(res["warm_runs"])
         cold.update(res["cold"])
@@ -669,12 +505,6 @@ def main() -> None:
         built = _child(["--textcorpus", corpus, str(text_docs)])
         res = _child(["--group", "text_scale", corpus, ""])
         index_build.update(res.get("index_build", {}))
-        res, verdict = _adjudicate(
-            "text_scale", res, brackets,
-            lambda: _child(["--group", "text_scale", corpus, "", "rerun"]),
-        )
-        if verdict:
-            adjudications.append(verdict)
         subtotals["text_scale"] = round(sum(res["warm"].values()), 3)
         text_scale = {
             "n_docs": text_docs,
@@ -693,12 +523,6 @@ def main() -> None:
         vcorpus = f"{_SHARD_ROOT}/veccorpus_{vec_vecs}"
         vbuilt = _child(["--veccorpus", vcorpus, str(vec_vecs)])
         res = _child(["--group", "vector_scale", vcorpus, ""])
-        res, verdict = _adjudicate(
-            "vector_scale", res, brackets,
-            lambda: _child(["--group", "vector_scale", vcorpus, "", "rerun"]),
-        )
-        if verdict:
-            adjudications.append(verdict)
         subtotals["vector_scale"] = round(sum(res["warm"].values()), 3)
         vector_scale = {
             "n_vecs": vec_vecs,
@@ -728,14 +552,6 @@ def main() -> None:
         print(json.dumps({"section": "vector_scale", **vector_scale}))
     if index_build:
         print(json.dumps({"section": "index_build", **index_build}))
-    # Persist min-merged brackets (refused on a cross-scale record — see
-    # _persist_brackets), then report this run's adjudications — an empty
-    # list is itself the record that no group tripped its bracket.
-    persisted = _persist_brackets(brackets)
-    print(json.dumps({"section": "adjudication", "factor": _ADJUDICATE_FACTOR,
-                      "per_query_factor": _PER_QUERY_FACTOR,
-                      "brackets_persisted": persisted,
-                      "reruns": adjudications}))
     print(json.dumps({"section": "groups", "warm_subtotals": subtotals,
                       "quick_mode": quick, "cpus": cpus}))
     print(json.dumps({

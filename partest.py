@@ -1,29 +1,19 @@
-"""Parallel test runner (VERDICT r11 stretch #8): same coverage as
-``pytest tests/ -q``, split across concurrent worker PROCESSES, each with
-its own SparkSession and DuckDB connection.
+"""Parallel test runner: the same coverage as ``pytest tests/ -q``, split
+across as many worker processes as this machine's cores and RAM allow,
+each with its own SparkSession and DuckDB connection.
 
-pytest-xdist is not in this frozen environment, so the split is explicit:
-the 430+-query oracle battery — the suite's longest serial leg — shards
-round-robin via ``SPARK_GRAFT_ORACLE_SHARD=i/n`` (tests/test_oracle_all.py),
-the plans and fuzzer files shard the same way via the generic
-``SPARK_GRAFT_TEST_SHARD=i/n`` collection filter (tests/conftest.py), and
-the remaining files group into workers balanced by measured wall.
-Coverage-exactness of the whole plan is itself a harness test
-(``test_partest_plan_covers_whole_suite``).
-Concurrency safety relies on contracts the suite already carries: artifact
-builds publish with one atomic rename (`artifacts.ensure_artifact`), the
-bucketed-join query writes external tables into per-call tempdirs, and the
-single timing-gated test (window-group-limit pruning) keeps its
-min-of-three/3x margin and runs inside the plans worker alongside
-plan-shape asserts that are the real gate.
+``worker_count`` sizes the run: one worker per 4 cores, and no more
+workers than driver heaps (``SPARK_GRAFT_DRIVER_MEM``, default 8g, as in
+``session.get_spark``) fit in physical RAM.  Each worker runs the whole
+suite with ``SPARK_GRAFT_TEST_SHARD=i/n``, which ``tests/conftest.py``
+deals by md5 of the node id, so the n workers partition the suite exactly;
+with one worker the shard is left unset and the run is plain serial
+pytest.  Every worker runs ``local[cores // n]``.
 
-Each worker runs ``local[N]`` with N = cpu_count // workers (floor 4) so
-the box is shared instead of 10x oversubscribed.  Exit code is non-zero if
-any worker fails; per-worker tails print on failure.  Measured on the
-32-core box: 6 workers = 935 s wall, the round-12 10-worker rebalance =
-679 s (serial suite ~20 min) — per-test cost is driver-side-dominated
-(Catalyst/py4j/DuckDB), so test-level parallelism wins until the box
-saturates.
+Logs go to ``.partest/<i>.log``; each worker's rc, wall and pytest
+summary line print at the end, with the log tail of any failed worker.
+The exit code is non-zero if any worker fails.  Usage:
+``python partest.py`` (or ``make test-par``).
 """
 
 from __future__ import annotations
@@ -35,179 +25,59 @@ import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent)
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
-# Worker plan: (label, pytest args, extra env).  Round-12 rebalance: the
-# 6-worker split left a ~15 min critical path (each of oracle x3 / plans /
-# fuzzers / misc ran 14-16 min); the generic SPARK_GRAFT_TEST_SHARD device
-# (tests/conftest.py) now also halves the plans and fuzzers files, and the
-# oracle battery runs four shards.  Per-test cost is dominated by
-# driver-side work (Catalyst analysis, py4j, DuckDB), not executor compute,
-# so more workers at fewer cores each wins until the box saturates.
-_WORKERS: list[tuple[str, list[str], dict[str, str]]] = [
-    # Round-15 rebalance (the recorded-wall test fired twice after the
-    # round's 14 query additions re-dealt the round-robin shards —
-    # oracle-1 drew a ~505 s heavy hand and the whole-bench plan-golden
-    # test wandered between plans shards): the oracle battery splits
-    # FIVE ways on hash-stable names, and test_plan_stability.py — one
-    # test that builds every bench plan — gets its own worker so it can
-    # never reshuffle the plans legs.
-    ("oracle-0", ["tests/test_oracle_all.py"], {"SPARK_GRAFT_ORACLE_SHARD": "0/5"}),
-    ("oracle-1", ["tests/test_oracle_all.py"], {"SPARK_GRAFT_ORACLE_SHARD": "1/5"}),
-    ("oracle-2", ["tests/test_oracle_all.py"], {"SPARK_GRAFT_ORACLE_SHARD": "2/5"}),
-    ("oracle-3", ["tests/test_oracle_all.py"], {"SPARK_GRAFT_ORACLE_SHARD": "3/5"}),
-    ("oracle-4", ["tests/test_oracle_all.py"], {"SPARK_GRAFT_ORACLE_SHARD": "4/5"}),
-    ("goldens", ["tests/test_plan_stability.py"], {}),
-    ("plans-0", ["tests/test_plans.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "0/4"}),
-    ("plans-1", ["tests/test_plans.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "1/4"}),
-    ("plans-2", ["tests/test_plans.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "2/4"}),
-    ("plans-3", ["tests/test_plans.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "3/4"}),
-    ("fuzzers-0", ["tests/test_property_random.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "0/3"}),
-    ("fuzzers-1", ["tests/test_property_random.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "1/3"}),
-    ("fuzzers-2", ["tests/test_property_random.py"],
-     {"SPARK_GRAFT_TEST_SHARD": "2/3"}),
-    # The whole-registry cartesian sweep plans ~500 queries (212 s) — its
-    # own worker so no hash-dealt shard ever draws a 200 s outlier.
-    ("sweep", ["tests/test_sweep_global.py"], {}),
-    ("functions", ["tests/test_functions.py", "tests/test_harness.py"], {}),
-    # misc split in the r15 rebalance: the spill battery's child JVMs +
-    # the slow-marked streaming scale proofs made the old single misc
-    # worker the suite's critical path (349 s vs a 189 s median).
-    ("misc-0", ["tests/test_sources.py"], {}),
-    ("misc-1", ["tests/test_streaming.py", "tests/test_spill_pressure.py"],
-     {}),
-]
+
+def _size_bytes(size: str) -> int:
+    """A JVM memory size ("8g", "24576m"); a bare number is MiB, as in
+    ``spark.driver.memory``."""
+    size = size.strip().lower().removesuffix("b")
+    if size[-1:] in _UNITS:
+        return int(size[:-1]) * _UNITS[size[-1]]
+    return int(size) << 20
+
+
+def worker_count(cores: int, ram_bytes: int, heap: str) -> int:
+    """Workers for a box with ``cores`` cores and ``ram_bytes`` of physical
+    memory when each worker's driver heap is ``heap``."""
+    return max(1, min(cores // 4, ram_bytes // _size_bytes(heap)))
 
 
 def main() -> int:
-    cpus = os.cpu_count() or 32
-    per_worker = max(4, cpus // len(_WORKERS))
+    cores = os.cpu_count() or 1
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    n = worker_count(cores, ram, os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     logdir = Path(_REPO) / ".partest"
     logdir.mkdir(exist_ok=True)
+    print(f"partest: {n} worker(s) at local[{cores // n}]", flush=True)
     t0 = time.perf_counter()
-    procs = []
-    for label, args, extra in _WORKERS:
-        # FULL suite always: an inherited SPARK_GRAFT_SUITE=fast (the
-        # opt-in fast tier, tests/conftest.py) must not trim a worker;
-        # partest is the full-battery runner by contract.
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(per_worker),
-                   SPARK_GRAFT_SUITE="full", **extra)
-        log = (logdir / f"{label}.log").open("w")
-        procs.append(
-            (
-                label,
-                subprocess.Popen(
-                    [sys.executable, "-m", "pytest", "-q", *args],
-                    cwd=_REPO,
-                    env=env,
-                    stdout=log,
-                    stderr=subprocess.STDOUT,
-                ),
-                log,
+    procs = {}
+    for i in range(n):
+        # The full suite always: an inherited SPARK_GRAFT_SUITE=fast must
+        # not trim a worker.
+        env = dict(os.environ, SPARK_GRAFT_SUITE="full",
+                   SPARK_GRAFT_CPUS=str(cores // n))
+        env.pop("SPARK_GRAFT_TEST_SHARD", None)
+        if n > 1:
+            env["SPARK_GRAFT_TEST_SHARD"] = f"{i}/{n}"
+        with (logdir / f"{i}.log").open("w") as log:
+            procs[i] = subprocess.Popen(
+                [sys.executable, "-m", "pytest", "-q", "tests/"],
+                cwd=_REPO, env=env, stdout=log, stderr=subprocess.STDOUT,
             )
-        )
-    # Record each worker's own wall (poll, don't serialize on wait order) —
-    # the committed partest_walls.json feeds the rebalance harness test
-    # (VERDICT r12 stretch #8): a future addition that silently rebuilds a
-    # long critical path fails that test instead of hiding in total wall.
-    walls: dict[str, float] = {}
-    pending = {label: proc for label, proc, _log in procs}
-    while pending:
-        for label in list(pending):
-            if pending[label].poll() is not None:
-                walls[label] = round(time.perf_counter() - t0, 1)
-                del pending[label]
-        if pending:
-            time.sleep(1.0)
-    # Walls are measurements, not correctness — record them UNCONDITIONALLY
-    # so a stale committed record self-heals: if the file were gated on
-    # rc == 0, the balance test (which runs INSIDE the misc worker and
-    # fails exactly when the record is stale) would deadlock the refresh
-    # its own assertion message prescribes.
-    #
-    # Record schema (ADVICE r13 #1): {"best": {...}, "latest": {...},
-    # "counts": {...}}.  `best` is the elementwise min across runs — the
-    # box shows up to 1.6x same-run noise between IDENTICAL workloads (the
-    # four oracle shards carry 117-118 tests each and still spread
-    # 344-574 s in one run), so a single run's walls measure the weather
-    # and the min converges to the plan's inherent balance, which is what
-    # the harness test gates.  But a frozen min can never fire on a future
-    # slowdown, so the min RESETS per worker whenever that worker's
-    # collected-test count changes (a new test rebuilding a critical path
-    # produces a fresh wall instead of being discarded), and the whole
-    # record resets on a plan change (different label set).  `latest` is
-    # this run verbatim, for trend reading.
-    import json
-    import re
-
-    counts: dict[str, int] = {}
-    summaries: dict[str, str] = {}
-    for label, _proc, _log in procs:
-        tail = (logdir / f"{label}.log").read_text().strip().splitlines()
-        summaries[label] = tail[-1] if tail else "(no output)"
-        ran = sum(
-            int(n)
-            for n, word in re.findall(
-                r"(\d+) (passed|failed|skipped|xfailed|xpassed|error)",
-                summaries[label],
-            )
-        )
-        counts[label] = ran
-
-    best = dict(walls)
-    record_counts = dict(counts)
-    wpath = Path(_REPO) / "partest_walls.json"
-    if wpath.exists():
-        try:
-            old = json.loads(wpath.read_text())
-            old_best = old.get("best", old)  # pre-r14 records were flat
-            old_counts = old.get("counts", {})
-            if set(old_best) == set(walls):
-                # Merge ONLY when the recorded count proves the workload is
-                # unchanged — an unknown old count (pre-r14 flat record, or
-                # a hand-edited file) must reset, not merge: treating None
-                # as "unchanged" would min-merge walls measured under a
-                # different test plan, which is exactly the stale-floor
-                # failure the count reset exists to prevent (review r14 #1).
-                for k in walls:
-                    if (
-                        counts[k] == 0
-                        and old_counts.get(k, 0) > 0
-                        and "no tests ran" not in summaries[k]
-                    ):
-                        # The worker died before pytest printed a summary
-                        # line (count regex parsed nothing AND pytest's own
-                        # "no tests ran" marker is absent — a group that
-                        # legitimately collected zero tests prints it and
-                        # resets below): its short wall is an abort, not a
-                        # measurement — keep the prior best/count so the
-                        # bogus floor never commits; `latest` still records
-                        # the aborted run verbatim (ADVICE r14 #2, abort vs
-                        # emptied-group distinction per the r15 review).
-                        best[k] = old_best[k]
-                        record_counts[k] = old_counts[k]
-                    elif old_counts.get(k) == counts[k]:
-                        best[k] = min(walls[k], old_best[k])
-                    # else: workload changed/unknown — reset to this run.
-        except ValueError:
-            pass
-    record = {"best": best, "latest": walls, "counts": record_counts}
-    wpath.write_text(json.dumps(record, indent=1, sort_keys=True) + "\n")
+    walls: dict[int, float] = {}
+    while len(walls) < n:
+        for i, proc in procs.items():
+            if i not in walls and proc.poll() is not None:
+                walls[i] = round(time.perf_counter() - t0, 1)
+        time.sleep(1.0)
     rc = 0
-    for label, proc, log in procs:
-        code = proc.wait()
-        log.close()
-        # Print THIS run's measured wall (ADVICE r13 #2), not the merged
-        # historical best the JSON records.
-        print(f"[{label}] rc={code} wall={walls[label]}s {summaries[label]}")
-        if code != 0:
+    for i, proc in procs.items():
+        tail = (logdir / f"{i}.log").read_text().strip().splitlines()
+        summary = tail[-1] if tail else "(no output)"
+        print(f"[{i}/{n}] rc={proc.returncode} wall={walls[i]}s {summary}")
+        if proc.returncode != 0:
             rc = 1
-            tail = (logdir / f"{label}.log").read_text().strip().splitlines()
             print("\n".join(tail[-30:]))
     print(f"total wall: {time.perf_counter() - t0:.1f}s rc={rc}")
     return rc

@@ -59,28 +59,6 @@ def _counts_block() -> tuple[str, str]:
     return block, inline
 
 
-def dirty_round_records() -> list[str]:
-    """Round-record files whose on-disk state differs from git HEAD
-    (VERDICT r15 wrong #1, second consecutive dirty close: the closing
-    bench's bracket min-merges were left uncommitted while the walls were
-    committed).  The suite gate `test_harness.py::test_round_records_committed`
-    fails on any name returned here, so a bench run's bracket update must be
-    committed before the round's final green partest — making the r14/r15
-    dirty-close recurrence structurally impossible rather than a chore.
-    `partest_walls.json` is deliberately NOT checked: the final partest
-    itself refreshes it, so it is committed together with the brackets in
-    the round-close commit."""
-    import subprocess
-
-    out = subprocess.run(
-        ["git", "diff", "--name-only", "HEAD", "--", "bench_brackets.json"],
-        capture_output=True, text=True, cwd=_REPO,
-    )
-    if out.returncode != 0:  # not a git repo / no HEAD yet — nothing to gate
-        return []
-    return [ln.strip() for ln in out.stdout.splitlines() if ln.strip()]
-
-
 def sync_counts(check_only: bool = False) -> int:
     """Rewrite (or verify, for the drift test) the marker-delimited count
     lines in COVERAGE.md and README.md from the registry."""

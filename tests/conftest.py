@@ -147,34 +147,43 @@ _FAST_TIER_FILES = {
 }
 
 
+def _shard_spec(spec: str) -> tuple[int, int]:
+    """Parse ``SPARK_GRAFT_TEST_SHARD``: ``i/n`` with 0 <= i < n."""
+    try:
+        i, n = (int(x) for x in spec.split("/"))
+    except ValueError:
+        i, n = 0, 0
+    if not 0 <= i < n:
+        raise pytest.UsageError(
+            f"SPARK_GRAFT_TEST_SHARD={spec!r}: expected i/n with 0 <= i < n"
+        )
+    return i, n
+
+
 def pytest_collection_modifyitems(config, items):
-    """Generic worker sharding (the oracle battery's device, lifted to
-    ANY test file): ``SPARK_GRAFT_TEST_SHARD=i/n`` keeps every test whose
-    md5(nodeid) is congruent to i mod n.  HASH-STABLE dealing (r15: the
-    former sorted-index round-robin re-dealt the WHOLE deck whenever one
-    test was added, so every shard's recorded best wall in
-    partest_walls.json described a retired membership — and a count
-    collision could min-merge walls across different workloads): a
-    test's shard now depends only on its own nodeid, so insertions move
-    nothing else, the walls record stays honest per worker, and any two
-    workers that collect the same nodeid SET still partition it exactly
-    (the ADVICE r12 #2 property).  Unset (the default, and CI) collects
-    everything.
+    """Worker sharding for any test file: ``SPARK_GRAFT_TEST_SHARD=i/n``
+    keeps every test whose md5(nodeid) is congruent to i mod n.  A test's
+    shard depends only on its own nodeid, so adding a test moves nothing
+    else, and the n shards of one collection partition it exactly.
+    Unset (the default) collects everything; a malformed spec is a
+    usage error.
 
     With SPARK_GRAFT_SUITE=fast only the FAST tier is kept (see
-    `_FAST_TIER_FILES` above).  The tier's dropped items are reported as
-    deselected (they show in the summary's "N deselected"), and one
-    banner line names the tier that ran."""
+    `_FAST_TIER_FILES` above).  Items dropped by the shard or the tier
+    are reported as deselected (they show in the summary's "N
+    deselected"), and one banner line names the tier and shard that
+    ran."""
+    collected = len(items)
     shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
     if shard:
         import hashlib
 
-        i, n = (int(x) for x in shard.split("/"))
-        items[:] = [
+        i, n = _shard_spec(shard)
+        kept = [
             it for it in items
             if int(hashlib.md5(it.nodeid.encode()).hexdigest(), 16) % n == i
         ]
-    collected = len(items)
+        _deselect_all_but(config, items, kept)
     fast = os.environ.get("SPARK_GRAFT_SUITE") == "fast"
     if fast:
         from auron_spark.registry import bench_queries
@@ -193,16 +202,24 @@ def pytest_collection_modifyitems(config, items):
                 ).get("name")
                 if name in oracle_slice:
                     kept.append(it)
-        keep = {id(it) for it in kept}
-        config.hook.pytest_deselected(
-            items=[it for it in items if id(it) not in keep]
-        )
-        items[:] = kept
+        _deselect_all_but(config, items, kept)
     reporter = config.pluginmanager.get_plugin("terminalreporter")
     if reporter is not None:
+        where = f", shard {shard}" if shard else ""
         reporter.write_line(
-            f"suite tier: FAST, {len(items)} of {collected} tests kept "
+            f"suite tier: FAST{where}, {len(items)} of {collected} tests kept "
             "(unset SPARK_GRAFT_SUITE to run the whole battery)"
             if fast
-            else f"suite tier: full, all {collected} collected tests kept"
+            else f"suite tier: full{where}, {len(items)} of {collected} "
+            "collected tests kept"
         )
+
+
+def _deselect_all_but(config, items, kept) -> None:
+    """Narrow ``items`` to ``kept`` in place, reporting the rest as
+    deselected."""
+    keep = {id(it) for it in kept}
+    config.hook.pytest_deselected(
+        items=[it for it in items if id(it) not in keep]
+    )
+    items[:] = kept

@@ -1,18 +1,12 @@
 """Differential test: every registered query vs its DuckDB oracle at sf0.01 —
 the local mirror of the driver's CORRECTNESS gate.
 
-``SPARK_GRAFT_ORACLE_SHARD=i/n`` restricts collection to the queries
-whose md5(name) is congruent to i mod n, so ``partest.py`` can split
-this battery — by far the suite's longest serial leg — across
-concurrent worker processes.  HASH-STABLE dealing (r15): a query's
-shard depends only on its own name, so registering new queries never
-re-deals existing members and the committed per-worker walls stay
-honest.  Unset (the default, and CI) collects everything."""
+Sharding across worker processes is the generic
+``SPARK_GRAFT_TEST_SHARD=i/n`` filter in ``tests/conftest.py``, which
+deals each ``test_query_vs_oracle[<name>]`` by the md5 of its node id
+like every other test."""
 
 from __future__ import annotations
-
-import hashlib
-import os
 
 import pytest
 
@@ -25,17 +19,8 @@ from tests.conftest import (
 
 SPECS = load_all()
 
-_NAMES = sorted(SPECS)
-_SHARD = os.environ.get("SPARK_GRAFT_ORACLE_SHARD")
-if _SHARD:
-    _i, _n = (int(x) for x in _SHARD.split("/"))
-    _NAMES = [
-        q for q in _NAMES
-        if int(hashlib.md5(q.encode()).hexdigest(), 16) % _n == _i
-    ]
 
-
-@pytest.mark.parametrize("name", _NAMES)
+@pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_vs_oracle(name, spark, oracle):
     spec = SPECS[name]
     assert_oracle_scale_consistent(spec, SF_DIR)

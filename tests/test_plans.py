@@ -600,7 +600,7 @@ def test_zorder_layout_improves_both_dim_locality(spark):
 
 
 # test_no_cartesian_product_anywhere moved to tests/test_sweep_global.py
-# (whole-registry sweep, its own partest worker — r15 rebalance).
+# (whole-registry sweep, kept apart from the per-query plan gates).
 
 
 def test_weighted_sample_zero_exchange(spark):
@@ -1286,7 +1286,7 @@ def test_window_group_limit_prunes_heaviest_skew_key(spark):
 
     key = "spark.sql.optimizer.windowGroupLimitThreshold"
     default = spark.conf.get(key)
-    # Under partest (SPARK_GRAFT_TEST_SHARD set) the wall comparison below
+    # When sharded (SPARK_GRAFT_TEST_SHARD set) the wall comparison below
     # is skipped, so don't pay for its six timed runs either — one run per
     # plan mode feeds the plan-shape and row-equality asserts.
     timed = os.environ.get("SPARK_GRAFT_TEST_SHARD") is None
@@ -1320,10 +1320,10 @@ def test_window_group_limit_prunes_heaviest_skew_key(spark):
     # this SF, so a single background-task hiccup is the same order as the
     # measurement); 3x margin keeps the gate a pruning-regression tripwire,
     # not a microbenchmark — the plan-shape asserts above are the real gate.
-    # Under partest (SPARK_GRAFT_TEST_SHARD set) 10 concurrent JVMs share
-    # the box and sub-second walls measure scheduler weather, not pruning:
-    # the suite's ONLY timing assert was its only flake (VERDICT r13 #1),
-    # so the wall comparison runs in serial/isolated sessions only.
+    # When sharded (SPARK_GRAFT_TEST_SHARD set) N JVMs share the box and
+    # sub-second walls measure scheduler weather, not pruning: the suite's
+    # ONLY timing assert was its only flake (VERDICT r13 #1), so the wall
+    # comparison runs in serial/isolated sessions only.
     if timed:
         assert min(t_on1, t_on2, t_on3) <= min(t_off1, t_off2, t_off3) * 3.0, (
             t_on1, t_on2, t_on3, t_off1, t_off2, t_off3,

@@ -388,11 +388,11 @@ def test_python_stream_source_equals_batch(spark):
         )
 
     # Retry ONCE on the empty-sink infra signature: under heavy box load
-    # (partest's 10 concurrent JVMs) the Python streaming-source worker can
-    # fail its connect-back handshake, killing the query before the first
-    # micro-batch — the sink is then EMPTY, which is distinguishable from
-    # every data bug this test exists to catch (wrong/partial/duplicated
-    # rows still fail the equality below).
+    # (when sharded, N JVMs share the box) the Python streaming-source
+    # worker can fail its connect-back handshake, killing the query before
+    # the first micro-batch — the sink is then EMPTY, which is
+    # distinguishable from every data bug this test exists to catch
+    # (wrong/partial/duplicated rows still fail the equality below).
     streamed = run_stream(0)
     if not streamed:
         # Make the absorbed first failure visible in CI history (ADVICE

@@ -1,7 +1,6 @@
 """Whole-registry plan sweeps — every test here plans ALL ~500 registered
-queries, so the file gets its OWN partest worker (`sweep`): inside a
-hash-dealt shard it dominates whatever worker draws it (212 s vs ~1-6 s
-for a normal plan gate — the r15 rebalance finding)."""
+queries (about 212 s against 1-6 s for a normal plan gate), so it is kept
+apart from the per-query plan gates in test_plans.py."""
 
 from __future__ import annotations
 
