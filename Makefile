@@ -1,5 +1,5 @@
 check:
-	python selfcheck.py
+	python -m pytest tests/test_oracle_all.py -q
 
 # The whole suite (~40 min serial on 4 cores); SPARK_GRAFT_SUITE=fast
 # keeps only the fast tier (harness gates, bench plan goldens, the bench

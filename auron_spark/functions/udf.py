@@ -118,7 +118,7 @@ def udf_python_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas_udf in hot paths."""
 
     @F.udf("string")
-    def noun_of(name: str) -> str:
+    def noun_of(name):
         parts = (name or "").split(" ")
         return parts[1].upper() if len(parts) >= 2 else "?"
 

@@ -2,68 +2,36 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output protocol (VERDICT r6 asks #2/#3 — the r6 single-line payload outgrew
-the driver's tail-capture window and parsed as null):
-- several leading JSON lines carry the bulky sections (`{"section": "cold",
-  ...}`, `{"section": "sf2", ...}`, `{"section": "groups", ...}`,
-  `{"section": "shards", ...}`, `{"section": "variance", ...}`,
-  `{"section": "index_build", ...}`);
-- the LAST printed line is the compact headline
-  `{"metric", "value", "unit", "queries", "sf"}` — always complete inside a
-  tail-capture window, so the driver can parse it.
+Output: one JSON object per line.  The leading lines are sections —
+``{"section": "shards", ...}`` (the one-time fixture resharding),
+``"cold"``, ``"variance"`` (both warm passes of every query), the scale
+legs ``"text_scale"`` and ``"vector_scale"`` when they run, and
+``"groups"`` (per-group warm subtotals and the core count).  The LAST line
+is the compact headline ``{"metric", "value", "unit", "queries", "sf"}``,
+so a tail capture of stdout always ends in one complete JSON object.
 
-Isolation (VERDICT r6 ask #3): queries run in three session GROUPS, each in
-its own subprocess (fresh JVM), ordered light→heavy:
-  1. `relational` — TPC-H shapes, windows, skew joins, stats;
-  2. `pipeline`   — text/dedup/retrieval/multimodal map-side pipelines;
-  3. `trainers`   — iterative heavyweights (Lloyd, IVF-PQ, SemDeDup, CC).
-Round 6 ran all 24 queries alphabetically in ONE JVM, so the TPC-H shapes
-inherited JIT/GC pollution from the trainers and read 2.5-3.7× worse than r5
-while plan goldens were unchanged.  Per-group subtotals make round-over-round
-comparison apples-to-apples.
+Each query runs cold and then warm twice; a query's headline number is the
+min of its two warm passes (warm, because at scale the one-shot compile
+costs amortize away).  The queries run in three session groups, each
+in its own subprocess (fresh JVM), light to heavy: ``relational``,
+``pipeline``, ``trainers`` — so the relational shapes never inherit the
+trainers' JIT and GC state.  The fixtures are single-row-group parquet
+(one scan task each), so every table is first rewritten into
+``.bench_shards/<sf>/`` with multiple part files (layout only: rows, values
+and read schema are identical) and the queries read the sharded copy.
 
-Sharded fixtures (VERDICT r7 ask #4 — measurement honesty, not gaming): the
-driver fixtures are single-row-group parquet, so every scan is ONE task and
-every query pays a serial-scan + JIT floor that masks plan quality; at 100 TB
-every scan has thousands of splits.  Unless SPARK_GRAFT_BENCH_SHARD=0, the
-harness first rewrites each table into `.bench_shards/<sf>/<table>.parquet/`
-with multiple part files (32 for facts, fewer for dims — layout-only; rows,
-values and read-schema are identical, and correctness runs still read the
-untouched originals) and benches against the sharded copy.  The one-time
-build cost is reported in its own `shards` section, never in the headline.
-
-Variance guard (VERDICT r7 ask #3): each query runs cold + TWO warm passes;
-the headline warm number is the MIN of the two (steady-state, box-weather
-suppressed) and the `variance` section carries both, so a real plan
-regression (both runs move) is distinguishable from box noise (one run
-spikes) round-over-round.
-
-Train-once visibility (VERDICT r7 ask #5): the trainers group also times a
-forced IVF-PQ index rebuild into a scratch dir — the `index_build` section —
-so the train-once cost the serve queries amortize is tracked explicitly
-instead of invisibly.  Round 10 adds the BM25 inverted-index build next to
-it (VERDICT r9 ask #6) — both persisted indexes now report build cost.
-
-Text-scale group (VERDICT r9 ask #3): the driver's documents fixture is 500
-rows at EVERY SF, so the text/dedup/simjoin families were never timed above
-500 docs — a constant-factor regression in the shingle/verify stages would
-be invisible.  The `text_scale` section runs the flagship text queries over
-a deterministic synthetic corpus (default 65,536 docs, zipf-skewed 10k-word
-vocab, planted exact + near duplicates; override with SPARK_GRAFT_TEXT_DOCS,
-0 disables).  Correctness is untouched — oracle runs still read the driver
-fixture; this group exists purely to time the scale path, so its numbers
-live in their own section and group subtotal, never in the headline series.
-
-Methodology: the headline `value` / `queries` numbers are warm times: at
-100 TB the one-shot compile costs amortize to zero, so warm is the number
-that scales.
+The scale legs time the flagship text and vector queries over
+deterministic synthetic corpora (SPARK_GRAFT_TEXT_DOCS documents,
+SPARK_GRAFT_VECTOR_VECS vectors; 0 skips a leg).  They default to 65,536
+and 32,768 on a box with 16 or more cores and to 0 below that (a run with
+both legs took about 53 minutes on a 32-core box).  Their numbers never
+enter the headline.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
@@ -72,6 +40,8 @@ from pathlib import Path
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+from auron_spark.session import default_parallelism  # noqa: E402
 
 # Iterative trainers: multi-round jobs whose localCheckpoint/JIT footprint
 # pollutes anything sharing their JVM.  Run last, in their own session.
@@ -149,31 +119,35 @@ def _shard_dir_for(sf_dir: str) -> str:
     return f"{_SHARD_ROOT}/{Path(sf_dir.rstrip('/')).name}"
 
 
-def _build_shards(dirs: list[str]) -> dict:
-    """Child mode: reshard each fixture dir into .bench_shards (idempotent
-    + atomic via ensure_artifact); returns per-dir build seconds."""
+def _scale_size(var: str, full: int) -> int:
+    """A scale leg's corpus size: ``$var``, else ``full`` on a box with 16
+    or more cores and 0 (the leg is skipped) below that."""
+    return int(os.environ.get(var, full if default_parallelism() >= 16 else 0))
+
+
+def _build_shards(sf_dir: str) -> dict:
+    """Child mode: reshard the fixture dir into .bench_shards (idempotent
+    + atomic via ensure_artifact); returns {shard dir: build seconds}."""
     from auron_spark.artifacts import ensure_artifact
     from auron_spark.session import get_spark
     from auron_spark.tables import TABLE_NAMES, table
 
     spark = get_spark("auron-spark-bench-shard")
     spark.sparkContext.setLogLevel("WARN")
-    out: dict[str, float] = {}
-    for sf_dir in dirs:
-        dest = _shard_dir_for(sf_dir)
-        t0 = time.perf_counter()
+    dest = _shard_dir_for(sf_dir)
+    t0 = time.perf_counter()
 
-        def _build(into: str, src: str = sf_dir) -> None:
-            for name in TABLE_NAMES:
-                # table() normalizes physical quirks (ns timestamps) once;
-                # the sharded copy is then uniform for every reader.
-                df = table(spark, src, name)
-                df.repartition(_SHARD_SPLITS.get(name, 8)).write.mode(
-                    "overwrite"
-                ).parquet(f"{into}/{name}.parquet")
+    def _build(into: str) -> None:
+        for name in TABLE_NAMES:
+            # table() normalizes physical quirks (ns timestamps) once;
+            # the sharded copy is then uniform for every reader.
+            df = table(spark, sf_dir, name)
+            df.repartition(_SHARD_SPLITS.get(name, 8)).write.mode(
+                "overwrite"
+            ).parquet(f"{into}/{name}.parquet")
 
-        ensure_artifact(dest, "_SHARDS_COMPLETE", _build)
-        out[dest] = round(time.perf_counter() - t0, 3)
+    ensure_artifact(dest, "_SHARDS_COMPLETE", _build)
+    out = {dest: round(time.perf_counter() - t0, 3)}
     spark.stop()
     return out
 
@@ -301,7 +275,7 @@ def _build_vector_corpus(dest: str, n_vecs: int) -> dict:
             "build_sec": round(time.perf_counter() - t0, 3)}
 
 
-def _run_group(group: str, sf_dir: str, second: str) -> dict:
+def _run_group(group: str, sf_dir: str) -> dict:
     """Child mode: run one group's queries in this process's own JVM."""
     # Size the bench JVM heap to its 32 concurrent tasks (round-13 text_scale
     # diagnosis): at the session default 8g, 32 string-heavy tasks GC-thrash —
@@ -329,7 +303,7 @@ def _run_group(group: str, sf_dir: str, second: str) -> dict:
 
         from auron_spark.pipeline import similarity as _sim
 
-        n_vecs = int(os.environ.get("SPARK_GRAFT_VECTOR_VECS", "32768"))
+        n_vecs = _scale_size("SPARK_GRAFT_VECTOR_VECS", 32768)
         # Single source of truth for the knob; main() reports this value.
         k_scaled = sk = max(_sim.KM_K, n_vecs // 256)
         specs = {n: all_specs[n] for n in _VECTOR_SCALE_QUERIES}
@@ -359,64 +333,14 @@ def _run_group(group: str, sf_dir: str, second: str) -> dict:
 
     cold: dict[str, float] = {}
     warm_runs: dict[str, list[float]] = {}
-    warm2: dict[str, float] = {}
     for name, spec in sorted(specs.items()):
         cold[name] = run(spec, sf_dir)
-        # Two warm passes EVERYWHERE (VERDICT r10 ask #3): the scale legs
-        # are now a round-over-round series like the headline set, so they
-        # carry the same two-pass variance bracket.
         warm_runs[name] = [run(spec, sf_dir) for _ in range(2)]
-    if second and os.path.isdir(second) and second != sf_dir:
-        for name, spec in sorted(specs.items()):
-            warm2[name] = run(spec, second)
-
-    index_build: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_INDEX_BUILDS", "1") == "0":
-        # Quick mode (low-core scaling leg): skip the train-once index
-        # rebuild timings — they are their own section, never headline rows.
-        spark.stop()
-        return {
-            "warm": {n: min(r) for n, r in warm_runs.items()},
-            "warm_runs": warm_runs,
-            "cold": cold,
-            "sf2": warm2,
-            "index_build": index_build,
-            "k_scaled": k_scaled,
-        }
-    if group == "trainers":
-        from auron_spark.pipeline.retrieval import build_bm25_index
-        from auron_spark.pipeline.similarity import build_ivfpq_index
-
-        scratch = f"{_SHARD_ROOT}/.scratch_ivfpq-{os.getpid()}"
-        t0 = time.perf_counter()
-        build_ivfpq_index(spark, sf_dir, force=True, out_dir=scratch)
-        index_build["ivfpq_sec"] = round(time.perf_counter() - t0, 3)
-        shutil.rmtree(scratch, ignore_errors=True)
-        # BM25 inverted-index build next to ivfpq's (VERDICT r9 ask #6):
-        # both persisted serve indexes now report their train-once cost.
-        scratch = f"{_SHARD_ROOT}/.scratch_bm25-{os.getpid()}"
-        t0 = time.perf_counter()
-        build_bm25_index(spark, sf_dir, force=True, out_dir=scratch)
-        index_build["bm25_sec"] = round(time.perf_counter() - t0, 3)
-        shutil.rmtree(scratch, ignore_errors=True)
-    if group == "text_scale":
-        # The scale corpus is where the BM25 build cost is actually visible
-        # (the driver fixture is 500 docs at every SF).
-        from auron_spark.pipeline.retrieval import build_bm25_index
-
-        scratch = f"{_SHARD_ROOT}/.scratch_bm25s-{os.getpid()}"
-        t0 = time.perf_counter()
-        build_bm25_index(spark, sf_dir, force=True, out_dir=scratch)
-        index_build["bm25_scale_sec"] = round(time.perf_counter() - t0, 3)
-        shutil.rmtree(scratch, ignore_errors=True)
-
     spark.stop()
     return {
         "warm": {n: min(r) for n, r in warm_runs.items()},
         "warm_runs": warm_runs,
         "cold": cold,
-        "sf2": warm2,
-        "index_build": index_build,
         "k_scaled": k_scaled,
     }
 
@@ -424,33 +348,13 @@ def _run_group(group: str, sf_dir: str, second: str) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    second = os.environ.get(
-        "SPARK_GRAFT_BENCH_SECOND_SF", "/root/testdata/sf0.01"
-    )
-    # Quick mode (VERDICT r16 next #3: the 8-core scaling leg timed out at
-    # rc=124 because the full run — scale corpora + scale legs + sf2 legs +
-    # index rebuilds — is a ~53 min wall at 32 cores, far past the driver
-    # budget at 8).  When the core count is low the run keeps the ENTIRE
-    # headline query set with the identical cold + 2-warm min methodology
-    # (so per-query scaling ratios are apples-to-apples with the 32-core
-    # run) and drops only the extra sections that never feed the headline
-    # line: the second-SF pass, the text/vector scale legs, and the index
-    # rebuild timings.  Explicit override: SPARK_GRAFT_BENCH_QUICK=0/1.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    quick = os.environ.get("SPARK_GRAFT_BENCH_QUICK")
-    quick = (cpus < 16) if quick is None else (quick == "1")
-    if quick:
-        second = ""
-        os.environ.setdefault("SPARK_GRAFT_TEXT_DOCS", "0")
-        os.environ.setdefault("SPARK_GRAFT_VECTOR_VECS", "0")
-        os.environ["SPARK_GRAFT_BENCH_INDEX_BUILDS"] = "0"
 
     if len(sys.argv) > 1 and sys.argv[1] == "--group":
         # Child: print this group's result as the last line and exit.
-        print(json.dumps(_run_group(sys.argv[2], sys.argv[3], sys.argv[4])))
+        print(json.dumps(_run_group(sys.argv[2], sys.argv[3])))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--shard":
-        print(json.dumps(_build_shards(sys.argv[2:])))
+        print(json.dumps(_build_shards(sys.argv[2])))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--textcorpus":
         print(json.dumps(_build_text_corpus(sys.argv[2], int(sys.argv[3]))))
@@ -471,40 +375,29 @@ def main() -> None:
             raise SystemExit(f"bench child {args[0]} failed rc={proc.returncode}")
         return json.loads(proc.stdout.strip().splitlines()[-1])
 
-    shard_sec: dict[str, float] = {}
-    run_dir, second_dir = sf_dir, second
-    if os.environ.get("SPARK_GRAFT_BENCH_SHARD", "1") != "0":
-        want = [d for d in (sf_dir, second) if d and os.path.isdir(d)]
-        shard_sec = _child(["--shard", *want])
-        run_dir = _shard_dir_for(sf_dir)
-        if second and os.path.isdir(second):
-            second_dir = _shard_dir_for(second)
+    shard_sec = _child(["--shard", sf_dir])
+    run_dir = _shard_dir_for(sf_dir)
 
     warm: dict[str, float] = {}
     warm_runs: dict[str, list[float]] = {}
     cold: dict[str, float] = {}
-    warm2: dict[str, float] = {}
     subtotals: dict[str, float] = {}
-    index_build: dict[str, float] = {}
     for group in ("relational", "pipeline", "trainers"):
-        res = _child(["--group", group, run_dir, second_dir])
+        res = _child(["--group", group, run_dir])
         warm.update(res["warm"])
         warm_runs.update(res["warm_runs"])
         cold.update(res["cold"])
-        warm2.update(res["sf2"])
-        index_build.update(res.get("index_build", {}))
         subtotals[group] = round(sum(res["warm"].values()), 3)
 
     # Text-scale leg: flagship text/dedup queries over the synthetic corpus.
     # Separate section + subtotal; NEVER merged into the headline series
-    # (which stays round-over-round comparable on the driver fixtures).
-    text_docs = int(os.environ.get("SPARK_GRAFT_TEXT_DOCS", "65536"))
+    # (which stays comparable on the driver fixtures).
+    text_docs = _scale_size("SPARK_GRAFT_TEXT_DOCS", 65536)
     text_scale: dict = {}
     if text_docs > 0:
         corpus = f"{_SHARD_ROOT}/textcorpus_{text_docs}"
         built = _child(["--textcorpus", corpus, str(text_docs)])
-        res = _child(["--group", "text_scale", corpus, ""])
-        index_build.update(res.get("index_build", {}))
+        res = _child(["--group", "text_scale", corpus])
         subtotals["text_scale"] = round(sum(res["warm"].values()), 3)
         text_scale = {
             "n_docs": text_docs,
@@ -517,12 +410,12 @@ def main() -> None:
     # Vector-scale leg: flagship ANN/dedup queries over the synthetic
     # embedding corpus, k-means-backed ones at k = n/256.  Same contract as
     # text_scale: separate section, never merged into the headline series.
-    vec_vecs = int(os.environ.get("SPARK_GRAFT_VECTOR_VECS", "32768"))
+    vec_vecs = _scale_size("SPARK_GRAFT_VECTOR_VECS", 32768)
     vector_scale: dict = {}
     if vec_vecs > 0:
         vcorpus = f"{_SHARD_ROOT}/veccorpus_{vec_vecs}"
         vbuilt = _child(["--veccorpus", vcorpus, str(vec_vecs)])
-        res = _child(["--group", "vector_scale", vcorpus, ""])
+        res = _child(["--group", "vector_scale", vcorpus])
         subtotals["vector_scale"] = round(sum(res["warm"].values()), 3)
         vector_scale = {
             "n_vecs": vec_vecs,
@@ -533,27 +426,20 @@ def main() -> None:
             "queries_cold": res["cold"],
         }
 
-    sf2 = float(second.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in second else -1.0
     # Bulky sections lead; the compact headline is the LAST line so a
     # tail-capture of stdout always contains one complete parseable JSON.
-    if shard_sec:
-        print(json.dumps({"section": "shards", "build_sec": shard_sec,
-                          "run_dir": run_dir,
-                          "splits": _SHARD_SPLITS}))
+    print(json.dumps({"section": "shards", "build_sec": shard_sec,
+                      "run_dir": run_dir,
+                      "splits": _SHARD_SPLITS}))
     print(json.dumps({"section": "cold", "queries_cold": cold,
                       "total_cold": round(sum(cold.values()), 3)}))
-    if warm2:
-        print(json.dumps({"section": "sf2", "sf2": sf2, "queries_sf2": warm2,
-                          "total_sf2": round(sum(warm2.values()), 3)}))
     print(json.dumps({"section": "variance", "warm_runs": warm_runs}))
     if text_scale:
         print(json.dumps({"section": "text_scale", **text_scale}))
     if vector_scale:
         print(json.dumps({"section": "vector_scale", **vector_scale}))
-    if index_build:
-        print(json.dumps({"section": "index_build", **index_build}))
     print(json.dumps({"section": "groups", "warm_subtotals": subtotals,
-                      "quick_mode": quick, "cpus": cpus}))
+                      "cpus": default_parallelism()}))
     print(json.dumps({
         "metric": "headline_queries_total_wall",
         "value": round(sum(warm.values()), 3),

@@ -120,8 +120,16 @@ def assert_oracle_scale_consistent(spec, sf_dir: str) -> None:
 
 
 def assert_matches_oracle(spark_df, con, sql: str, name: str = "") -> None:
-    got = normalize(spark_df.toPandas())
-    want = normalize(con.execute(sql).df())
+    """Same column names (sorted, case-insensitive), same row count, and
+    the same order-insensitive, type-class-sensitive values."""
+    got_df, want_df = spark_df.toPandas(), con.execute(sql).df()
+    got_cols, want_cols = (
+        sorted(map(str.lower, df.columns)) for df in (got_df, want_df)
+    )
+    assert got_cols == want_cols, (
+        f"{name}: columns {got_cols} != oracle {want_cols}"
+    )
+    got, want = normalize(got_df), normalize(want_df)
     assert len(got) == len(want), (
         f"{name}: row count {len(got)} != oracle {len(want)}"
     )
@@ -160,6 +168,10 @@ def _shard_spec(spec: str) -> tuple[int, int]:
     return i, n
 
 
+_COLLECTED = pytest.StashKey[int]()
+
+
+@pytest.hookimpl(tryfirst=True)  # before -k/-m: count the whole collection
 def pytest_collection_modifyitems(config, items):
     """Worker sharding for any test file: ``SPARK_GRAFT_TEST_SHARD=i/n``
     keeps every test whose md5(nodeid) is congruent to i mod n.  A test's
@@ -171,9 +183,9 @@ def pytest_collection_modifyitems(config, items):
     With SPARK_GRAFT_SUITE=fast only the FAST tier is kept (see
     `_FAST_TIER_FILES` above).  Items dropped by the shard or the tier
     are reported as deselected (they show in the summary's "N
-    deselected"), and one banner line names the tier and shard that
-    ran."""
-    collected = len(items)
+    deselected"); `pytest_report_collectionfinish` names the tier and
+    shard that ran."""
+    config.stash[_COLLECTED] = len(items)
     shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
     if shard:
         import hashlib
@@ -184,8 +196,7 @@ def pytest_collection_modifyitems(config, items):
             if int(hashlib.md5(it.nodeid.encode()).hexdigest(), 16) % n == i
         ]
         _deselect_all_but(config, items, kept)
-    fast = os.environ.get("SPARK_GRAFT_SUITE") == "fast"
-    if fast:
+    if os.environ.get("SPARK_GRAFT_SUITE") == "fast":
         from auron_spark.registry import bench_queries
 
         oracle_slice = {
@@ -203,16 +214,24 @@ def pytest_collection_modifyitems(config, items):
                 if name in oracle_slice:
                     kept.append(it)
         _deselect_all_but(config, items, kept)
-    reporter = config.pluginmanager.get_plugin("terminalreporter")
-    if reporter is not None:
-        where = f", shard {shard}" if shard else ""
-        reporter.write_line(
+
+
+def pytest_report_collectionfinish(config, items):
+    """The banner line naming the tier and shard that run.  pytest calls
+    this hook after every deselection (the shard, the tier, ``-k``,
+    ``-m``), so it counts the tests that will actually run."""
+    shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
+    where = f", shard {shard}" if shard else ""
+    collected = config.stash.get(_COLLECTED, len(items))
+    if os.environ.get("SPARK_GRAFT_SUITE") == "fast":
+        return (
             f"suite tier: FAST{where}, {len(items)} of {collected} tests kept "
             "(unset SPARK_GRAFT_SUITE to run the whole battery)"
-            if fast
-            else f"suite tier: full{where}, {len(items)} of {collected} "
-            "collected tests kept"
         )
+    return (
+        f"suite tier: full{where}, {len(items)} of {collected} "
+        "collected tests kept"
+    )
 
 
 def _deselect_all_but(config, items, kept) -> None:

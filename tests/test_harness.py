@@ -9,7 +9,7 @@ from decimal import Decimal
 import pandas as pd
 import pytest
 
-from tests.conftest import SF_SMOKE, _norm_cell
+from tests.conftest import SF_DIR, SF_SMOKE, _norm_cell, assert_matches_oracle
 
 
 def test_int_vs_float_distinct():
@@ -39,6 +39,29 @@ def test_nested_arrays_tagged():
     assert _norm_cell([1, 2]) == _norm_cell((1, 2))
 
 
+def test_oracle_compare_checks_column_names():
+    """Equal values under a renamed column fail the oracle compare; the
+    same frame under the oracle's names passes (no Spark: a stub with
+    ``toPandas`` stands in for the Spark frame)."""
+    from types import SimpleNamespace
+
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"k": [1, 2], "v": ["a", "b"]}))
+    sql = "SELECT k, v AS label FROM t"
+    same = SimpleNamespace(toPandas=lambda: pd.DataFrame(
+        {"K": [2, 1], "label": ["b", "a"]}
+    ))
+    renamed = SimpleNamespace(toPandas=lambda: pd.DataFrame(
+        {"k": [1, 2], "name": ["a", "b"]}
+    ))
+    assert_matches_oracle(same, con, sql, "same")
+    with pytest.raises(AssertionError, match="columns"):
+        assert_matches_oracle(renamed, con, sql, "renamed")
+    con.close()
+
+
 def _tier_collection(monkeypatch, suite, args, shard=None):
     """Drive `conftest.pytest_collection_modifyitems` on synthetic items —
     one oracle test per registered query plus a harness and a plans test
@@ -66,7 +89,7 @@ def _tier_collection(monkeypatch, suite, args, shard=None):
         hook=SimpleNamespace(
             pytest_deselected=lambda items: deselected.extend(items)
         ),
-        pluginmanager=SimpleNamespace(get_plugin=lambda name: None),
+        stash={},
     )
     if suite is None:
         monkeypatch.delenv("SPARK_GRAFT_SUITE", raising=False)
@@ -131,6 +154,33 @@ def test_test_shards_partition_the_suite(monkeypatch):
     # Sizes that add up to the union's are pairwise disjoint.
     union = set().union(*kept)
     assert sum(map(len, kept)) == len(union) == len(specs) + 2
+
+
+def test_tier_banner_counts_after_keyword_deselection():
+    """The tier banner counts the tests that will run after pytest's own
+    ``-k`` deselection (a hook of pytest's, so a real collection in a
+    child process), not the ones the shard and the tier kept."""
+    import os
+    import re
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_SUITE", "SPARK_GRAFT_TEST_SHARD")
+    }
+    proc = subprocess.run(
+        [sys.executable, "-m", "pytest", "--collect-only", "-q",
+         "-k", "nan_equals_nan or int_vs_float", __file__],
+        capture_output=True, text=True, env=env,
+        cwd=Path(__file__).resolve().parent.parent,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    total = int(re.search(r"2/(\d+) tests collected", proc.stdout).group(1))
+    assert total > 2
+    assert f"suite tier: full, 2 of {total} collected tests kept" \
+        in proc.stdout, proc.stdout
 
 
 @pytest.mark.parametrize("shard", ["2/2", "0/0", "a/b", "1"])
@@ -314,21 +364,45 @@ def test_no_bare_array_or_map_output_columns(spark):
 
 
 def test_coverage_counts_in_sync():
-    """VERDICT r7 stretch #8: the coverage headline numbers in COVERAGE.md
-    and README.md are generated from the registry by `selfcheck.py
-    --sync-counts`; this gate fails the suite if they drift (run the sync
-    after registering or proving queries)."""
+    """The coverage headline numbers in COVERAGE.md and README.md are
+    generated from the registry by `python selfcheck.py`; this gate fails
+    the suite if they drift (run the sync after registering queries)."""
     import selfcheck
 
     assert selfcheck.sync_counts(check_only=True) == 0
 
 
+def test_fixture_dtypes_pinned(spark):
+    """Fixture-schema canary: regenerated fixtures have drifted column
+    types before (events.ts went from ns-int64 to timestamp[us]), so the
+    columns whose physical type the readers depend on are pinned here —
+    one clear failure instead of dozens of per-query oracle mismatches."""
+    from auron_spark.tables import table
+
+    pinned = {
+        "events": {"ts": {"timestamp", "timestamp_ntz"}},
+        "lineitem": {"l_shipdate": {"date", "timestamp", "timestamp_ntz"}},
+        "orders": {"o_orderdate": {"date", "timestamp", "timestamp_ntz"}},
+        "embeddings": {"embedding": {"array<float>", "array<double>"}},
+    }
+    drift = {}
+    for tbl, cols in pinned.items():
+        dtypes = dict(table(spark, SF_DIR, tbl).dtypes)
+        for col, allowed in cols.items():
+            if dtypes.get(col) not in allowed:
+                drift[f"{tbl}.{col}"] = (dtypes.get(col), sorted(allowed))
+    assert not drift, (
+        f"fixture schema drift at {SF_DIR} (read as, expected one of): "
+        f"{drift}; audit tables.py"
+    )
+
+
 def test_no_decimal_typed_oracle_columns(oracle):
     """Round-8 regression gate: DuckDB types bare numeric literals (and
     un-cast money sums) as DECIMAL, which the driver's type-sensitive
-    value hash sees as a different class than Spark's double — while the
-    pandas path in selfcheck silently converts and masks it (caught live
-    in dq_benford_digits).  Every oracle's result schema must be
+    value hash sees as a different class than Spark's double — while a
+    comparison through pandas can silently convert and mask it (caught
+    live in dq_benford_digits).  Every oracle's result schema must be
     DECIMAL-free: cast to DOUBLE/BIGINT at the oracle's outermost select."""
     from auron_spark.registry import load_all
 
