@@ -45,28 +45,28 @@ def ensure_artifact(
     final_dir: str,
     marker_name: str,
     build_into: Callable[[str], None],
-    force: bool = False,
 ) -> str:
-    """Concurrency-safe idempotent artifact build (ADVICE r7 #4).
+    """Concurrency-safe idempotent artifact build.
 
-    The pre-r8 builders checked/touched the marker directly in the final
-    directory, so two processes racing past a missing marker could
-    interleave ``mode("overwrite")`` writes and commit a torn artifact.
-    Now the build lands in a uniquely-named sibling temp dir and is
-    published with ONE atomic ``os.rename``:
+    Checking and touching the marker directly in the final directory
+    would let two processes racing past a missing marker interleave
+    ``mode("overwrite")`` writes and commit a torn artifact.  So the
+    build lands in a uniquely-named sibling temp dir and is published
+    with ONE atomic ``os.rename``:
 
-    - marker present and not ``force`` → return immediately (train-once);
+    - marker present → return immediately (train-once);
     - otherwise build into ``<final>.tmp-<pid>-<rand>``, touch the marker
       INSIDE the temp dir, then rename into place;
     - rename fails because a racer already published → discard our temp
       (their artifact is complete by construction: the marker only ever
       travels inside a fully-built tree);
-    - ``force`` (or a torn final dir with no marker, from a pre-r8 crash)
-      → move the stale tree aside, publish, delete the stale tree.
+    - a torn final dir with no marker (from a crash of a builder that
+      wrote in place) → move the stale tree aside, publish, delete the
+      stale tree.
     """
     final = Path(final_dir)
     marker = final / marker_name
-    if marker.exists() and not force:
+    if marker.exists():
         return str(final)
     tmp = final.with_name(f"{final.name}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}")
     shutil.rmtree(tmp, ignore_errors=True)
@@ -75,7 +75,7 @@ def ensure_artifact(
         build_into(str(tmp))
         (tmp / marker_name).touch()
         final.parent.mkdir(parents=True, exist_ok=True)
-        if final.exists() and (force or not marker.exists()):
+        if final.exists() and not marker.exists():
             stale = final.with_name(
                 f"{final.name}.stale-{os.getpid()}-{uuid.uuid4().hex[:8]}"
             )

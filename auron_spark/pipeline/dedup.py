@@ -2940,10 +2940,7 @@ def _band_bucket(band: Column) -> Column:
     return F.pmod(F.hash(band), N_LSH_BUCKETS)
 
 
-def build_lsh_index(
-    spark: SparkSession, sf_dir: str, force: bool = False,
-    out_dir: str | None = None,
-) -> str:
+def build_lsh_index(spark: SparkSession, sf_dir: str) -> str:
     """Build and persist the MinHash/LSH band index of the STANDING corpus
     (doc_id % 10 <> 0, the same convention as `dedup_bloom_prefilter`'s
     incremental-admission split) as a parquet artifact:
@@ -2962,7 +2959,6 @@ def build_lsh_index(
     signature/banding pipeline is the EXACT inline one
     (`minhash_signature` + `band_assignments`), so the persisted index
     is definitionally consistent with `dedup_minhash_lsh_pairs`."""
-    d = out_dir or lsh_index_dir(sf_dir)
 
     def _build(into: str) -> None:
         t = Tables(spark, sf_dir)
@@ -2993,7 +2989,9 @@ def build_lsh_index(
             .parquet(f"{into}/setsize")
         )
 
-    return _lsh_ensure_artifact(d, "_INDEX_COMPLETE", _build, force=force)
+    return _lsh_ensure_artifact(
+        lsh_index_dir(sf_dir), "_INDEX_COMPLETE", _build
+    )
 
 
 _LSH_ART = lsh_index_dir(_ORACLE_SF_DIR)

@@ -783,10 +783,7 @@ def bm25_index_dir(sf_dir: str) -> str:
     return _artifact_dir("bm25", sf_dir)
 
 
-def build_bm25_index(
-    spark: SparkSession, sf_dir: str, force: bool = False,
-    out_dir: str | None = None,
-) -> str:
+def build_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     """Build and persist the BM25 inverted index as parquet artifacts —
     the text-leg twin of `build_ivfpq_index`:
 
@@ -800,7 +797,6 @@ def build_bm25_index(
 
     Idempotent + concurrency-safe via `artifacts.ensure_artifact` (atomic
     temp-dir rename; the `_INDEX_COMPLETE` marker is the publish bit)."""
-    d = out_dir or bm25_index_dir(sf_dir)
 
     def _build(into: str) -> None:
         t = Tables(spark, sf_dir)
@@ -831,7 +827,7 @@ def build_bm25_index(
             .parquet(f"{into}/stats")
         )
 
-    return _ensure_artifact(d, "_INDEX_COMPLETE", _build, force=force)
+    return _ensure_artifact(bm25_index_dir(sf_dir), "_INDEX_COMPLETE", _build)
 
 
 _BM25_ART = bm25_index_dir(_ORACLE_SF_DIR)

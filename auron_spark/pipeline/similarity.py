@@ -3062,10 +3062,7 @@ def ivfpq_artifact_dir(sf_dir: str) -> str:
     return _artifact_dir("ivfpq", sf_dir)
 
 
-def build_ivfpq_index(
-    spark: SparkSession, sf_dir: str, force: bool = False,
-    out_dir: str | None = None,
-) -> str:
+def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the IVF-PQ model and persist it as parquet artifacts:
 
     - ``centroids/``  (cid, cv)            — k rows, the coarse quantizer;
@@ -3076,15 +3073,10 @@ def build_ivfpq_index(
       list is a directory and a query batch touches nprobe/k of them).
 
     Idempotent: returns immediately when ``_INDEX_COMPLETE`` exists (the
-    train-once contract); ``force=True`` rebuilds.  Concurrency-safe via
-    `artifacts.ensure_artifact` (ADVICE r7 #4): the whole index trains
-    into a temp dir and publishes with one atomic rename, so racing
-    bench/test invocations can never commit a torn artifact.
-
-    ``out_dir`` overrides the destination (bench.py's `index_build`
-    timing rebuilds into a scratch dir without touching the committed
-    artifact)."""
-    d = out_dir or ivfpq_artifact_dir(sf_dir)
+    train-once contract).  Concurrency-safe via `artifacts.ensure_artifact`:
+    the whole index trains into a temp dir and publishes with one atomic
+    rename, so racing bench/test invocations can never commit a torn
+    artifact."""
 
     def _build(into: str) -> None:
         t = Tables(spark, sf_dir)
@@ -3105,7 +3097,9 @@ def build_ivfpq_index(
             .parquet(f"{into}/codes")
         )
 
-    return ensure_artifact(d, "_INDEX_COMPLETE", _build, force=force)
+    return ensure_artifact(
+        ivfpq_artifact_dir(sf_dir), "_INDEX_COMPLETE", _build
+    )
 
 
 _SERVE_ART = ivfpq_artifact_dir(_ORACLE_SF_DIR)

@@ -17,8 +17,9 @@ in its own subprocess (fresh JVM), light to heavy: ``relational``,
 ``pipeline``, ``trainers`` — so the relational shapes never inherit the
 trainers' JIT and GC state.  The fixtures are single-row-group parquet
 (one scan task each), so every table is first rewritten into
-``.bench_shards/<sf>/`` with multiple part files (layout only: rows, values
-and read schema are identical) and the queries read the sharded copy.
+``.bench_shards/<sf>-<digest>/`` with multiple part files (layout only:
+rows, values and read schema are identical) and the queries read the
+sharded copy.
 
 The scale legs time the flagship text and vector queries over
 deterministic synthetic corpora (SPARK_GRAFT_TEXT_DOCS documents,
@@ -116,7 +117,21 @@ def _group_of(name: str) -> str:
 
 
 def _shard_dir_for(sf_dir: str) -> str:
-    return f"{_SHARD_ROOT}/{Path(sf_dir.rstrip('/')).name}"
+    """``.bench_shards/<sf-name>-<digest>``: the digest covers every source
+    table file's (relative path, size, mtime_ns), so a regenerated fixture
+    is resharded instead of served from the old copy."""
+    import hashlib
+
+    from auron_spark.tables import TABLE_NAMES
+
+    root = Path(sf_dir.rstrip("/"))
+    h = hashlib.sha1()
+    for name in TABLE_NAMES:
+        src = root / f"{name}.parquet"
+        for f in sorted(src.rglob("*.parquet")) if src.is_dir() else [src]:
+            st = f.stat()
+            h.update(f"{f.relative_to(root)}:{st.st_size}:{st.st_mtime_ns};".encode())
+    return f"{_SHARD_ROOT}/{root.name}-{h.hexdigest()[:12]}"
 
 
 def _scale_size(var: str, full: int) -> int:
@@ -292,7 +307,6 @@ def _run_group(group: str, sf_dir: str) -> dict:
     )
     from auron_spark.registry import bench_queries, load_all
     from auron_spark.session import get_spark
-    from auron_spark.tables import Tables  # noqa: F401 (registry import)
 
     all_specs = load_all()
     k_scaled: int | None = None

@@ -142,13 +142,47 @@ def assert_matches_oracle(spark_df, con, sql: str, name: str = "") -> None:
     assert not mismatches, f"{name}: value mismatches (row, got, want): {mismatches}"
 
 
+def assert_plan_cache_empty(spark, name: str) -> None:
+    """A .cache()/.persist() never released registers its plan in the
+    session-wide CacheManager, which then serves every later query with
+    the same subplan — dropping that query's own pushed filters."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), f"building {name} left a plan in the session cache"
+
+
+def assert_query_gates(spark, df, name: str) -> None:
+    """The per-query rules on a registered query's output frame.  Call it
+    before the frame is collected: the collect runs on the same
+    QueryExecution, so the plan is built only once."""
+    fields = df.schema.fields
+    # collect() renders TimestampType in the Python process's LOCAL
+    # timezone, not the UTC-pinned session TZ, so a raw-timestamp column
+    # hash-diverges the moment the driver host is non-UTC.  Timestamps
+    # leave as date_format() strings or epoch integers.
+    ts = [f.name for f in fields if "timestamp" in f.dataType.simpleString()]
+    assert not ts, f"{name}: raw timestamp output columns {ts}"
+    # The driver's canonicalizer sorts output cells with pandas, and Python
+    # lists and dicts are unhashable: array/map results are serialized
+    # (array_join / to_json / sort_array+cast) before leaving the plan.
+    bare = [f.name for f in fields if f.dataType.typeName() in ("array", "map")]
+    assert not bare, f"{name}: bare array/map output columns {bare}"
+    # Even a deliberate cross join rides a broadcast nested loop (bounded
+    # build side): an unnoticed CartesianProduct is the canonical 100 TB
+    # meltdown.  Check it at SF_DIR: broadcast choices follow table sizes.
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan, f"{name}: plans a CartesianProduct"
+    assert_plan_cache_empty(spark, name)
+
+
 # --- opt-in FAST tier --------------------------------------------------------
 # Every run collects the whole suite unless SPARK_GRAFT_SUITE=fast, which
 # keeps only the FAST tier: the harness gates, the bench-set plan goldens,
 # and the oracle battery restricted to the bench queries that carry an
 # oracle — a quick gate that re-checks exactly the queries whose speed is
-# measured.  The tier is chosen by the variable alone, never by parsing
-# the command line.
+# measured.  The per-query gates (`assert_query_gates`, the smoke-scale
+# schema) ride the oracle battery, so in this tier they cover only those
+# bench queries.  The tier is chosen by the variable alone, never by
+# parsing the command line.
 _FAST_TIER_FILES = {
     "test_harness.py",        # registry/tier/bench-contract gates
     "test_plan_stability.py",  # bench-set plan goldens (the plan gate)

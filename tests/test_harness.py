@@ -9,7 +9,12 @@ from decimal import Decimal
 import pandas as pd
 import pytest
 
-from tests.conftest import SF_DIR, SF_SMOKE, _norm_cell, assert_matches_oracle
+from tests.conftest import (
+    SF_DIR,
+    _norm_cell,
+    assert_matches_oracle,
+    assert_query_gates,
+)
 
 
 def test_int_vs_float_distinct():
@@ -278,89 +283,55 @@ def test_json_extract_paths_rejects_prefix_conflicts():
                 _merge_into_tree(tree, _parse_path(p), 0)
 
 
-_SCHEMA_MEMO: dict = {}
+def test_query_gates_name_each_rule(spark):
+    """`assert_query_gates` passes a clean frame and fails, naming the
+    rule, on a frame that breaks each of its rules."""
+    from pyspark.sql import functions as F
+
+    one = spark.range(3)
+    assert_query_gates(spark, one, "probe")
+    for df, rule in [
+        (one.select(F.current_timestamp().alias("t")), "timestamp"),
+        (one.select(F.array("id").alias("a")), "array/map"),
+        (one.select(F.create_map("id", "id").alias("m")), "array/map"),
+    ]:
+        with pytest.raises(AssertionError, match=rule):
+            assert_query_gates(spark, df, "probe")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with pytest.raises(AssertionError, match="CartesianProduct"):
+            assert_query_gates(spark, one.crossJoin(spark.range(3)), "probe")
+    finally:
+        spark.conf.set(key, saved)
+    cached = spark.range(3).cache()
+    try:
+        with pytest.raises(AssertionError, match="session cache"):
+            assert_query_gates(spark, cached, "probe")
+    finally:
+        cached.unpersist()
 
 
-def _all_query_schemas(spark):
-    """Build every registered query's schema at smoke scale.  Builders that
-    raise are collected (not swallowed) so the caller can assert the gate
-    still has coverage — a blanket skip would let the lints pass vacuously
-    (ADVICE r3).  Memoized per session: the ~55 s build pass runs once even
-    though multiple gate tests consume it (ADVICE r4).  Every build must
-    leave the session's plan cache empty."""
-    from auron_spark.registry import load_all
+def test_bench_shard_dir_follows_fixture_files(tmp_path):
+    """bench.py keys its sharded fixture copy by the source files, so a
+    regenerated fixture is resharded, not served from the old copy."""
+    import os
 
-    key = id(spark)
-    if key in _SCHEMA_MEMO:
-        return _SCHEMA_MEMO[key]
-    schemas, errors = {}, {}
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    assert cache.isEmpty(), "the session-wide plan cache is not empty"
-    for name, spec in load_all().items():
-        try:
-            schemas[name] = spec.build(spark, SF_SMOKE).schema
-        except Exception as e:  # capability-gated builders land here
-            errors[name] = repr(e)
-        # A .cache()/.persist() never released registers its plan in the
-        # session-wide CacheManager, which then serves every later query
-        # with the same subplan — dropping that query's own pushed filters.
-        assert cache.isEmpty(), (
-            f"building {name} left a plan in the session cache"
-        )
-    _SCHEMA_MEMO[key] = (schemas, errors)
-    return schemas, errors
+    import bench
+    from auron_spark.tables import TABLE_NAMES
 
-
-def test_every_builder_produces_a_schema(spark):
-    """Exact-coverage gate (ADVICE r4): every registered builder must analyze
-    cleanly — no silent erosion of the downstream lints' coverage.  There are
-    currently NO capability-gated builders (gated surface lives behind
-    separate negative tests, not in the registry); if one is ever added,
-    list it here explicitly rather than lowering a floor."""
-    from auron_spark.registry import load_all
-
-    allowed_errors: set[str] = set()
-    schemas, errors = _all_query_schemas(spark)
-    unexpected = {k: v for k, v in errors.items() if k not in allowed_errors}
-    assert not unexpected, unexpected
-    assert len(schemas) == len(load_all()) - len(errors)
-
-
-def test_no_raw_timestamp_output_columns(spark):
-    """No registered query may OUTPUT a raw TimestampType column: collect()
-    renders TimestampType in the Python process's LOCAL timezone (not the
-    UTC-pinned session TZ), so a raw-timestamp column hash-diverges the
-    moment the driver host is non-UTC (found by the TZ=America/New_York
-    sweep, round 3 — funnel + fn_interval).  Timestamps must leave as
-    date_format() strings or epoch integers."""
-    schemas, errors = _all_query_schemas(spark)
-    # coverage is enforced exactly by test_every_builder_produces_a_schema
-    offenders = {
-        name: ts
-        for name, sch in schemas.items()
-        if (ts := [f.name for f in sch.fields
-                   if "timestamp" in f.dataType.simpleString()])
-    }
-    assert not offenders, offenders
-
-
-def test_no_bare_array_or_map_output_columns(spark):
-    """No registered query may OUTPUT a raw ArrayType/MapType column: the
-    driver's canonicalizer sorts output cells with pandas, and Python lists
-    and dicts are unhashable — round 3's only red driver row (sim_pq_codes)
-    was exactly this, hash-exact in self-check but a harness crash at the
-    driver.  Array/map results must be serialized (array_join / to_json /
-    sort_array+cast) before leaving the plan.  Rows-only queries (no oracle)
-    get the same rule: the driver still materializes their output."""
-    schemas, errors = _all_query_schemas(spark)
-    # coverage is enforced exactly by test_every_builder_produces_a_schema
-    offenders = {
-        name: bad
-        for name, sch in schemas.items()
-        if (bad := [f.name for f in sch.fields
-                    if f.dataType.typeName() in ("array", "map")])
-    }
-    assert not offenders, offenders
+    for name in TABLE_NAMES:
+        (tmp_path / f"{name}.parquet").write_bytes(b"PAR1")
+    first = bench._shard_dir_for(str(tmp_path))
+    assert bench._shard_dir_for(f"{tmp_path}/") == first
+    assert os.path.basename(first).startswith(f"{tmp_path.name}-")
+    # same size, new mtime: a regeneration that kept the byte count
+    orders = tmp_path / "orders.parquet"
+    st = orders.stat()
+    orders.write_bytes(b"PAR2")
+    os.utime(orders, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    assert bench._shard_dir_for(str(tmp_path)) != first
 
 
 def test_coverage_counts_in_sync():

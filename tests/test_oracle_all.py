@@ -1,5 +1,7 @@
 """Differential test: every registered query vs its DuckDB oracle at sf0.01 —
-the local mirror of the driver's CORRECTNESS gate.
+the local mirror of the driver's CORRECTNESS gate, and the one place that
+enforces every per-query rule (`assert_query_gates`, the empty plan cache,
+a stable schema at the smoke scale).
 
 Sharding across worker processes is the generic
 ``SPARK_GRAFT_TEST_SHARD=i/n`` filter in ``tests/conftest.py``, which
@@ -13,8 +15,11 @@ import pytest
 from auron_spark.registry import load_all
 from tests.conftest import (
     SF_DIR,
+    SF_SMOKE,
     assert_matches_oracle,
     assert_oracle_scale_consistent,
+    assert_plan_cache_empty,
+    assert_query_gates,
 )
 
 SPECS = load_all()
@@ -25,10 +30,16 @@ def test_query_vs_oracle(name, spark, oracle):
     spec = SPECS[name]
     assert_oracle_scale_consistent(spec, SF_DIR)
     df = spec.build(spark, SF_DIR)
+    assert_query_gates(spark, df, name)
     if spec.oracle is None:
-        # rows-only check: runs, has a stable schema, returns >= 0 rows
-        rows = df.collect()
-        assert rows is not None
-        assert len(df.columns) > 0
+        df.collect()  # rows-only check: the query runs and has columns
+        assert df.columns
     else:
         assert_matches_oracle(df, oracle, spec.oracle, name)
+    # The driver's smoke scale: the query builds there too, with the same
+    # output schema (nullability included).
+    smoke = spec.build(spark, SF_SMOKE)
+    assert smoke.schema == df.schema, (
+        f"{name}: schema at {SF_SMOKE} {smoke.schema} != {df.schema}"
+    )
+    assert_plan_cache_empty(spark, name)

@@ -599,10 +599,6 @@ def test_zorder_layout_improves_both_dim_locality(spark):
     assert max(za, zb) < lb * 0.75
 
 
-# test_no_cartesian_product_anywhere moved to tests/test_sweep_global.py
-# (whole-registry sweep, kept apart from the per-query plan gates).
-
-
 def test_weighted_sample_zero_exchange(spark):
     """sample_weighted_topk's scale claim: scan + TakeOrderedAndProject,
     NO exchange — per-partition top-K heads merged once, never a full
