@@ -1,7 +1,7 @@
 check:
 	python -m pytest tests/test_oracle_all.py -q
 
-# The whole suite (1,614 s serial on a 4-core, 15 GB box);
+# The whole suite (1,249 s serial on a 4-core, 15 GB box);
 # SPARK_GRAFT_SUITE=fast keeps only the fast tier (harness gates, bench
 # plan goldens, the bench queries' oracle tests).
 test:
@@ -14,3 +14,10 @@ test-par:
 
 bench:
 	python bench.py
+
+# Traced perfbench runs (seed 1) of both workloads: the per-layer numbers
+# (build.jobs, build.s, exec.*, ...) a performance change cites.  Each run
+# prints its metrics as the last line of its output.
+perf:
+	python3 perfbench/run.py --workload relational --seed 1 --seconds 10 --trace 1
+	python3 perfbench/run.py --workload vector --seed 1 --seconds 10 --trace 1

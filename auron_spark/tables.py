@@ -1,15 +1,25 @@
 """Table catalog over the driver-generated parquet fixtures.
 
-Scans are plain ``spark.read.parquet`` — Spark's vectorized parquet reader with
-predicate pushdown / column pruning plays the role of the reference's native
-ParquetScan (``native-engine/datafusion-ext-plans/src/parquet_exec.rs:70``,
-converter ``AuronConverters.scala:478-533``): pruning predicates, projection
-and partition values are all handled by Catalyst + the DataSource V2 scan.
+Scans take a resolved schema: ``spark.read.schema(s).parquet(path)``, where
+``s`` was inferred from the files' footers once per path and is inferred again
+only when a file under the path or a conf that steers parquet inference
+changes (:func:`_read_parquet`).  Building a query is then planning, not
+execution: a schema-less read launches a footer-inference Spark job, a read
+with the schema launches none.  The reference's native ParquetScan likewise
+never infers at scan time; it takes its schema from Spark's plan (converter
+``AuronConverters.scala:478-533``).  Spark's vectorized parquet reader with
+predicate pushdown / column pruning plays the role of that scan
+(``native-engine/datafusion-ext-plans/src/parquet_exec.rs:70``): pruning
+predicates, projection and partition values are all handled by Catalyst + the
+file source scan.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -38,9 +48,64 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # columns (read as bigint); a no-op on the current TIMESTAMP(MICROS)
         # fixtures, which Spark reads natively as timestamp.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
+    return df
+
+
+# Session confs whose values change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# path -> (signature, inferred schema).  One entry per path: a changed
+# signature replaces it, so the cache never outgrows the distinct paths read.
+# Concurrent readers of one path at worst both infer; each stores a whole
+# entry.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def files_signature(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of every file under ``path`` (a file
+    or a directory walked recursively), sorted: it changes whenever a
+    fixture is regenerated."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per path.
+
+    A hit reads with the cached schema and launches no Spark job.  A miss
+    returns the inferring read itself and stores its schema, so the first
+    read costs what it always did.  A path that is not a local file or
+    directory (a missing one, a non-``file:`` URI) bypasses the cache,
+    keeping Spark's own behaviour and errors for it."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    sig = (
+        files_signature(path),
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (sig, df.schema)
     return df
 
 
@@ -92,7 +157,7 @@ def parallel_table(
 
 def min_parallel(df: DataFrame, key: str | None = None) -> DataFrame:
     """:func:`parallel_table` on a scan the caller already holds — reuse one
-    read instead of paying a second schema-inference job."""
+    read instead of building a second scan of the same table."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -122,15 +122,12 @@ def _shard_dir_for(sf_dir: str) -> str:
     is resharded instead of served from the old copy."""
     import hashlib
 
-    from auron_spark.tables import TABLE_NAMES
+    from auron_spark.tables import TABLE_NAMES, files_signature
 
     root = Path(sf_dir.rstrip("/"))
     h = hashlib.sha1()
     for name in TABLE_NAMES:
-        src = root / f"{name}.parquet"
-        for f in sorted(src.rglob("*.parquet")) if src.is_dir() else [src]:
-            st = f.stat()
-            h.update(f"{f.relative_to(root)}:{st.st_size}:{st.st_mtime_ns};".encode())
+        h.update(repr(files_signature(f"{root}/{name}.parquet")).encode())
     return f"{_SHARD_ROOT}/{root.name}-{h.hexdigest()[:12]}"
 
 

@@ -8,6 +8,8 @@ import datetime
 import math
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 from decimal import Decimal
 from pathlib import Path
 
@@ -140,6 +142,28 @@ def assert_matches_oracle(spark_df, con, sql: str, name: str = "") -> None:
             if len(mismatches) >= 5:
                 break
     assert not mismatches, f"{name}: value mismatches (row, got, want): {mismatches}"
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collect the Spark jobs the ``with`` body launches, one
+    ``"job <id>: <stage names>"`` string each, counted in a job group of
+    their own through ``statusTracker()``."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    jobs: list[str] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc._jsc.clearJobGroup()
+    # Job events reach the status store through the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    for j in sorted(st.getJobIdsForGroup(group)):
+        info = st.getJobInfo(j)
+        stages = [st.getStageInfo(s) for s in (info.stageIds if info else [])]
+        jobs.append(f"job {j}: " + ", ".join(s.name for s in stages if s))
 
 
 def assert_plan_cache_empty(spark, name: str) -> None:

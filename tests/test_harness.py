@@ -11,9 +11,11 @@ import pytest
 
 from tests.conftest import (
     SF_DIR,
+    SF_SMOKE,
     _norm_cell,
     assert_matches_oracle,
     assert_query_gates,
+    spark_jobs,
 )
 
 
@@ -343,29 +345,57 @@ def test_coverage_counts_in_sync():
     assert selfcheck.sync_counts(check_only=True) == 0
 
 
-def test_fixture_dtypes_pinned(spark):
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_DIR], ids=["sf_smoke", "sf_dir"])
+def test_fixture_dtypes_pinned(spark, sf_dir):
     """Fixture-schema canary: regenerated fixtures have drifted column
-    types before (events.ts went from ns-int64 to timestamp[us]), so the
-    columns whose physical type the readers depend on are pinned here —
-    one clear failure instead of dozens of per-query oracle mismatches."""
-    from auron_spark.tables import table
+    types before (events.ts went from TIMESTAMP(NANOS)-as-int64 to
+    timestamp[us], silently breaking 28 queries), so the columns whose
+    physical type the readers depend on are pinned here — one clear
+    failure instead of dozens of per-query oracle mismatches.  Each
+    table() read must also carry the schema a fresh inference gives
+    now: a regen is re-inferred, never served from the schema cache."""
+    from auron_spark.tables import normalize_events_ts, table
 
     pinned = {
         "events": {"ts": {"timestamp", "timestamp_ntz"}},
-        "lineitem": {"l_shipdate": {"date", "timestamp", "timestamp_ntz"}},
+        "lineitem": {
+            "l_quantity": {"decimal(15,2)", "double", "bigint"},
+            "l_shipdate": {"date", "timestamp", "timestamp_ntz"},
+        },
         "orders": {"o_orderdate": {"date", "timestamp", "timestamp_ntz"}},
+        "documents": {"doc_id": {"bigint", "string"}, "text": {"string"}},
         "embeddings": {"embedding": {"array<float>", "array<double>"}},
     }
-    drift = {}
+    drift, stale = {}, []
     for tbl, cols in pinned.items():
-        dtypes = dict(table(spark, SF_DIR, tbl).dtypes)
+        df = table(spark, sf_dir, tbl)
+        fresh = spark.read.parquet(f"{sf_dir}/{tbl}.parquet")
+        if tbl == "events":
+            fresh = normalize_events_ts(fresh)
+        if df.schema != fresh.schema:
+            stale.append(tbl)
+        dtypes = dict(df.dtypes)
         for col, allowed in cols.items():
             if dtypes.get(col) not in allowed:
                 drift[f"{tbl}.{col}"] = (dtypes.get(col), sorted(allowed))
+    assert not stale, f"table() read a stale cached schema at {sf_dir}: {stale}"
     assert not drift, (
-        f"fixture schema drift at {SF_DIR} (read as, expected one of): "
+        f"fixture schema drift at {sf_dir} (read as, expected one of): "
         f"{drift}; audit tables.py"
     )
+
+
+def test_q3_rebuild_launches_no_job(spark):
+    """Build layer: with its tables' schemas resolved, building
+    q3_shipping_priority is planning only — a second build launches no
+    Spark job.  A failure lists the jobs eager work put back."""
+    from auron_spark.registry import load_all
+
+    spec = load_all()["q3_shipping_priority"]
+    spec.build(spark, SF_DIR)
+    with spark_jobs(spark) as jobs:
+        spec.build(spark, SF_DIR)
+    assert not jobs, f"q3_shipping_priority's second build launched {jobs}"
 
 
 def test_no_decimal_typed_oracle_columns(oracle):

