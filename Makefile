@@ -1,7 +1,7 @@
 check:
 	python -m pytest tests/test_oracle_all.py -q
 
-# The whole suite (1,249 s serial on a 4-core, 15 GB box);
+# The whole suite (1,502 s serial on a 4-core, 15 GB box);
 # SPARK_GRAFT_SUITE=fast keeps only the fast tier (harness gates, bench
 # plan goldens, the bench queries' oracle tests).
 test:
@@ -17,7 +17,9 @@ bench:
 
 # Traced perfbench runs (seed 1) of both workloads: the per-layer numbers
 # (build.jobs, build.s, exec.*, ...) a performance change cites.  Each run
-# prints its metrics as the last line of its output.
+# prints its metrics as the last line of its output.  python.run_s is the
+# Python workers' task time; it includes PySpark's per-task setup, which
+# auron_spark.functions.pytask.python_task keeps small for the Arrow kernels.
 perf:
 	python3 perfbench/run.py --workload relational --seed 1 --seconds 10 --trace 1
 	python3 perfbench/run.py --workload vector --seed 1 --seconds 10 --trace 1

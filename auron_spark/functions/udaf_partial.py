@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from auron_spark.functions.pytask import python_task
 from auron_spark.registry import query
 from auron_spark.tables import Tables
 
@@ -64,7 +65,7 @@ def two_level_agg(
             f"requires state ⊕ state = state (use one of "
             f"{sorted(ALGEBRAIC_MERGES)})"
         )
-    state = df.mapInPandas(partial_fn, state_schema)
+    state = df.mapInPandas(python_task(partial_fn), state_schema)
     merged = state.groupBy(*keys).agg(
         *[getattr(F, fn)(col).alias(col) for col, fn in merges.items()]
     )

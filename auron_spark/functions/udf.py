@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from auron_spark.functions.pytask import python_task
 from auron_spark.registry import query
 from auron_spark.tables import Tables
 
@@ -154,7 +155,8 @@ def udf_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     partial = t.documents.select("doc_id", "source", "n_chars").mapInPandas(
-        partial_counts, "source string, n_docs long, total_chars long"
+        python_task(partial_counts),
+        "source string, n_docs long, total_chars long",
     )
     return (
         partial.groupBy("source")
@@ -302,6 +304,6 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     return (
         t.part.select("p_partkey", "p_name")
-        .mapInArrow(batch_bytes, "p_partkey long, name_bytes int")
+        .mapInArrow(python_task(batch_bytes), "p_partkey long, name_bytes int")
         .orderBy("p_partkey")
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auron_spark.exprs import dec2, money_avg, money_sum, sql_money_avg, sql_money_sum
+from auron_spark.functions.pytask import python_task
 from auron_spark.registry import query
 from auron_spark.tables import Tables
 
@@ -936,7 +937,7 @@ def agg_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     summaries = t.documents.select(
         F.lower(F.col("text")).alias("text")
     ).mapInPandas(
-        mg_partition, "token string, mg_cnt long"
+        python_task(mg_partition), "token string, mg_cnt long"
     ).localCheckpoint(eager=False)
     candidates = summaries.where(F.col("token").isNotNull()).select("token").distinct()
     n_total = summaries.where(F.col("token").isNull()).agg(

@@ -2383,8 +2383,10 @@ _TRI_MIN_SUPPORT = 2
 @query(
     "market_basket_triples",
     oracle=f"""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    tri AS (
+    WITH op AS MATERIALIZED (
+        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+    ),
+    tri AS MATERIALIZED (
         SELECT a.l_partkey AS pa, b.l_partkey AS pb, c.l_partkey AS pc,
                COUNT(*) AS n_baskets
         FROM op a

@@ -1948,28 +1948,28 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_kcore_peel",
     oracle=_sql_signature_cte()
     + """
-    , pairs AS (
+    , pairs AS MATERIALIZED (
         SELECT l.doc_id AS a, r.doc_id AS b
         FROM bands l JOIN bands r ON l.band = r.band AND l.doc_id < r.doc_id
         GROUP BY a, b
     ),
-    e0 AS (
+    e0 AS MATERIALIZED (
         SELECT a AS u, b AS v FROM pairs
         UNION ALL
         SELECT b AS u, a AS v FROM pairs
     ),
-    a1 AS (SELECT u FROM e0 GROUP BY u HAVING COUNT(*) >= 2),
-    e1 AS (
+    a1 AS MATERIALIZED (SELECT u FROM e0 GROUP BY u HAVING COUNT(*) >= 2),
+    e1 AS MATERIALIZED (
         SELECT e.u, e.v FROM e0 e
         JOIN a1 x ON x.u = e.u JOIN a1 y ON y.u = e.v
     ),
-    a2 AS (SELECT u FROM e1 GROUP BY u HAVING COUNT(*) >= 2),
-    e2 AS (
+    a2 AS MATERIALIZED (SELECT u FROM e1 GROUP BY u HAVING COUNT(*) >= 2),
+    e2 AS MATERIALIZED (
         SELECT e.u, e.v FROM e1 e
         JOIN a2 x ON x.u = e.u JOIN a2 y ON y.u = e.v
     ),
-    a3 AS (SELECT u FROM e2 GROUP BY u HAVING COUNT(*) >= 2),
-    e3 AS (
+    a3 AS MATERIALIZED (SELECT u FROM e2 GROUP BY u HAVING COUNT(*) >= 2),
+    e3 AS MATERIALIZED (
         SELECT e.u, e.v FROM e2 e
         JOIN a3 x ON x.u = e.u JOIN a3 y ON y.u = e.v
     )

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from auron_spark.functions.pytask import python_task
 from auron_spark.registry import query
 from auron_spark.tables import Tables
 
@@ -96,7 +97,8 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = t.documents.select("doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
     return (
         payloads.mapInPandas(
-            decode_batches, "doc_id long, width int, height int, codec string, n_pixels long"
+            python_task(decode_batches),
+            "doc_id long, width int, height int, codec string, n_pixels long",
         )
         .orderBy("doc_id")
     )
@@ -193,7 +195,8 @@ def mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
     return payloads.mapInPandas(
-        resize_batches, "doc_id long, width int, height int, out_w int, out_h int"
+        python_task(resize_batches),
+        "doc_id long, width int, height int, out_w int, out_h int",
     ).orderBy("doc_id")
 
 
@@ -291,7 +294,7 @@ def mm_ppm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         with_payload.mapInPandas(
-            extract,
+            python_task(extract),
             "doc_id long, width long, height long, "
             "mean_r double, mean_g double, mean_b double",
         )
@@ -391,7 +394,7 @@ def mm_wav_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         with_payload.mapInPandas(
-            extract,
+            python_task(extract),
             "doc_id long, n_samples long, rate long, sum_abs long, peak long",
         )
         .orderBy("doc_id")
@@ -476,7 +479,7 @@ def mm_video_frame_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         with_payload.mapInPandas(
-            extract, "doc_id long, frame_idx long, mean_r double"
+            python_task(extract), "doc_id long, frame_idx long, mean_r double"
         )
         .orderBy("doc_id", "frame_idx")
     )
@@ -604,7 +607,7 @@ def ahash_hash_frame(t) -> "DataFrame":
     return (
         t.documents.where(F.col("doc_id") < AHASH_DOCS)
         .select("doc_id", make_img("doc_id").alias("payload"))
-        .mapInPandas(hash_batch, "doc_id long, h_lo long, h_hi long")
+        .mapInPandas(python_task(hash_batch), "doc_id long, h_lo long, h_hi long")
     )
 
 
@@ -861,7 +864,7 @@ def mm_wav_activity_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     fe = (
         t.documents.where(F.col("doc_id") < 200)
         .select("doc_id", make_wav("doc_id").alias("payload"))
-        .mapInPandas(frames, "doc_id long, frame long, energy long")
+        .mapInPandas(python_task(frames), "doc_id long, frame long, energy long")
     )
     wd = Window.partitionBy("doc_id")
     act = fe.select(
@@ -990,7 +993,7 @@ def mm_video_shot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     fm = (
         t.documents.where(F.col("doc_id") < 200)
         .select("doc_id", make_video("doc_id").alias("payload"))
-        .mapInPandas(frames, "doc_id long, f long, mean_r double")
+        .mapInPandas(python_task(frames), "doc_id long, f long, mean_r double")
     )
     w = Window.partitionBy("doc_id").orderBy("f")
     diffs = fm.select(
@@ -1171,7 +1174,7 @@ def mm_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         with_payload.mapInPandas(
-            extract,
+            python_task(extract),
             "doc_id long, n_bytes long, width long, height long, "
             "mean_r double, mean_g double, mean_b double",
         )

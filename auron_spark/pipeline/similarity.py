@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from auron_spark.functions.pytask import python_task
 from auron_spark.registry import query
 from auron_spark.tables import Tables, min_parallel
 
@@ -249,9 +250,15 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch)), keeps its per-query top-k candidates, and the per-batch
     partials reduce through a WindowGroupLimit top-k — one corpus scan,
     no shuffle before the k*|queries|-row rank stage.  On the benchmark's
-    `vector` workload (32,768 vectors, 1,000 queries, four 8,192-row
-    batches, single-threaded BLAS on a 4-core x86 host) the batch kernel
-    costs ~0.4 CPU-seconds for all four batches.
+    `vector` workload (32,768 vectors, 1,000 queries, single-threaded BLAS
+    on a 4-core x86 host) the Arrow batches follow the scan partitions,
+    split at spark.sql.execution.arrow.maxRecordsPerBatch (10,000): at
+    layout seed 1 they hold 10,000 + 7,218, 8,956, 5,341 and 1,253 rows,
+    and the batch kernel alone takes 0.73-0.89 CPU-seconds for all of
+    them (0.61-0.68 for four 8,192-row batches).  Each task enters through
+    `python_task`, which prunes the worker's cached zipimporters; before
+    it, PySpark's per-task import-cache invalidation re-read pyspark.zip
+    and the Spark jar for ~0.2 CPU-seconds per task.
 
     Per-pair interpreted `F.aggregate` folds are the SQL alternative; a
     flat 64-term codegen expression was also measured and is 6x SLOWER
@@ -348,7 +355,9 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (
         min_parallel(emb)
         .select("vec_id", "embedding")
-        .mapInPandas(_batches, "query_id long, neighbor_id long, cos double")
+        .mapInPandas(
+            python_task(_batches), "query_id long, neighbor_id long, cos double"
+        )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
     return (
@@ -1398,7 +1407,7 @@ def _lloyd_rounds(
                 )
 
         assigned = emb.select("e").mapInPandas(
-            _assign, "cid int, e array<double>"
+            python_task(_assign), "cid int, e array<double>"
         )
         mean_rows = _lloyd_mean_rows(assigned)
         # The collect above IS the assignment job, so nothing pending
@@ -1946,7 +1955,8 @@ def _ivfpq_train_frames(spark: SparkSession, emb: DataFrame, k: int = KM_K):
             )
 
     res = emb.select("vec_id", "label", "e").mapInPandas(
-        _residuals, "vec_id long, label int, cid int, r array<double>"
+        python_task(_residuals),
+        "vec_id long, label int, cid int, r array<double>",
     )
     # deterministic PQ codebook over residual subvectors
     rcent = (
@@ -2005,7 +2015,7 @@ def _ivfpq_train_frames(spark: SparkSession, emb: DataFrame, k: int = KM_K):
             )
 
     codes = emb.select("vec_id", "e").mapInPandas(
-        _encode, "vec_id long, cid int, sub int, code int"
+        python_task(_encode), "vec_id long, cid int, sub int, code int"
     )
     return cent, cents_row, cmap_row, rcarr, codes
 
@@ -2130,7 +2140,12 @@ def _sql_pca_m_oracle() -> str:
     extracted components by modified Gram-Schmidt after EVERY round.  All
     corpus-side sums go through 6-dp-rounded DECIMAL(28,6); every 64-dim
     vector op (projections, norms) is an index-ordered list fold, so each
-    CTE value is bit-identical to the Spark plan's."""
+    CTE value is bit-identical to the Spark plan's.
+
+    Every CTE is MATERIALIZED: DuckDB inlines an unmarked CTE at each
+    reference, and each round references the previous one more than once,
+    so the unrolled chain's work would grow exponentially with its depth
+    (202 s at sf0.01 unmarked, against 0.16 s)."""
     ctes = []
     finals = []
     for j in range(PCA_M):
@@ -2140,13 +2155,13 @@ def _sql_pca_m_oracle() -> str:
             else:
                 vexpr, vjoin = "v[i]", f", v{j}_{it - 1}"
             ctes.append(f"""
-    s{j}_{it} AS (
+    s{j}_{it} AS MATERIALIZED (
         SELECT vec_id, c,
                list_sum(list_transform(range(1, 65), i -> c[i] * {vexpr}))
                    AS s
         FROM cent{vjoin}
     ),
-    w{j}_{it} AS (
+    w{j}_{it} AS MATERIALIZED (
         SELECT p.pos,
                CAST(SUM(CAST(ROUND(t.s * t.c[p.pos], 6) AS DECIMAL(28,6)))
                     AS DOUBLE) AS w
@@ -2154,29 +2169,33 @@ def _sql_pca_m_oracle() -> str:
         CROSS JOIN (SELECT unnest(range(1, 65)) AS pos) p
         GROUP BY p.pos
     ),
-    d{j}_{it}_0 AS (SELECT list(w ORDER BY pos) AS d FROM w{j}_{it})""")
+    d{j}_{it}_0 AS MATERIALIZED (
+        SELECT list(w ORDER BY pos) AS d FROM w{j}_{it}
+    )""")
             for l in range(j):
                 ctes.append(f"""
-    p{j}_{it}_{l} AS (
+    p{j}_{it}_{l} AS MATERIALIZED (
         SELECT list_sum(list_transform(range(1, 65), k -> d[k] * vc[k]))
                    AS pr
         FROM d{j}_{it}_{l}, vc{l}
     ),
-    d{j}_{it}_{l + 1} AS (
+    d{j}_{it}_{l + 1} AS MATERIALIZED (
         SELECT list_transform(range(1, 65), k -> d[k] - pr * vc[k]) AS d
         FROM d{j}_{it}_{l}, p{j}_{it}_{l}, vc{l}
     )""")
             ctes.append(f"""
-    n{j}_{it} AS (
+    n{j}_{it} AS MATERIALIZED (
         SELECT sqrt(list_sum(list_transform(range(1, 65), k -> d[k] * d[k])))
                    AS nrm
         FROM d{j}_{it}_{j}
     ),
-    v{j}_{it} AS (
+    v{j}_{it} AS MATERIALIZED (
         SELECT list_transform(range(1, 65), k -> d[k] / nrm) AS v
         FROM d{j}_{it}_{j}, n{j}_{it}
     )""")
-        ctes.append(f"    vc{j} AS (SELECT v AS vc FROM v{j}_{PCA_ITERS})")
+        ctes.append(
+            f"    vc{j} AS MATERIALIZED (SELECT v AS vc FROM v{j}_{PCA_ITERS})"
+        )
         finals.append(
             f"""
     SELECT {j} AS component, p.pos - 1 AS dim,
@@ -2187,7 +2206,7 @@ def _sql_pca_m_oracle() -> str:
         )
     return (
         """
-    WITH mu AS (
+    WITH mu AS MATERIALIZED (
         SELECT pos,
                CAST(SUM(CAST(ROUND(CAST(v AS DOUBLE), 6) AS DECIMAL(18,6)))
                     AS DOUBLE) / COUNT(*) AS m
@@ -2196,7 +2215,7 @@ def _sql_pca_m_oracle() -> str:
               FROM embeddings)
         GROUP BY pos
     ),
-    muv AS (SELECT list(m ORDER BY pos) AS mv FROM mu),
+    muv AS MATERIALIZED (SELECT list(m ORDER BY pos) AS mv FROM mu),
     cent AS MATERIALIZED (
         SELECT vec_id,
                list_transform(range(1, 65),

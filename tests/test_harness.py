@@ -432,3 +432,54 @@ def test_partest_worker_count():
     assert partest.worker_count(32, 128 * gb, "8g") == 8
     assert partest.worker_count(32, 16 * gb, "8g") == 2
     assert partest.worker_count(2, 4 * gb, "8192m") == 1
+
+
+def test_python_task_prunes_zipimporters(tmp_path):
+    """`python_task` (the per-task entry of the mapInPandas/mapInArrow
+    kernels) passes a kernel's batches through unchanged and leaves no
+    zipimporter in `sys.path_importer_cache`, whose per-task cache
+    invalidation re-reads each archive on CPython 3.10-3.12.  The wrapper
+    pickles by value: a process that cannot import this package (a
+    Python worker) runs it."""
+    import subprocess
+    import sys
+    import zipfile
+    import zipimport
+
+    from pyspark import cloudpickle
+
+    from auron_spark.functions.pytask import python_task
+
+    zpath = str(tmp_path / "lib.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("mod_in_zip.py", "X = 1\n")
+    sys.path_importer_cache[zpath] = zipimport.zipimporter(zpath)
+    batches = [pd.DataFrame({"a": [1, 2]}), pd.DataFrame({"a": [3]})]
+
+    def kernel(it):
+        yield from it
+
+    task = python_task(kernel)
+    try:
+        out = list(task(iter(batches)))
+        zips = [
+            p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)
+        ]
+    finally:
+        sys.path_importer_cache.pop(zpath, None)
+    assert len(out) == 2 and all(o is b for o, b in zip(out, batches)), out
+    assert not zips, f"zipimporters left in the cache: {zips}"
+    assert task.__name__ == "kernel"
+
+    blob = tmp_path / "task.pkl"
+    blob.write_bytes(cloudpickle.dumps(task))
+    probe = (
+        "import pickle, sys; f = pickle.load(open(sys.argv[1], 'rb')); "
+        "assert 'auron_spark' not in sys.modules; print(list(f(iter([1, 2]))))"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", probe, str(blob)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=60,
+    )
+    assert run.returncode == 0 and run.stdout.strip() == "[1, 2]", run.stderr
