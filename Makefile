@@ -3,7 +3,8 @@ check:
 
 # The whole suite (1,502 s serial on a 4-core, 15 GB box);
 # SPARK_GRAFT_SUITE=fast keeps only the fast tier (harness gates, bench
-# plan goldens, the bench queries' oracle tests).
+# plan goldens, the vector kernels' exactness tests, the bench queries'
+# oracle tests).
 test:
 	python -m pytest tests/ -x -q
 

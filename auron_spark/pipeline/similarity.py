@@ -70,12 +70,15 @@ _SQL_NORM_C = (
 )
 
 
-#: Fixed screen margin of the exact kernels (see `_vector_kernels`).
+#: Fixed part of the exact kernels' screen margins: it covers the float64
+#: folds' own error (see `_vector_kernels`).
 KNN_SCREEN_MARGIN = 1e-9
 #: Block width of the k-NN screen's lower bound (see `_vector_kernels`).
 KNN_SCREEN_BLOCK = 64
 #: Unit roundoff of IEEE double precision.
 UNIT_ROUNDOFF = 2.0**-53
+#: Unit roundoff of IEEE single precision (the cosine screens' arithmetic).
+UNIT_ROUNDOFF_F32 = 2.0**-24
 
 
 def _vector_kernels():
@@ -93,22 +96,45 @@ def _vector_kernels():
     ``F.aggregate(zip_with(...), 0.0, acc+x)`` (`dot`, `_sqdist`,
     `_sub_l2`) and to the oracles' ``list_sum``.
 
+    ``cos_margin(d)`` is the screen margin of both cosine kernels below:
+    ``KNN_SCREEN_MARGIN + 4 (d + 2) u32`` with ``u32 = 2^-24``
+    (``UNIT_ROUNDOFF_F32``), about 1.6e-5 at d = 64.  Both screens take
+    rows normalized in float64 and rounded to float32, so each component
+    is off by at most u32 relative (plus float64 roundings far below it),
+    and the rounded rows have norm at most ``1 + u32``.  A float32 dot of
+    d terms, summed in ANY order, with or without FMA, errs by at most
+    ``g32(d) sum|a_i b_i| <= g32(d) |a| |b|`` (Cauchy-Schwarz), with
+    ``g32(n) = n u32 / (1 - n u32)``.  So a screen cosine s is within
+    ``(2 u32 + g32(d)) (1 + u32)^2``, about ``(d + 2) u32``, of the true
+    cosine.  The fold cosine f (float64 throughout) is within about
+    ``(d + 4) u``, under 1e-13, of it, which ``KNN_SCREEN_MARGIN``
+    covers.  Comparing two pairs through their screen values errs by at
+    most twice one pair's ``|s - f|``; the factor 4 leaves a factor of two
+    for the second-order terms.
+
     ``screen(qhat, qids, chat, nids, k)`` (k-NN) returns the ``(query,
     row)`` index pairs that survive one batch's top-k screen: every
-    non-self pair whose BLAS cosine is within ``KNN_SCREEN_MARGIN`` of its
-    query's k-th largest in the batch.  ``qhat`` are the unit-norm
-    queries, sorted by their ids ``qids``; ``chat`` the batch's unit-norm
-    rows with ids ``nids``.  The screen matrix ``qhat @ chat.T`` is
-    (queries x batch), so every per-query reduction runs along a
-    contiguous row.  Self matches are found with ``searchsorted`` on the
-    sorted ids instead of an (n x q) equality matrix.  The k-th largest is
-    not selected over the whole row: each query's k-th largest block
-    maximum (blocks of ``KNN_SCREEN_BLOCK`` columns) is a lower bound on
-    it — k distinct blocks hold k distinct elements at or above that
-    value — so only the few candidates at or above ``bound - margin`` are
-    sorted, and the survivors (at or above ``kth - margin >= bound -
-    margin``) are all among them.  With fewer than k whole blocks the
-    bound is the exact k-th largest (``np.partition`` along the row).
+    non-self pair whose float32 screen cosine is within ``cos_margin(d)``
+    of its query's k-th largest in the batch.  ``qhat`` are the unit-norm
+    queries in float32, sorted by their ids ``qids``; ``chat`` the batch's
+    unit-norm rows in float32 with ids ``nids``.  A dropped row j has ``s_j
+    < kth - margin``, so for each of the k rows r at or above the k-th
+    screen value ``f_r >= s_r - E > s_j + margin - E >= f_j + margin - 2 E
+    > f_j`` (E the screen-vs-fold error): its fold value is below k rows
+    of its own batch and it cannot enter the top-k.  The screen matrix
+    ``chat @ qhat.T`` is (batch x queries), padded with -inf rows to whole
+    blocks of ``KNN_SCREEN_BLOCK`` rows (a partial tail block counts as
+    one more block), so each block's per-query maxima reduce over
+    contiguous rows.  Self matches are found with ``searchsorted`` on the
+    sorted ids and set to -inf, like the padding; no -inf entry survives.
+    The k-th largest is not selected over the whole column: each query's
+    k-th largest block maximum is a lower bound on it — k distinct blocks
+    hold k distinct elements at or above that value — so only the (block,
+    query) cells whose maximum reaches ``bound - margin`` are read, their
+    entries at or above it are sorted per query, and the survivors (at or
+    above ``kth - margin >= bound - margin``) are all among them.  With
+    fewer than k blocks the bound is the exact k-th largest
+    (``np.partition`` down the column).
 
     ``argmin(x, c)`` returns, per row of ``x`` (n x d), the index of its
     nearest row of ``c`` (m x d, rows sorted by id) under the FOLD squared
@@ -137,12 +163,10 @@ def _vector_kernels():
     ``over_threshold(x, nrm, thr)`` returns the index pairs ``(i, j)``,
     ``i < j``, whose FOLD cosine ``fold_dot(x_i, x_j) / (nrm_i nrm_j)`` is
     at least ``thr``; ``nrm`` are the fold norms ``sqrt(fold_dot(x,
-    x))``.  The screen is one gram matrix over the same norms, so it and
-    the fold differ only in how the d products of the dot are summed:
-    by at most ``2 g(d) |x_i| |x_j|`` plus one rounding of the quotient,
-    about 3e-14 in cosine units at d = 64.  A cosine is bounded by 1, so
-    here the fixed ``KNN_SCREEN_MARGIN`` does cover every corpus: only
-    the pairs within it of ``thr`` are recomputed in fold order."""
+    x))``.  The screen is the float32 gram matrix of the rows divided by
+    those norms, within ``cos_margin(d)`` of the fold cosine as derived
+    above; a cosine is bounded by 1, so that margin covers every corpus.
+    Only the pairs within it of ``thr`` are recomputed in fold order."""
     import numpy as np
 
     def fold_dot(a, b):
@@ -156,30 +180,36 @@ def _vector_kernels():
         diff = a - b
         return fold_dot(diff, diff)
 
+    def cos_margin(d):
+        return KNN_SCREEN_MARGIN + 4.0 * (d + 2) * UNIT_ROUNDOFF_F32
+
     def screen(qhat, qids, chat, nids, k):
-        sim = qhat @ chat.T
-        nq, nb = sim.shape
+        (nb, d), nq, blk = chat.shape, len(qhat), KNN_SCREEN_BLOCK
+        nblk = -(-nb // blk)
+        sim = np.empty((nblk * blk, nq), dtype=np.float32)
+        np.matmul(chat, qhat.T, out=sim[:nb])
+        sim[nb:] = -np.inf
         pos = np.minimum(np.searchsorted(qids, nids), nq - 1)
         hit = qids[pos] == nids
-        sim[pos[hit], hit] = -np.inf
-        nblk = nb // KNN_SCREEN_BLOCK
+        sim[np.flatnonzero(hit), pos[hit]] = -np.inf
+        bmax = sim.reshape(nblk, blk, nq).max(axis=1)
         if nblk >= k:
-            bmax = (
-                sim[:, : nblk * KNN_SCREEN_BLOCK]
-                .reshape(nq, nblk, KNN_SCREEN_BLOCK)
-                .max(axis=2)
-            )
-            bound = np.partition(bmax, nblk - k, axis=1)[:, nblk - k]
+            bound = np.partition(bmax, nblk - k, axis=0)[nblk - k]
         else:
-            bound = np.partition(sim, nb - k, axis=1)[:, nb - k]
-        qi, cj = np.nonzero(sim >= (bound - KNN_SCREEN_MARGIN)[:, None])
-        val = sim[qi, cj]
-        # Candidates arrive grouped by query (row-major); sort each group
-        # descending and read its k-th value.
+            bound = np.partition(sim[:nb], nb - k, axis=0)[nb - k]
+        margin = cos_margin(d)
+        lo = bound.astype(np.float64) - margin
+        # Read only the (block, query) cells that can hold a candidate.
+        bi, qi = np.nonzero(bmax >= lo)
+        rows = bi[:, None] * blk + np.arange(blk)
+        vals = sim[rows, qi[:, None]]
+        ci, off = np.nonzero(vals >= lo[qi][:, None])
+        qi, cj, val = qi[ci], rows[ci, off], vals[ci, off].astype(np.float64)
+        # Sort each query's candidates descending and read its k-th value.
         order = np.lexsort((-val, qi))
-        start = np.searchsorted(qi, np.arange(nq))
+        start = np.searchsorted(qi[order], np.arange(nq))
         kth = val[order[start + k - 1]]
-        keep = (val >= kth[qi] - KNN_SCREEN_MARGIN) & ~np.isneginf(val)
+        keep = (val >= kth[qi] - margin) & ~np.isneginf(val)
         return qi[keep], cj[keep]
 
     def argmin(x, c):
@@ -204,9 +234,10 @@ def _vector_kernels():
 
     def over_threshold(x, nrm, thr):
         iu, ju = np.triu_indices(len(x), k=1)
-        cos = ((x @ x.T) / np.outer(nrm, nrm))[iu, ju]
+        xhat = (x / nrm[:, None]).astype(np.float32)
+        cos = (xhat @ xhat.T)[iu, ju].astype(np.float64)
         hit = cos >= thr
-        near = np.abs(cos - thr) <= KNN_SCREEN_MARGIN
+        near = np.abs(cos - thr) <= cos_margin(x.shape[1])
         ni, nj = iu[near], ju[near]
         hit[near] = fold_dot(x[ni], x[nj]) / (nrm[ni] * nrm[nj]) >= thr
         return iu[hit], ju[hit]
@@ -216,6 +247,7 @@ def _vector_kernels():
     return SimpleNamespace(
         fold_dot=fold_dot,
         fold_sqdist=fold_sqdist,
+        cos_margin=cos_margin,
         screen=screen,
         argmin=argmin,
         over_threshold=over_threshold,
@@ -246,19 +278,20 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     query set (capped at QUERY_BUDGET vectors by a vec_id prefix, so it
     stays constant-size as the corpus grows) broadcasts, the corpus
     streams through `mapInPandas` in Arrow batches, and each batch screens
-    ALL query cosines with ONE BLAS matmul ((n_queries x 64) @ (64 x
-    batch)), keeps its per-query top-k candidates, and the per-batch
-    partials reduce through a WindowGroupLimit top-k — one corpus scan,
-    no shuffle before the k*|queries|-row rank stage.  On the benchmark's
-    `vector` workload (32,768 vectors, 1,000 queries, single-threaded BLAS
-    on a 4-core x86 host) the Arrow batches follow the scan partitions,
-    split at spark.sql.execution.arrow.maxRecordsPerBatch (10,000): at
-    layout seed 1 they hold 10,000 + 7,218, 8,956, 5,341 and 1,253 rows,
-    and the batch kernel alone takes 0.73-0.89 CPU-seconds for all of
-    them (0.61-0.68 for four 8,192-row batches).  Each task enters through
-    `python_task`, which prunes the worker's cached zipimporters; before
-    it, PySpark's per-task import-cache invalidation re-read pyspark.zip
-    and the Spark jar for ~0.2 CPU-seconds per task.
+    ALL query cosines with ONE float32 BLAS matmul ((batch x 64) @ (64 x
+    n_queries)), keeps its per-query top-k candidates, and the per-batch
+    partials reduce through a WindowGroupLimit top-k — no shuffle before
+    the k*|queries|-row rank stage.  On the benchmark's `vector` workload
+    (32,768 vectors, 1,000 queries, single-threaded BLAS on a 4-core x86
+    host) the Arrow batches follow the scan partitions, split at
+    spark.sql.execution.arrow.maxRecordsPerBatch (10,000): at layout seed
+    1 they hold 10,000 + 7,218, 8,956, 5,341 and 1,253 rows, and the batch
+    kernel alone takes 0.28-0.37 CPU-seconds for all of them; the screen
+    takes about 65 ms of a 10,000-row batch, 47 ms of it in the GEMM.
+    Each task enters through `python_task`, which prunes the worker's
+    cached zipimporters; before it, PySpark's per-task import-cache
+    invalidation re-read pyspark.zip and the Spark jar for ~0.2
+    CPU-seconds per task.
 
     Per-pair interpreted `F.aggregate` folds are the SQL alternative; a
     flat 64-term codegen expression was also measured and is 6x SLOWER
@@ -268,33 +301,36 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the query matrix is QUERY_BUDGET-capped (driver holds at
     most 1000 x 64 doubles — model-state-sized, like the k-means codebook
-    collect), the corpus is read once (the query side is a filter of the
-    same scan) and never materialized, and batch size is Arrow's
-    (spark.sql.execution.arrow.maxRecordsPerBatch).
+    collect), the corpus is never materialized, and batch size is Arrow's
+    (spark.sql.execution.arrow.maxRecordsPerBatch).  The corpus is read
+    twice: the build's query-side `collect()` scans every corpus file (the
+    vec_id filter prunes none: 32 files and 32,768 rows on the benchmark's
+    corpus), and the kernel stage scans them all again, so a traced pass
+    reads 65,536 rows.  Moving the query side out of the build is open
+    work (ROADMAP direction 1).
 
-    Exactness: BLAS only SCREENS candidates (`_vector_kernels` `screen`):
-    its reduction order depends on the matrix shapes, so the same pair
-    can differ in the last ulp between batches of different sizes — enough
-    to break exact ties nondeterministically if emitted as the answer.
-    Each batch keeps every row within KNN_SCREEN_MARGIN = 1e-9 of its
-    query's k-th best screen cosine, then recomputes the survivors'
-    cosines in the oracle's exact left-to-right fold order, so every
-    EMITTED value is bit-identical to the oracle's and the global window
-    applies its (cos desc, neighbor_id asc) rule on identical doubles —
-    exact ties (bitwise-duplicate vectors) and near-ties alike resolve
-    exactly as the oracle does.  The k-th best screen value is found
-    without a full selection: a query's k-th largest 64-column block
-    maximum is a lower bound on it (k distinct blocks hold k distinct
-    elements at or above that value), so only the entries at or above
-    bound - margin are sorted.  Why the margin suffices: the screen
-    (dot of unit vectors) and the fold (dot over the product of norms)
-    each differ from the true cosine by at most ~64 unit roundoffs of a
-    64-term sum plus the norm roundings, well under 1e-13; a row the
-    screen drops is > 1e-9 below the k-th screen value, so its fold value
-    is below that of k rows of its own batch as long as 1e-9 exceeds
-    twice the screen-vs-fold error — which it does by ~4 orders of
-    magnitude — and it can never enter the top-k.  Zero-norm vectors fail
-    loudly, as the oracle's division does."""
+    Exactness: BLAS only SCREENS candidates (`_vector_kernels` ``screen``),
+    in float32 over unit rows normalized in float64 and then rounded; its
+    reduction order also depends on the matrix shapes, so the same pair
+    can differ between batches of different sizes — enough to break ties
+    nondeterministically if emitted as the answer.  Each batch keeps every
+    row within ``cos_margin(64)`` = KNN_SCREEN_MARGIN + 4 (d + 2) 2^-24,
+    about 1.6e-5, of its query's k-th best screen cosine, then recomputes
+    the survivors' cosines in the oracle's exact left-to-right fold order,
+    so every EMITTED value is bit-identical to the oracle's and the global
+    window applies its (cos desc, neighbor_id asc) rule on identical
+    doubles — exact ties (bitwise-duplicate vectors) and near-ties alike
+    resolve exactly as the oracle does.  Why the margin suffices: a
+    float32 screen cosine is within about (d + 2) 2^-24 of the true cosine
+    for any summation order, and the float64 fold within 1e-13 of it, so
+    a row the screen drops is below k rows of its own batch in fold value
+    too and can never enter the top-k (derived in `_vector_kernels`).  The
+    k-th best screen value is found without a full selection: a query's
+    k-th largest 64-row block maximum is a lower bound on it (k distinct
+    blocks hold k distinct elements at or above that value), so only the
+    (block, query) cells whose maximum reaches bound - margin are read and
+    sorted.  Zero-norm vectors fail loudly, as the oracle's division
+    does."""
     import numpy as np
     import pandas as pd
 
@@ -324,7 +360,7 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold_dot, screen = kern.fold_dot, kern.screen
     qn_exact = np.sqrt(fold_dot(qmat, qmat))
     bq = spark.sparkContext.broadcast(
-        (qids, qmat, qmat / qnorm[:, None], qn_exact)
+        (qids, qmat, (qmat / qnorm[:, None]).astype(np.float32), qn_exact)
     )
 
     def _batches(it):
@@ -340,9 +376,8 @@ def sim_knn_bruteforce_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bad = pdf["vec_id"].to_numpy()[cnorm == 0]
                 raise ValueError(f"zero-norm embedding(s): vec_id {bad[:5]}")
             nids = pdf["vec_id"].to_numpy()
-            qi, cj = screen(
-                b_qhat, b_qids, cmat / cnorm[:, None], nids, min(TOP_K, len(pdf))
-            )
+            chat = (cmat / cnorm[:, None]).astype(np.float32)
+            qi, cj = screen(b_qhat, b_qids, chat, nids, min(TOP_K, len(pdf)))
             sel_c = cmat[cj]
             cn_exact = np.sqrt(fold_dot(sel_c, sel_c))
             exact = fold_dot(b_q[qi], sel_c) / (b_qn_exact[qi] * cn_exact)
@@ -2676,10 +2711,11 @@ def sim_semantic_dedup(
     neighbor with smaller id) needs no iterative connected components and
     is deterministic.
 
-    Exactness: the block's gram matrix only SCREENS pairs; the exact
-    threshold kernel (`_vector_kernels` ``over_threshold``) recomputes
-    every pair within KNN_SCREEN_MARGIN of SEMDEDUP_COS with the oracle's
-    index-ordered fold cosine, so each drop decision is the oracle's.  A
+    Exactness: the block's float32 gram matrix only SCREENS pairs; the
+    exact threshold kernel (`_vector_kernels` ``over_threshold``)
+    recomputes every pair within ``cos_margin(64)`` (about 1.6e-5) of
+    SEMDEDUP_COS with the oracle's index-ordered fold cosine, so each drop
+    decision is the oracle's.  A
     zero-norm vector that has a pair is outside the cosine's domain and
     fails loudly."""
     import numpy as np

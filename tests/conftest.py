@@ -201,15 +201,17 @@ def assert_query_gates(spark, df, name: str) -> None:
 # --- opt-in FAST tier --------------------------------------------------------
 # Every run collects the whole suite unless SPARK_GRAFT_SUITE=fast, which
 # keeps only the FAST tier: the harness gates, the bench-set plan goldens,
-# and the oracle battery restricted to the bench queries that carry an
-# oracle — a quick gate that re-checks exactly the queries whose speed is
-# measured.  The per-query gates (`assert_query_gates`, the smoke-scale
-# schema) ride the oracle battery, so in this tier they cover only those
-# bench queries.  The tier is chosen by the variable alone, never by
-# parsing the command line.
+# the Spark-free exactness tests of the vector kernels, and the oracle
+# battery restricted to the bench queries that carry an oracle — a quick
+# gate that re-checks exactly the queries whose speed is measured.  The
+# per-query gates (`assert_query_gates`, the smoke-scale schema) ride the
+# oracle battery, so in this tier they cover only those bench queries.
+# The tier is chosen by the variable alone, never by parsing the command
+# line.
 _FAST_TIER_FILES = {
     "test_harness.py",        # registry/tier/bench-contract gates
     "test_plan_stability.py",  # bench-set plan goldens (the plan gate)
+    "test_vector_kernels.py",  # exactness of the vector bench's kernels
 }
 
 

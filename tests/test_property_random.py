@@ -1404,193 +1404,6 @@ def test_vector_kernels_match_oracle_on_random_corpora(spark, tmp_path, seed):
     con.close()
 
 
-def _knn_screen_case(rng, nb, nq=40):
-    """One adversarial batch for the k-NN screen: clustered rows with
-    shuffled ids, queries that are corpus rows (self matches) plus queries
-    that are not, and exact-duplicate rows planted across 64-row block
-    boundaries so the k-th value is an exact tie for some queries."""
-    import numpy as np
-
-    cent = rng.normal(size=(8, 64))
-    chat = cent[rng.integers(0, 8, size=nb)] + rng.normal(size=(nb, 64))
-    nids = rng.permutation(10 * nb + 100)[:nb].astype(np.int64)
-    w1, w2 = rng.normal(size=64), rng.normal(size=64)
-    # 3 copies of w1, then 5 of a row near it: a query next to w1 ranks
-    # w1 x3, then a 5-way exact tie over ranks 4-8 (k = 5 cuts through it)
-    # whose copies straddle the block boundaries 0/1 and 1/2.
-    for pos in (0, 200, 300):
-        if pos < nb:
-            chat[pos] = w1
-    for pos in (63, 64, 127, 128, 191):
-        if pos < nb:
-            chat[pos] = w1 + 0.05 * w2
-    chat /= np.linalg.norm(chat, axis=1)[:, None]
-    own = rng.choice(nb, size=min(nb, nq // 2), replace=False)
-    if nb > 64 and 64 not in own:
-        own[0] = 64  # a query whose self match sits inside the tie
-    qids = np.concatenate([nids[own], 10 * nb + 100 + np.arange(nq - len(own))])
-    qmat = np.concatenate(
-        [chat[own], w1 + 0.01 * rng.normal(size=(nq - len(own), 64))]
-    )
-    order = np.argsort(qids)
-    qids, qmat = qids[order], qmat[order]
-    qhat = qmat / np.linalg.norm(qmat, axis=1)[:, None]
-    return qhat, qids, chat, nids
-
-
-def test_knn_screen_matches_full_sort():
-    """The exact k-NN kernel's per-batch screen (`_vector_kernels` `screen`,
-    Spark-free) keeps exactly the pairs a full sort of the same screen
-    matrix keeps — every non-self pair within the margin of its query's
-    k-th largest — on batch sizes on both sides of the 64-column block
-    bound's reach (k * 64 = 320 rows), and those survivors contain the
-    fold-order exact top-k with every tie at the k-th value."""
-    import numpy as np
-
-    from auron_spark.pipeline.similarity import (
-        KNN_SCREEN_MARGIN,
-        TOP_K,
-        _vector_kernels,
-    )
-
-    kern = _vector_kernels()
-    fold_dot, screen = kern.fold_dot, kern.screen
-    rng = np.random.default_rng(20240)
-    for nb in (1, TOP_K - 1, TOP_K, 319, 320, 321, 8192):
-        qhat, qids, chat, nids = _knn_screen_case(rng, nb)
-        k = min(TOP_K, nb)
-        qi, cj = screen(qhat, qids, chat, nids, k)
-        got = set(zip(qi.tolist(), cj.tolist()))
-        assert len(got) == len(qi), (nb, "duplicate survivor pairs")
-
-        sim = qhat @ chat.T  # the screen's own matrix, bit for bit
-        self_pair = qids[:, None] == nids[None, :]
-        sim[self_pair] = -np.inf
-        kth = -np.sort(-sim, axis=1)[:, k - 1]
-        near = (sim >= kth[:, None] - KNN_SCREEN_MARGIN) & ~self_pair
-        want = {(int(i), int(j)) for i, j in zip(*np.nonzero(near))}
-        assert got == want, (nb, len(got ^ want))
-
-        cn = np.sqrt(fold_dot(chat, chat))
-        exact = np.stack([
-            fold_dot(np.broadcast_to(q, chat.shape), chat)
-            / (np.sqrt(fold_dot(q[None, :], q[None, :])) * cn)
-            for q in qhat
-        ])
-        ties = 0
-        for i in range(len(qids)):
-            ranked = sorted(
-                (j for j in range(nb) if not self_pair[i, j]),
-                key=lambda j: (-exact[i, j], nids[j]),
-            )
-            if len(ranked) > k and exact[i, ranked[k - 1]] == exact[i, ranked[k]]:
-                ties += 1
-            # Every row tied with the exact k-th value must survive too: the
-            # global window breaks those ties by id across batches.
-            cut = exact[i, ranked[k - 1]] if len(ranked) >= k else -np.inf
-            need = {j for j in ranked if exact[i, j] >= cut}
-            assert need <= {j for q, j in got if q == i}, (nb, i)
-        if nb >= 320:
-            assert ties, (nb, "no exact tie at the k-th value was planted")
-
-
-def _fold_argmin(kern, x, c):
-    """Reference argmin: the fold distance to every row of ``c``, smallest
-    (distance, index) per row of ``x``."""
-    import numpy as np
-
-    dist = np.stack(
-        [kern.fold_sqdist(x, np.broadcast_to(cj, x.shape)) for cj in c], axis=1
-    )
-    idx = np.broadcast_to(np.arange(len(c)), dist.shape)
-    return np.lexsort((idx, dist), axis=1)[:, 0]
-
-
-def test_exact_argmin_matches_fold_on_near_ties():
-    """The exact argmin kernel (`_vector_kernels` ``argmin``, Spark-free)
-    picks the fold's nearest row with the smallest-index tie-break on
-    planted near-ties: centroids 1e-3 apart around a common offset (the
-    expansion's rounding error scales with |x|^2 + |c|^2, here ~1e8, far
-    above any fixed 1e-9 margin), points planted halfway between two
-    centroids, an exact duplicate centroid, and 8-dim subvectors as the
-    IVF-PQ encoder uses them.  In the large-offset cases the plain BLAS
-    screen's argmin is wrong on some rows, so they exercise the
-    recompute."""
-    import numpy as np
-
-    from auron_spark.pipeline.similarity import _vector_kernels
-
-    kern = _vector_kernels()
-    rng = np.random.default_rng(31337)
-    for d, offset in ((64, 1e3), (64, 1.0), (8, 1e3)):
-        base = offset * np.ones(d)
-        c = base + 1e-3 * rng.normal(size=(12, d))
-        c[5] = c[2]  # exact duplicate: a tie the smaller index must win
-        x = np.concatenate([
-            base + 1e-3 * rng.normal(size=(300, d)),
-            (c[0] + c[1]) / 2 + 1e-9 * rng.normal(size=(100, d)),
-            np.repeat(c[2:3], 20, axis=0),
-        ])
-        want = _fold_argmin(kern, x, c)
-        got = kern.argmin(x, c)
-        assert (got == want).all(), (d, offset, np.flatnonzero(got != want)[:5])
-        assert not (want == 5).any()
-        if offset > 1:
-            blas = (
-                (x * x).sum(1)[:, None] - 2.0 * (x @ c.T) + (c * c).sum(1)[None, :]
-            ).argmin(1)
-            assert (blas != want).any(), (d, "no near-tie fooled the screen")
-
-
-def test_over_threshold_matches_fold_on_near_ties():
-    """The exact threshold kernel (`_vector_kernels` ``over_threshold``,
-    Spark-free) returns exactly the pairs whose fold cosine is >= the
-    threshold, on pairs planted so that their fold cosine sits within an
-    ulp of SEMDEDUP_COS (many exactly on it — a tie must count as a
-    hit), mixed with random vectors."""
-    import numpy as np
-
-    from auron_spark.pipeline.similarity import (
-        KNN_SCREEN_MARGIN,
-        SEMDEDUP_COS,
-        _vector_kernels,
-    )
-
-    kern = _vector_kernels()
-    rng = np.random.default_rng(2718)
-    d, thr = 64, SEMDEDUP_COS
-
-    def fold_cos(a, b):
-        na = np.sqrt(kern.fold_dot(a[None], a[None]))[0]
-        nb = np.sqrt(kern.fold_dot(b[None], b[None]))[0]
-        return kern.fold_dot(a[None], b[None])[0] / (na * nb)
-
-    rows = []
-    for _ in range(40):
-        u = rng.normal(size=d)
-        u /= np.linalg.norm(u)
-        v = rng.normal(size=d)
-        v -= (v @ u) * u
-        v /= np.linalg.norm(v)
-        a = u * rng.uniform(0.5, 3)
-        b = (0.29 * u + np.sqrt(1 - 0.29**2) * v) * rng.uniform(0.5, 3)
-        lo, hi = 0.0, 0.1  # the cosine of (a, b + s a) grows with s
-        for _ in range(100):
-            mid = (lo + hi) / 2
-            lo, hi = (lo, mid) if fold_cos(a, b + mid * a) >= thr else (mid, hi)
-        rows += [a, b + hi * a, b + lo * a]
-    x = np.vstack([np.array(rows), rng.normal(size=(60, d))])
-    x = x[rng.permutation(len(x))]
-    nrm = np.sqrt(kern.fold_dot(x, x))
-    iu, ju = np.triu_indices(len(x), k=1)
-    fold = kern.fold_dot(x[iu], x[ju]) / (nrm[iu] * nrm[ju])
-    want = {(int(i), int(j)) for i, j in zip(iu[fold >= thr], ju[fold >= thr])}
-    i, j = kern.over_threshold(x, nrm, thr)
-    assert set(zip(i.tolist(), j.tolist())) == want
-    assert len(i) == len(want)
-    assert (fold == thr).any() and (np.abs(fold - thr) <= KNN_SCREEN_MARGIN).sum() >= 40
-
-
 def test_knn_matches_oracle_on_block_bound_batches(spark, tmp_path):
     """`sim_knn_bruteforce_arrow` equals its oracle on a corpus whose
     Arrow batches are large enough (>= TOP_K * 64 rows) for the screen's
